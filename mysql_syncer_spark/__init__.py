@@ -8,7 +8,7 @@ A from-scratch re-expression of the semantics of iRAP-software/MySQL-Syncer
 * hash-based row diff               -> md5 row hash + left_anti joins
 * chunked merge                     -> partitioned writes / JDBC batches
 * partition-wise sync               -> partition pruning + groupBy digests
-* process-pool parallelism          -> FAIR scheduler + ThreadPoolExecutor
+* process-pool parallelism          -> FAIR scheduler + pooled threads
 
 plus a set of large-scale training-data pipeline operators (dedup,
 similarity search, text analysis, multimodal plumbing) that generalize the

@@ -145,11 +145,14 @@ def row_hash_col(df: DataFrame, cols: Sequence[str] | None = None) -> Column:
     if col is None:
         col = F.md5(F.concat_ws(HASH_SEP, *canonical_cols(df, cols)))
         if token:
-            stale = [k for k in _ROW_HASH_CACHE if k[0] != token]
+            # snapshot + pop: pooled callers evict concurrently, and
+            # iterating the live dict or deleting a key another thread
+            # already dropped would raise
+            stale = [k for k in list(_ROW_HASH_CACHE) if k[0] != token]
             for k in stale:
-                del _ROW_HASH_CACHE[k]
+                _ROW_HASH_CACHE.pop(k, None)
             while len(_ROW_HASH_CACHE) >= _ROW_HASH_CACHE_MAX:
-                del _ROW_HASH_CACHE[next(iter(_ROW_HASH_CACHE))]
+                _ROW_HASH_CACHE.pop(next(iter(_ROW_HASH_CACHE)), None)
             _ROW_HASH_CACHE[key] = col
     return col
 

@@ -30,12 +30,14 @@ more deterministic):
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Mapping, Sequence
 
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from mysql_syncer_spark.canon import row_hash_col
+from mysql_syncer_spark.pooled import run_pooled
 
 #: first 15 hex chars of an md5 -> fits a signed 64-bit int (60 bits)
 _HEX_PREFIX = 15
@@ -169,17 +171,21 @@ def digests_equal(a: DataFrame, b: DataFrame,
     per-table gate cost. A scalar agg always yields exactly one row —
     an empty side digests to (NULL, NULL, 0), so empty==empty and
     empty!=nonempty fall out of the tuple compare.
+
+    Threads: safe to call from any thread, including the executor's
+    concurrent units. The two side threads come from
+    :func:`~mysql_syncer_spark.pooled.run_pooled`, so the gate jobs
+    carry the calling thread's local properties and job tags — a unit's
+    FAIR pool ``sync-<table>`` and the caller's job group.
     """
     if cols is None:
         if set(a.columns) != set(b.columns):
             return False  # schema drift can never digest-match
         cols = a.columns
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(2) as pool:
-        fa = pool.submit(_side_digest, a, cols)
-        fb = pool.submit(_side_digest, b, cols)
-        return fa.result() == fb.result()
+    da, db = run_pooled(
+        [partial(_side_digest, a, cols), partial(_side_digest, b, cols)], 2
+    )
+    return da == db
 
 
 def partition_digests(

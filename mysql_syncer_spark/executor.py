@@ -24,8 +24,8 @@ import os
 import shutil
 import time
 import traceback
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import functions as F
 
@@ -33,6 +33,7 @@ from mysql_syncer_spark.config import SyncConfig, TableHandle
 from mysql_syncer_spark.diff import apply_delta, diff_tables
 from mysql_syncer_spark.digest import digests_equal, differing_partitions
 from mysql_syncer_spark.plans.plan import Action, SyncPlan, SyncUnit, plan_sync
+from mysql_syncer_spark.pooled import run_pooled
 from mysql_syncer_spark.sinks import jdbc
 from mysql_syncer_spark.sources.catalog import ParquetCatalog
 
@@ -293,6 +294,8 @@ class ParquetSyncExecutor:
         chunk: list = []
         idx = 0
         try:
+            # an explicit pool, not run_pooled: chunks are submitted as
+            # toLocalIterator yields them, bounded by FIRST_COMPLETED waits
             with ThreadPoolExecutor(max_workers=workers) as pool:
                 def reap(done) -> None:
                     # result() re-raises a worker's exception EAGERLY,
@@ -505,14 +508,12 @@ class ParquetSyncExecutor:
         diff = [u for u in plan if u.action not in (Action.DROP, Action.FULL_COPY)]
         for u in ddl:
             report.results.append(self.run_unit(u))
-        if diff:
-            workers = max(1, min(self.cfg.max_parallel_tables, len(diff)))
-            if workers == 1:
-                for u in diff:   # serial fallback (Synchronizer.php:93-101)
-                    report.results.append(self.run_unit(u))
-            else:
-                with ThreadPoolExecutor(max_workers=workers) as pool:
-                    report.results.extend(pool.map(self.run_unit, diff))
+        # one pooled thread per unit; width 1 is the serial fallback
+        # (Synchronizer.php:93-101)
+        report.results.extend(run_pooled(
+            [partial(self.run_unit, u) for u in diff],
+            self.cfg.max_parallel_tables,
+        ))
         return report
 
 

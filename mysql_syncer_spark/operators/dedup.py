@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mysql_syncer_spark.pin import pin
+from mysql_syncer_spark.pooled import run_pooled
 
 from mysql_syncer_spark.operators.spread import spread_small
 from mysql_syncer_spark.operators.text import normalized_text, ws_tokens
@@ -492,8 +493,6 @@ def incremental_new_docs(
     r13 meter: the serialized pins were 1.7 s of the 2.5 s build wall
     on incremental_ingest_2pct. Thread-safe: both threads only build
     plans + run one action each; results are plain DataFrames."""
-    from concurrent.futures import ThreadPoolExecutor
-
     def _fresh() -> DataFrame:
         # pinned: fresh feeds the LSH pipeline AND the final anti-join —
         # unpinned, the corpus-wide fingerprint distinct + anti-join
@@ -511,10 +510,7 @@ def incremental_new_docs(
             corpus, id_col, text_col, k, num_hashes
         ).transform(pin)
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fresh_f = pool.submit(_fresh)
-        sig_f = pool.submit(_corpus_sig)
-        fresh, sig_old = fresh_f.result(), sig_f.result()
+    fresh, sig_old = run_pooled([_fresh, _corpus_sig], 2)
     near = minhash_lsh_pairs_between(
         corpus, fresh, id_col, text_col, k, num_hashes, bands, threshold,
         corpus_sig=sig_old,

@@ -22,13 +22,16 @@ BLAS beats per-element codegen.
 
 from __future__ import annotations
 
+import os
 import re
+from functools import partial
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mysql_syncer_spark.pin import pin
+from mysql_syncer_spark.pooled import run_pooled
 from mysql_syncer_spark.operators.spread import spread_small as _spread
 
 #: bare SQL identifiers safe to splice into F.expr after backtick
@@ -1041,8 +1044,8 @@ def pq_train(
 
     The ``m`` subspace trainings are INDEPENDENT chains of small
     driver-blocking jobs (init take-ordered + ``iters`` mean-update
-    collects each), so they run overlapped from an ``m``-wide thread
-    pool (guide §2.6 — r13: the sequential chains were ~9.6 s of the
+    collects each), so they run overlapped on ``min(m, cpus)`` pooled
+    threads (guide §2.6 — r13: the sequential chains were ~9.6 s of the
     ann_topk_pq build at sf0.1, pure serialized job latency on a
     2,000-row table). Each subspace's plans and job sequence are
     UNCHANGED — per-subspace results are the ones the sequential loop
@@ -1068,12 +1071,9 @@ def pq_train(
         )
         return _l2_lloyd(sliced, k, iters, id_col)
 
-    if m == 1:
-        return [_train_sub(0)]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=m) as pool:
-        return list(pool.map(_train_sub, range(m)))
+    return run_pooled(
+        [partial(_train_sub, j) for j in range(m)], os.cpu_count() or 1
+    )
 
 
 def pq_encode(

@@ -4,11 +4,21 @@ The reference's only "query plan" artifact is commands.txt: a text file of
 shell commands, one per table/partition, fed to a Java process pool
 (src/project/Synchronizer.php:73-92). Here the plan is a typed list of
 SyncUnits produced by a pure planning function, executed by a thread pool
-(executor.py). Planning itself is metadata-only — catalog diffs are Python
-set ops on table-name lists (Synchronizer.php:47-52), schema compare is
-structural StructType equality (vs the reference's normalized SHOW CREATE
-TABLE string compare, Synchronizer.php:193-204 + constraint alphabetization
+(executor.py). Catalog diffs are Python set ops on table-name lists
+(Synchronizer.php:47-52); schema compare is structural StructType
+equality (vs the reference's normalized SHOW CREATE TABLE string
+compare, Synchronizer.php:193-204 + constraint alphabetization
 TableConnection.php:419-455).
+
+Planning is NOT metadata-only: comparing schemas needs a handle per
+shared table and side, and resolving one costs real work — a file
+catalog's ``spark.read…load()`` lists files and runs a schema-inference
+job, a DBAPI catalog fetches every row through the driver. The planner
+resolves all ``2 × |shared|`` handles concurrently on
+``SyncConfig.max_parallel_tables`` pooled threads before the schema loop,
+and the catalogs memoize them (``Catalog.invalidate`` clears the memo),
+so the executor's units reuse the planner's handles instead of resolving
+each table a second time.
 
 Unlike the reference, partition expansion is NOT done at plan time with N
 DISTINCT queries (Synchronizer.php:126-149); the executor resolves
@@ -20,10 +30,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 from enum import Enum
+from functools import partial
 
 from pyspark.sql import types as T
 
 from mysql_syncer_spark.config import SyncConfig
+from mysql_syncer_spark.pooled import run_pooled
 from mysql_syncer_spark.sources.catalog import Catalog, filter_ignored
 
 
@@ -81,7 +93,8 @@ def plan_sync(
     1. list tables both sides, drop ignore-regex matches
     2. excess slave tables → DROP
     3. missing tables → FULL_COPY
-    4. shared tables → schema compare:
+    4. shared tables → resolve both sides' handles concurrently, then
+       schema compare:
        differ ⇒ FULL_COPY (Synchronizer.php:196-230 escalation)
        no PK  ⇒ FULL_COPY or SKIP per copy_tables_with_no_primary
        else   ⇒ DIFF_SYNC (partitioned variant if configured)
@@ -96,9 +109,12 @@ def plan_sync(
     for t in sorted(m_tables - s_tables):
         units.append(SyncUnit(t, Action.FULL_COPY, "table missing on slave"))
 
-    for t in sorted(m_tables & s_tables):
-        mh = master.table(t)
-        sh = slave.table(t)
+    shared = sorted(m_tables & s_tables)
+    handles = run_pooled(
+        [partial(cat.table, t) for t in shared for cat in (master, slave)],
+        cfg.max_parallel_tables,
+    )
+    for t, mh, sh in zip(shared, handles[0::2], handles[1::2]):
         if not schemas_match(mh.df.schema, sh.df.schema):
             units.append(SyncUnit(t, Action.FULL_COPY, "schema drift"))
             continue

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import os
 import re
-from typing import Iterable, Mapping, Sequence
+from typing import Callable, Iterable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,15 +62,40 @@ def filter_ignored(tables: Iterable[str], ignore_regexes: Sequence[str]) -> list
 
 
 class Catalog:
-    """Abstract named-table source."""
+    """Abstract named-table source.
+
+    Resolved table handles are memoized per table name (:meth:`_memo`)
+    until the next :meth:`invalidate`: the planner and then the
+    executor's unit both ask for every shared table, and resolving one
+    is real work (a schema-inference job, a full driver-side fetch, PK
+    and bounds queries)."""
 
     def invalidate(self) -> None:
         """Drop any cached view of the database so the next read sees
-        the CURRENT state. No-op by default; file catalogs also clear
-        Spark's file-status cache. Every sync run calls this first —
-        the reference re-scans the database on every run
-        (Synchronizer.php:52-60), and a sync tool must tolerate an
-        external writer having replaced data between runs."""
+        the CURRENT state: the handle memo here, plus whatever a
+        subclass caches (overrides call ``super().invalidate()``). File
+        catalogs also clear Spark's file-status cache. Every sync run
+        calls this first — the reference re-scans the database on every
+        run (Synchronizer.php:52-60), and a sync tool must tolerate an
+        external writer having replaced data between runs — and the
+        executor calls it after every write."""
+        self._handles: dict[str, TableHandle] = {}
+
+    def _memo(
+        self, name: str, resolve: Callable[[], TableHandle]
+    ) -> TableHandle:
+        """The memoized handle of table ``name``; ``resolve()`` builds
+        it on a miss. An :meth:`invalidate` swaps in a fresh memo, so a
+        handle still being resolved when it runs lands in the discarded
+        one and is never served afterwards. Two threads missing the same
+        name at once both resolve it; no lock is taken because the
+        planner and the executor's units ask for distinct names
+        concurrently."""
+        memo = self.__dict__.setdefault("_handles", {})
+        handle = memo.get(name)
+        if handle is None:
+            handle = memo[name] = resolve()
+        return handle
 
     def table_names(self) -> list[str]:
         raise NotImplementedError
@@ -139,12 +164,6 @@ class FileCatalog(Catalog):
         self.pk_map = {k: tuple(v) for k, v in (pk_map or DEFAULT_PKS).items()}
         self.partition_map = dict(partition_map or {})
         self._names: list[str] | None = None  # cached like the reference
-        # per-table DataFrame cache: planner + executor both resolve each
-        # table (schema compare, digest gate, diff), and every
-        # ``spark.read`` re-lists files and re-reads footers
-        # (~30ms each) — measurable against the sub-second noop re-sync.
-        # Invalidated together with the name list after any write.
-        self._dfs: dict[str, DataFrame] = {}
 
     def table_names(self) -> list[str]:
         if self._names is None:
@@ -156,8 +175,8 @@ class FileCatalog(Catalog):
         return list(self._names)
 
     def invalidate(self) -> None:
+        super().invalidate()
         self._names = None
-        self._dfs = {}
         # Clear Spark's session FileStatusCache + cached relation plans
         # under this database directory: without it, a table REPLACED
         # BY AN EXTERNAL WRITER between runs fails its first read with
@@ -188,20 +207,16 @@ class FileCatalog(Catalog):
 
     def table(self, name: str) -> TableHandle:
         self._recover(name)
-        df = self._dfs.get(name)
-        if df is None:
-            df = (
+        return self._memo(name, lambda: TableHandle(
+            name=name,
+            df=(
                 self.spark.read.format(self.fmt)
                 .options(**self.read_options)
                 .load(self.table_path(name))
-            )
-            self._dfs[name] = df
-        return TableHandle(
-            name=name,
-            df=df,
+            ),
             pk_cols=self.pk_map.get(name, ()),
             partition_col=self.partition_map.get(name),
-        )
+        ))
 
     #: fault-injection seam for the crash-window tests (E155 hook
     #: pattern): called with 'staged' / 'old_moved' / 'swapped' between
@@ -305,7 +320,9 @@ class JDBCCatalog(Catalog):
         return col
 
     def invalidate(self) -> None:
-        """Drop the cached table list (after DDL on this database)."""
+        """Drop the cached table list and handles (after DDL or writes
+        on this database)."""
+        super().invalidate()
         self._names = None
 
     def _read_query(self, query: str) -> DataFrame:
@@ -333,6 +350,11 @@ class JDBCCatalog(Catalog):
         return tuple(r[0] for r in rows)
 
     def table(self, name: str) -> TableHandle:
+        return self._memo(name, lambda: self._resolve(name))
+
+    def _resolve(self, name: str) -> TableHandle:
+        """PK query, bounds query and the lazy split-scan reader —
+        once per table per sync, through :meth:`table`'s memo."""
         pk = self.primary_key(name)
         reader = self.spark.read.format("jdbc").options(
             url=self.url, dbtable=self._qualified(name), **self.props
@@ -788,8 +810,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         os.path.abspath(sf_dir),
         name,
     )
-    for stale in [k for k in _LOAD_TABLE_CACHE if k[0] != key[0]]:
-        del _LOAD_TABLE_CACHE[stale]
+    # snapshot + pop: pooled callers evict concurrently, and iterating
+    # the live dict or deleting a key another thread already dropped
+    # would raise
+    for stale in [k for k in list(_LOAD_TABLE_CACHE) if k[0] != key[0]]:
+        _LOAD_TABLE_CACHE.pop(stale, None)
     cached = _LOAD_TABLE_CACHE.get(key)
     if cached is not None:
         return cached

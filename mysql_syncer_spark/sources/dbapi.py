@@ -6,6 +6,10 @@ sources.catalog.JDBCCatalog` (partitioned server-side scans). This
 module is the *jar-free* counterpart: any DBAPI connection factory
 (sqlite3, MySQLdb, psycopg) becomes a syncable catalog, with reads
 fetched through ONE driver-side connection into ``createDataFrame``.
+A table is fetched once per sync, not once per ``table()`` call: the
+handle is memoized (``Catalog._memo``) until ``invalidate()``, which
+every sync run calls first and the executor calls after every write, so
+the planner's fetch is the one the executor's unit diffs.
 
 That read shape is deliberate and documented: driver-side fetch is
 correct at integration/smoke scale (and is what lets this sandbox run a
@@ -183,9 +187,14 @@ class DBAPICatalog(Catalog):
         return list(self._names)
 
     def invalidate(self) -> None:
+        super().invalidate()
         self._names = None
 
     def table(self, name: str) -> TableHandle:
+        return self._memo(name, lambda: self._resolve(name))
+
+    def _resolve(self, name: str) -> TableHandle:
+        """Every row of ``name`` through the driver into a DataFrame."""
         conn = self.connect_factory()
         try:
             info = self._table_info(conn, name)

@@ -16,6 +16,7 @@ short-circuit observed through real SQL reads.
 """
 
 import sqlite3
+from collections import Counter
 
 import pytest
 
@@ -148,6 +149,75 @@ def test_dbapi_single_table_sync(spark, dbs):
     slave = DBAPICatalog(spark, _factory(spath))
     rep = DBAPISyncExecutor(master, slave).run_single("orders")
     assert rep.ok and rep.results[0].status == "ok"
+    assert _dump(mpath, "orders", "o_orderkey") == _dump(
+        spath, "orders", "o_orderkey"
+    )
+
+
+@pytest.fixture()
+def shared_dbs(dbs):
+    """The ``dbs`` pair without its DDL tables: both sides hold the
+    perturbed ``orders`` and the drifted no-PK ``tags``, nothing else."""
+    mpath, spath = dbs
+    with sqlite3.connect(mpath) as m:
+        m.execute("DROP TABLE region")
+    with sqlite3.connect(spath) as s:
+        s.execute("DROP TABLE scratch")
+    return mpath, spath
+
+
+def test_sync_fetches_each_table_once_per_side(spark, shared_dbs,
+                                               monkeypatch):
+    """The planner's driver-side fetch is the one the executor's unit
+    diffs: one sync pulls each table's rows through the driver once per
+    side, converging or noop."""
+    mpath, spath = shared_dbs
+    master = DBAPICatalog(spark, _factory(mpath))
+    slave = DBAPICatalog(spark, _factory(spath))
+    fetches = Counter()
+    rows_to_df = DBAPICatalog._rows_to_df
+
+    def counting(self, rows, schema):
+        side = "master" if self is master else "slave"
+        fetches[side, schema.fieldNames()[0]] += 1
+        return rows_to_df(self, rows, schema)
+
+    monkeypatch.setattr(DBAPICatalog, "_rows_to_df", counting)
+    once = Counter({
+        (side, col): 1
+        for side in ("master", "slave") for col in ("o_orderkey", "label")
+    })
+
+    report = sync(master, slave)
+    assert report.ok, [r.error for r in report.results]
+    assert {r.table: r.status for r in report.results} == {
+        "orders": "ok", "tags": "ok",
+    }
+    assert fetches == once
+
+    fetches.clear()
+    report2 = sync(master, slave)
+    assert all(r.status == "noop" for r in report2.results), report2.results
+    assert fetches == once
+
+
+def test_external_master_write_between_syncs_is_picked_up(spark, dbs):
+    """The handle memo never outlives a sync: a row an external writer
+    changes in the master file between two syncs reaches the slave on
+    the second one, with no manual invalidate()."""
+    mpath, spath = dbs
+    master = DBAPICatalog(spark, _factory(mpath))
+    slave = DBAPICatalog(spark, _factory(spath))
+    assert sync(master, slave).ok
+    with sqlite3.connect(mpath) as m:
+        m.execute(
+            "UPDATE orders SET o_comment = 'edited externally' "
+            "WHERE o_orderkey = 7"
+        )
+    report = sync(master, slave)
+    assert report.ok, [r.error for r in report.results]
+    orders = {r.table: r for r in report.results}["orders"]
+    assert (orders.status, orders.inserted, orders.deleted) == ("ok", 1, 1)
     assert _dump(mpath, "orders", "o_orderkey") == _dump(
         spath, "orders", "o_orderkey"
     )

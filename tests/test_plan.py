@@ -1,6 +1,8 @@
 """Planner unit tests (SURVEY.md §5.4): catalog diff classification,
 ignore regexes, no-PK gating, schema-drift escalation."""
 
+import threading
+
 import pytest
 from pyspark.sql import types as T
 
@@ -97,3 +99,45 @@ def test_plan_partition_map_overrides():
     unit = list(plan)[0]
     assert unit.action == Action.DIFF_SYNC_PARTITIONED
     assert unit.partition_col == "v"
+
+
+class RendezvousCatalog(FakeCatalog):
+    """Records every table() call; each call waits for a second one at a
+    shared barrier, which breaks (after its timeout) unless handles are
+    resolved two at a time."""
+
+    def __init__(self, handles, calls, barrier):
+        super().__init__(handles)
+        self.calls, self.barrier = calls, barrier
+
+    def table(self, name):
+        self.calls.append((id(self), name))
+        try:
+            self.barrier.wait()
+        except threading.BrokenBarrierError:
+            pass
+        return super().table(name)
+
+
+def test_plan_resolves_each_handle_once_concurrently():
+    names = ["a", "b", "drift"]
+    m_handles = [handle(t) for t in names]
+    s_handles = [handle(t, schema=S2 if t == "drift" else S1) for t in names]
+    calls: list = []
+    barrier = threading.Barrier(2, timeout=10)
+    master = RendezvousCatalog(m_handles, calls, barrier)
+    slave = RendezvousCatalog(s_handles, calls, barrier)
+    plan = plan_sync(master, slave, SyncConfig(max_parallel_tables=8))
+    assert not barrier.broken
+    assert sorted(calls) == sorted(
+        (id(cat), t) for cat in (master, slave) for t in names
+    )
+    # same units, same order as a serial plan
+    serial = plan_sync(
+        FakeCatalog(m_handles), FakeCatalog(s_handles),
+        SyncConfig(max_parallel_tables=1),
+    )
+    assert plan.units == serial.units
+    assert [u.action for u in plan] == [
+        Action.DIFF_SYNC, Action.DIFF_SYNC, Action.FULL_COPY,
+    ]

@@ -454,14 +454,17 @@ class TestPQ:
         """r13: pq_train overlaps the m independent subspace trainings
         from a thread pool (guide §2.6). Each subspace's plans are
         unchanged, so the pooled codebooks must be BIT-IDENTICAL to
-        the sequential per-subspace loop the pool replaced."""
+        the sequential per-subspace loop the pool replaced. The corpus
+        is one partition, so every mean-update group has one partial
+        aggregate and F.avg's float merge order cannot vary between
+        the two runs."""
         from pyspark.sql import functions as F
 
         from mysql_syncer_spark.operators.similarity import (
             _l2_lloyd, pq_train,
         )
 
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").coalesce(1)
         pooled = pq_train(emb, m=4, nbits=4, iters=2)
         dim = len(emb.select("embedding").first()[0])
         sub = dim // 4
