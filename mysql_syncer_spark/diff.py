@@ -104,6 +104,8 @@ def diff_tables(
 
     Returns {"insert": rows (full master rows to append),
              "delete": keys (slave PKs to remove),
+             "missing": keys (master PKs the slave lacks; "insert" is
+                        their rows),
              "master_hashes"/"slave_hashes": the hash projections}.
 
     In pk_hash mode a changed row lands in both insert and delete (the
@@ -117,6 +119,7 @@ def diff_tables(
     return {
         "insert": rows_to_copy(master, miss, pk_cols),
         "delete": exc,
+        "missing": miss,
         "master_hashes": mh,
         "slave_hashes": sh,
     }
@@ -131,8 +134,12 @@ def merge_tables(
     """Single-pass sync merge: the content slave must hold so that
     slave ≡ master, built from ONE narrow full-outer hash-compare.
 
-    Topology (the at-scale shape — compare diff_tables+apply_delta,
-    whose naive lazy composition re-scans the base tables ~18×):
+    The sync executor does not use it: it persists the ``diff_tables``
+    delta before ``apply_delta``, which measured faster than this merge
+    on a one-table first sync of sf0.1 ``orders`` on 4 cores (3.14 vs
+    3.34 s min of passes, 18 vs 22 Spark jobs).
+
+    Topology:
 
       mh, sh         — narrow (pk, hash) projections, one scan each
       j = mh ⟗ sh    — full outer on PK, carries only pk + 2 hashes

@@ -27,10 +27,11 @@ import traceback
 from dataclasses import dataclass, field
 from functools import partial
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import functions as F
 
 from mysql_syncer_spark.config import SyncConfig, TableHandle
-from mysql_syncer_spark.diff import apply_delta, diff_tables
+from mysql_syncer_spark.diff import apply_delta, diff_tables, rows_to_copy
 from mysql_syncer_spark.digest import digests_equal, differing_partitions
 from mysql_syncer_spark.plans.plan import Action, SyncPlan, SyncUnit, plan_sync
 from mysql_syncer_spark.pooled import run_pooled
@@ -187,7 +188,7 @@ class ParquetSyncExecutor:
         partition pruning would only trim an already-minimal
         (pk, hash) transfer."""
         from mysql_syncer_spark.canon import HASH_COL
-        from mysql_syncer_spark.diff import excess_rows, missing_rows, rows_to_copy
+        from mysql_syncer_spark.diff import excess_rows, missing_rows
         from mysql_syncer_spark.digest import mysql_compat_row_hash_col
 
         table = unit.table
@@ -211,15 +212,24 @@ class ParquetSyncExecutor:
         sh = s.df.select(
             *pk, mysql_compat_row_hash_col(s.df, cols).alias(HASH_COL)
         )
-        miss = missing_rows(mh, sh, pk, mode="pk_hash").persist()
         exc = excess_rows(mh, sh, pk, mode="pk_hash").persist()
+        # the key rule of _apply_diff: a deleted key's master row is
+        # fetched back too (a duplicate slave PK); the semi-join keeps
+        # excess keys the master does not hold out of the keyed fetch
+        keys = (
+            missing_rows(mh, sh, pk, mode="pk_hash")
+            .unionByName(exc.join(mh.select(*pk), on=pk, how="left_semi"))
+            .distinct()
+            .persist()
+        )
         spill = None
         try:
             # delta sizes via distributed counts — the driver never
             # holds the key list whole (a first sync or bulk reload has
-            # a delta the size of the table)
-            res.inserted = miss.count()
+            # a delta the size of the table); excess first, so the key
+            # count reads it from the cache
             res.deleted = exc.count()
+            res.inserted = keys.count()
             if res.inserted == 0 and res.deleted == 0:
                 res.status = "noop"
                 return
@@ -230,9 +240,9 @@ class ParquetSyncExecutor:
             # dry_run (the file must be replayable), so the keyed fetch
             # runs before the dry_run return in that mode
             if hasattr(self.master, "fetch_rows"):
-                inserts, spill = self._stream_keyed_fetch(table, miss, pk)
+                inserts, spill = self._stream_keyed_fetch(table, keys, pk)
             else:
-                inserts = rows_to_copy(self.master.table(table).df, miss, pk)
+                inserts = rows_to_copy(self.master.table(table).df, keys, pk)
             self._log_delta(table, pk, inserts, exc)
             if self.cfg.dry_run:
                 res.status = "dry_run"
@@ -240,7 +250,7 @@ class ParquetSyncExecutor:
             self._apply_changes(table, pk, inserts, exc, s.df)
             self.slave.invalidate()
         finally:
-            miss.unpersist()
+            keys.unpersist()
             exc.unpersist()
             if spill is not None:
                 import shutil
@@ -315,7 +325,12 @@ class ParquetSyncExecutor:
                             pending, return_when=FIRST_COMPLETED
                         )
                         reap(done)
-                    pending.add(pool.submit(fetch_one, idx, list(chunk)))
+                    # wrapped per chunk, each with its own copy of the
+                    # caller's properties: the chunk writes run in the
+                    # unit's FAIR pool and the caller's job group, and
+                    # concurrent writes never share one property set
+                    fetch = inheritable_thread_target(self.spark)(fetch_one)
+                    pending.add(pool.submit(fetch, idx, list(chunk)))
                     idx += 1
                     chunk.clear()
 
@@ -384,11 +399,18 @@ class ParquetSyncExecutor:
     def _apply_diff(self, table: str, mdf, sdf, pk_cols, res: UnitResult,
                     full_slave=None, scope=None) -> None:
         d = diff_tables(mdf, sdf, pk_cols, mode=self.cfg.join_mode)
-        inserts = d["insert"].persist()
         deletes = d["delete"].persist()
+        inserts = None
         try:
-            res.inserted = inserts.count()
             res.deleted = deletes.count()
+            # a deleted key takes EVERY slave row of that PK with it, so
+            # its master row is copied back even when an identical slave
+            # duplicate kept it out of the missing keys; the insert plan
+            # reads the deletes just cached by the count above
+            inserts = rows_to_copy(
+                mdf, d["missing"].unionByName(deletes), pk_cols
+            ).persist()
+            res.inserted = inserts.count()
             if res.inserted == 0 and res.deleted == 0:
                 res.status = "noop"
                 return
@@ -400,7 +422,8 @@ class ParquetSyncExecutor:
             self._apply_changes(table, pk_cols, inserts, deletes, target)
             self.slave.invalidate()
         finally:
-            inserts.unpersist()
+            if inserts is not None:
+                inserts.unpersist()
             deletes.unpersist()
 
     def _apply_changes(self, table, pk_cols, inserts, deletes, target) -> None:

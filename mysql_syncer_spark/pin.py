@@ -80,7 +80,7 @@ def pin(df: DataFrame, eager: bool = True, required: bool = False) -> DataFrame:
         return df
     if mode == "reliable":
         sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
+        if sc.getCheckpointDir() is None:
             ckpt = df.sparkSession.conf.get(CHECKPOINT_DIR_CONF, None)
             if not ckpt:
                 raise ValueError(

@@ -11,9 +11,12 @@ compare, Synchronizer.php:193-204 + constraint alphabetization
 TableConnection.php:419-455).
 
 Planning is NOT metadata-only: comparing schemas needs a handle per
-shared table and side, and resolving one costs real work — a file
-catalog's ``spark.read…load()`` lists files and runs a schema-inference
-job, a DBAPI catalog fetches every row through the driver. The planner
+shared table and side, and resolving one costs real work. A parquet
+handle costs a file listing and one footer read, the schema handed to
+``load()`` so that Spark runs no job for it; only a table whose footer
+cannot be mapped exactly (``FileCatalog._footer_schema``), and every
+other file format, pays a schema-inference job. A DBAPI catalog fetches
+every row through the driver. The planner
 resolves all ``2 × |shared|`` handles concurrently on
 ``SyncConfig.max_parallel_tables`` pooled threads before the schema loop,
 and the catalogs memoize them (``Catalog.invalidate`` clears the memo),

@@ -24,12 +24,14 @@ Implementations:
 
 from __future__ import annotations
 
+import json
 import os
 import re
 from typing import Callable, Iterable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from mysql_syncer_spark.config import TableHandle
 
@@ -59,6 +61,53 @@ def filter_ignored(tables: Iterable[str], ignore_regexes: Sequence[str]) -> list
     op, not a DataFrame op."""
     pats = [re.compile(p) for p in ignore_regexes]
     return [t for t in tables if not any(p.search(t) for p in pats)]
+
+
+#: footer key under which Spark's parquet writer stores the row schema
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+_PLAIN_TYPES = {
+    ("BOOLEAN", "NONE"): T.BooleanType(),
+    ("FLOAT", "NONE"): T.FloatType(),
+    ("DOUBLE", "NONE"): T.DoubleType(),
+    ("INT32", "NONE"): T.IntegerType(),
+    ("INT32", "DATE"): T.DateType(),
+    ("INT64", "NONE"): T.LongType(),
+    ("BYTE_ARRAY", "STRING"): T.StringType(),
+    ("BYTE_ARRAY", "NONE"): T.BinaryType(),
+}
+_SIGNED_INTS = {
+    ("INT32", 8): T.ByteType(),
+    ("INT32", 16): T.ShortType(),
+    ("INT32", 32): T.IntegerType(),
+    ("INT64", 64): T.LongType(),
+}
+
+
+def _parquet_column_type(col, ntz: bool) -> T.DataType | None:
+    """Spark's type for one flat parquet column (a pyarrow
+    ``ColumnSchema``), following Spark's parquet schema converter with
+    ``binaryAsString`` off; ``ntz`` is the session's
+    ``spark.sql.parquet.inferTimestampNTZ.enabled``. ``None`` for a
+    repeated column or any type not mapped here (decimals, unsigned and
+    nanosecond columns among them)."""
+    if col.max_repetition_level:
+        return None
+    phys, logical = col.physical_type, col.logical_type
+    kind = logical.type
+    if kind == "NONE" and col.converted_type != "NONE":
+        return None
+    if (phys, kind) in _PLAIN_TYPES:
+        return _PLAIN_TYPES[(phys, kind)]
+    detail = json.loads(logical.to_json())
+    if kind == "INT" and detail["isSigned"]:
+        return _SIGNED_INTS.get((phys, detail["bitWidth"]))
+    if (phys == "INT64" and kind == "TIMESTAMP"
+            and detail["timeUnit"] in ("milliseconds", "microseconds")):
+        if detail["isAdjustedToUTC"] or not ntz:
+            return T.TimestampType()
+        return T.TimestampNTZType()
+    return None
 
 
 class Catalog:
@@ -118,7 +167,14 @@ class FileCatalog(Catalog):
     the staged atomic ``write_table`` swap the executor calls), so the
     executor never special-cases a format. CSV reads infer schema with
     headers by default (override via ``read_options`` for production:
-    explicit schemas beat a double scan at 100 TB)."""
+    explicit schemas beat a double scan at 100 TB).
+
+    A parquet handle starts no Spark job: its schema comes from one
+    footer read with pyarrow and is given to ``load()``, which then only
+    lists files (:meth:`_footer_schema`; anything it cannot map exactly
+    falls back to Spark's schema-inference job). The footer is read on
+    every resolution, so a table retyped by an external writer shows as
+    schema drift on the next sync."""
 
     FORMATS: dict[str, str] = {
         "parquet": ".parquet",
@@ -207,16 +263,82 @@ class FileCatalog(Catalog):
 
     def table(self, name: str) -> TableHandle:
         self._recover(name)
-        return self._memo(name, lambda: TableHandle(
+        return self._memo(name, lambda: self._resolve(name))
+
+    def _resolve(self, name: str) -> TableHandle:
+        path = self.table_path(name)
+        reader = self.spark.read.format(self.fmt).options(**self.read_options)
+        schema = self._footer_schema(path)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return TableHandle(
             name=name,
-            df=(
-                self.spark.read.format(self.fmt)
-                .options(**self.read_options)
-                .load(self.table_path(name))
-            ),
+            df=reader.load(path),
             pk_cols=self.pk_map.get(name, ()),
             partition_col=self.partition_map.get(name),
-        ))
+        )
+
+    def _footer_schema(self, path: str) -> T.StructType | None:
+        """The schema Spark would infer for the parquet table at
+        ``path``, read from one footer with pyarrow, or ``None`` where
+        that cannot be done exactly — the caller then lets ``load()``
+        infer it with a Spark job, as before.
+
+        Applies only to parquet with no read options, a local file or a
+        flat local directory of data files, and a session with
+        ``mergeSchema`` and ``binaryAsString`` off. With ``mergeSchema``
+        off Spark reads a summary file if there is one (those fall back
+        here, as do subdirectories, which mean partition discovery),
+        else the first data file by path; names starting with ``_`` or
+        ``.`` and ``._COPYING_`` files are not data files. A
+        Spark-written footer carries its row schema as JSON, used
+        verbatim as Spark does; other footers are mapped column by
+        column (:func:`_parquet_column_type`). Nothing is memoized: the
+        footer is read again on every handle resolution."""
+        if self.fmt != "parquet" or self.read_options:
+            return None
+        conf = self.spark.conf
+        for key in ("spark.sql.parquet.mergeSchema",
+                    "spark.sql.parquet.binaryAsString"):
+            if conf.get(key, "false").lower() != "false":
+                return None
+        if os.path.isfile(path):
+            first = path
+        elif os.path.isdir(path):
+            names = sorted(os.listdir(path))
+            if any(n.startswith(("_metadata", "_common_metadata"))
+                   or os.path.isdir(os.path.join(path, n)) for n in names):
+                return None
+            data = [n for n in names if not n.startswith(("_", "."))
+                    and not n.endswith("._COPYING_")]
+            if not data:
+                return None
+            first = os.path.join(path, data[0])
+        else:
+            return None
+        try:
+            import pyarrow.parquet as pq
+
+            meta = pq.read_metadata(first)
+            spark_schema = (meta.metadata or {}).get(_SPARK_ROW_METADATA)
+            if spark_schema is not None:
+                return T.StructType.fromJson(json.loads(spark_schema))
+            cols = [meta.schema.column(i) for i in range(meta.num_columns)]
+            # flat: one leaf per top-level field, named as the field
+            if meta.schema.to_arrow_schema().names != [c.path for c in cols]:
+                return None
+            ntz = conf.get(
+                "spark.sql.parquet.inferTimestampNTZ.enabled", "true"
+            ).lower() == "true"
+            types = [_parquet_column_type(c, ntz) for c in cols]
+        except Exception:  # any read or parse error: Spark infers it
+            return None
+        names = [c.path for c in cols]
+        if None in types or len({n.lower() for n in names}) < len(names):
+            return None
+        return T.StructType(
+            [T.StructField(n, t, True) for n, t in zip(names, types)]
+        )
 
     #: fault-injection seam for the crash-window tests (E155 hook
     #: pattern): called with 'staged' / 'old_moved' / 'swapped' between

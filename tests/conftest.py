@@ -1,4 +1,6 @@
+import contextlib
 import os
+import uuid
 
 import pytest
 from pyspark.sql import SparkSession
@@ -55,3 +57,30 @@ def lineitem(spark, sf_dir):
 @pytest.fixture(scope="session")
 def orders(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/orders.parquet")
+
+
+@pytest.fixture()
+def jobs_in_group(spark):
+    """``with jobs_in_group() as jobs:`` runs the block under a fresh
+    job group; on exit ``jobs`` holds the ids of the Spark jobs started
+    inside it (from the block's thread and any thread that inherited its
+    properties)."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def run():
+        group = f"test-{uuid.uuid4().hex}"
+        jobs: list[int] = []
+        sc.setJobGroup(group, "jobs_in_group")
+        try:
+            yield jobs
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+            # job starts reach the status tracker through the listener
+            # bus; drain it so no job of the block is missed
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

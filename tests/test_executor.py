@@ -99,6 +99,28 @@ def test_duplicate_content_distinct_pks(spark, pair):
     assert spark.read.parquet(f"{sdir}/t.parquet").count() == 3
 
 
+def test_duplicate_slave_pk_converges_in_one_sync(spark, pair):
+    """A slave PK held twice, once with the master's content: deleting
+    the stray copy deletes the key, so the master row must be copied
+    back in the same sync — not only on the next one."""
+    mdir, sdir, write = pair
+    m = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+    s = spark.createDataFrame(
+        [(1, "a"), (1, "zzz"), (2, "b")], "id long, v string"
+    )
+    write("t", m, s)
+    master = ParquetCatalog(spark, mdir, pk_map={"t": ("id",)})
+    slave = ParquetCatalog(spark, sdir, pk_map={"t": ("id",)})
+    rep = sync(master, slave)
+    assert rep.ok, [r.error for r in rep.results if r.error]
+    r = rep.results[0]
+    assert (r.status, r.inserted, r.deleted) == ("ok", 1, 1)
+    got = spark.read.parquet(f"{sdir}/t.parquet").collect()
+    assert sorted(tuple(x) for x in got) == [(1, "a"), (2, "b")]
+    rep2 = sync(master, slave)
+    assert [x.status for x in rep2.results] == ["noop"]
+
+
 def test_partitioned_sync_with_partition_moves(spark, sf_dir, pair):
     """Partition-wise diff incl. rows MOVING between partition values —
     the delete-before-insert guard (Synchronizer.php:496-517)."""

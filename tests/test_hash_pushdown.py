@@ -151,6 +151,68 @@ def test_sync_pushdown_end_to_end(spark, master_db, tmp_path):
     assert all(x.status == "noop" for x in report2.results), report2.results
 
 
+def test_pushdown_duplicate_slave_pk_converges_in_one_sync(
+    spark, master_db, tmp_path
+):
+    """A slave without the PK constraint holds key 7 twice, once with
+    the master's content: the excess copy's delete removes the key, so
+    its master row is fetched back in the same sync."""
+    spath = str(tmp_path / "slave.db")
+    rows = _orders_rows()
+    with sqlite3.connect(spath) as s:
+        s.execute(ORDERS_DDL.replace(" PRIMARY KEY", ""))
+        s.executemany("INSERT INTO orders VALUES (?,?,?,?,?)",
+                      rows + [(7, 0, "X", 0, "stray copy")])
+    master = DBAPICatalog(spark, _factory(master_db))
+    slave = DBAPICatalog(spark, _factory(spath))
+    cfg = SyncConfig(hash_pushdown=True, chunk_size=16)
+    report = sync(master, slave, cfg)
+    assert report.ok, [r.error for r in report.results]
+    r = report.results[0]
+    assert (r.status, r.inserted, r.deleted) == ("ok", 1, 1)
+
+    def dump(path):
+        with sqlite3.connect(path) as conn:
+            return conn.execute(
+                "SELECT * FROM orders ORDER BY o_orderkey"
+            ).fetchall()
+
+    assert dump(master_db) == dump(spath)
+
+
+def test_keyed_fetch_jobs_stay_in_callers_job_group(
+    spark, master_db, tmp_path, jobs_in_group
+):
+    """Every job of a pushdown sync, the spill writes of the pooled
+    keyed fetch included, runs in the caller's job group."""
+    spath = str(tmp_path / "slave.db")
+    with sqlite3.connect(spath) as s:
+        s.execute(ORDERS_DDL)
+        s.executemany("INSERT INTO orders VALUES (?,?,?,?,?)",
+                      _orders_rows()[::2])
+    master = DBAPICatalog(spark, _factory(master_db))
+    slave = DBAPICatalog(spark, _factory(spath))
+    fetches: list[int] = []
+    real_fetch = master.fetch_rows
+
+    def counting_fetch(name, keys, pk_cols, chunk_size=5000):
+        fetches.append(len(keys))
+        return real_fetch(name, keys, pk_cols, chunk_size=chunk_size)
+
+    master.fetch_rows = counting_fetch
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    cfg = SyncConfig(hash_pushdown=True, chunk_size=16,
+                     max_parallel_tables=4)
+    with jobs_in_group() as jobs:
+        report = sync(master, slave, cfg)
+    assert report.ok, [r.error for r in report.results]
+    assert sum(fetches) == 150 and len(fetches) >= 10
+    # one spill write per chunk, all of them inside the group
+    assert len(jobs) >= len(fetches)
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+
+
 def test_pushdown_delta_stays_chunk_bounded(spark, master_db, tmp_path):
     """A bulk-reload-sized delta (the slave has almost nothing) must
     flow through the pushdown path in CHUNK_SIZE batches — the driver

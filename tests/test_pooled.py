@@ -75,14 +75,8 @@ def test_sibling_property_writes_stay_private(spark):
     assert after == "caller"
 
 
-def test_digest_gate_jobs_carry_the_callers_job_group(spark, orders):
-    sc = spark.sparkContext
-    sc.setJobGroup("pooled-gate-test", "digest gate from pooled threads")
-    try:
+def test_digest_gate_jobs_carry_the_callers_job_group(orders, jobs_in_group):
+    with jobs_in_group() as jobs:
         assert digests_equal(orders, orders)
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
     # one scalar-agg job per side, both launched from pooled threads
-    assert len(sc.statusTracker().getJobIdsForGroup("pooled-gate-test")) >= 2
+    assert len(jobs) >= 2
