@@ -46,8 +46,9 @@ class SyncConfig:
     #: tables with no PK: full-copy if True, skip if False
     #: (settings.php.tmpl:45, Synchronizer.php:213-222)
     copy_tables_with_no_primary: bool = True
-    #: JDBC write batch size — the reference's CHUNK_SIZE=5000
-    #: (settings.php.tmpl:32-34); irrelevant for parquet mode
+    #: rows per DELETE/INSERT statement — the reference's CHUNK_SIZE=5000
+    #: (settings.php.tmpl:32-34) — and per streamed partition of a DBAPI
+    #: delta (ceil(rows / chunk_size) partitions); unused in parquet mode
     chunk_size: int = 5000
     #: concurrent sync units (reference: ThreadWrapper.jar <cores>)
     max_parallel_tables: int = 8

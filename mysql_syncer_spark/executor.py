@@ -100,9 +100,9 @@ class ParquetSyncExecutor:
             chunk_size=self.cfg.chunk_size,
         )
 
-    def _log_delta(self, table, pk_cols, inserts, deletes) -> None:
+    def _log_delta(self, table, pk_cols, inserts, deletes, counts) -> None:
         if self._stmt_log is not None:
-            self._stmt_log.log_delta(table, pk_cols, inserts, deletes)
+            self._stmt_log.log_delta(table, pk_cols, inserts, deletes, counts)
         if self.cfg.changelog_path is not None:
             from mysql_syncer_spark.sinks.changelog import changelog
 
@@ -240,49 +240,47 @@ class ParquetSyncExecutor:
             # dry_run (the file must be replayable), so the keyed fetch
             # runs before the dry_run return in that mode
             if hasattr(self.master, "fetch_rows"):
-                inserts, spill = self._stream_keyed_fetch(table, keys, pk)
+                inserts, spill = self._stream_keyed_fetch(
+                    table, keys, pk, rows=res.inserted
+                )
             else:
                 inserts = rows_to_copy(self.master.table(table).df, keys, pk)
-            self._log_delta(table, pk, inserts, exc)
+            counts = (res.inserted, res.deleted)
+            self._log_delta(table, pk, inserts, exc, counts)
             if self.cfg.dry_run:
                 res.status = "dry_run"
                 return
-            self._apply_changes(table, pk, inserts, exc, s.df)
+            self._apply_changes(table, pk, inserts, exc, s.df, counts)
             self.slave.invalidate()
         finally:
             keys.unpersist()
             exc.unpersist()
             if spill is not None:
-                import shutil
-
                 shutil.rmtree(spill, ignore_errors=True)
 
-    def _stream_keyed_fetch(self, table: str, miss, pk: list):
+    def _stream_keyed_fetch(self, table: str, miss, pk: list, rows=None):
         """Bounded-memory keyed fetch: stream the missing-key frame
-        through the driver chunk-wise (``toLocalIterator`` holds at
-        most one partition), issue the master's chunked
-        ``WHERE (pk...) IN`` point fetch per ``chunk_size`` keys, and
-        spill each chunk's rows to a local parquet staging dir — the
-        reference's CHUNK_SIZE discipline
-        (TableConnection.php:177-209, settings.php.tmpl:32-34) at ANY
-        delta size; a first sync pointed at the pushdown path stays
-        flat in driver memory.
+        through the driver (:func:`jdbc.stream_rows`: one partition at a
+        time, about ``chunk_size`` keys when ``rows`` gives the key
+        count), fetch every ``chunk_size`` keys from the master with one
+        chunked ``WHERE (pk...) IN`` point fetch, and spill each chunk's
+        rows to a local parquet staging dir — the reference's CHUNK_SIZE
+        discipline (TableConnection.php:177-209, settings.php.tmpl:32-34)
+        at ANY delta size.
 
-        r10: chunks are fetched by a pool of
-        ``cfg.max_parallel_tables`` threads — the reference's own
-        process-pool economics (ThreadWrapper.jar / main.php) applied
-        within one table. Each worker opens its own DBAPI connection
-        (``fetch_rows`` is connection-per-call) and writes its rows to
-        a PRIVATE spill subdir (concurrent parquet appends to one path
-        race on the shared ``_temporary`` committer dir). In-flight
-        work is capped at the pool width, so driver memory is bounded
-        by ``max_parallel_tables × chunk_size`` keys+rows instead of
-        one chunk — still table-size-independent. Throughput remains
-        DRIVER-ROUTED: this path is the small-delta mode (see
-        ``SyncConfig.hash_pushdown``); a 100×-scale first sync belongs
-        on the distributed JDBC/parquet read paths. Returns
-        ``(inserts_df, spill_dir)``; the caller removes ``spill_dir``
-        after the delta is applied."""
+        Chunks are fetched by a pool of ``cfg.max_parallel_tables``
+        threads (the reference's process-pool economics within one
+        table). Each opens its own DBAPI connection (``fetch_rows`` is
+        connection-per-call) and writes a PRIVATE spill subdir
+        (concurrent parquet appends to one path race on the shared
+        ``_temporary`` committer dir). In-flight chunks are capped at the
+        pool width, so driver memory is bounded by ``max_parallel_tables
+        × chunk_size`` keys+rows at any table size. Throughput stays
+        DRIVER-ROUTED: this is the small-delta mode (see
+        ``SyncConfig.hash_pushdown``); a 100×-scale first sync belongs on
+        the distributed JDBC/parquet read paths. Returns ``(inserts_df,
+        spill_dir)``; the caller removes ``spill_dir`` after the delta is
+        applied."""
         import tempfile
         from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor
         from concurrent.futures import wait as fwait
@@ -301,23 +299,19 @@ class ParquetSyncExecutor:
 
         dirs: list = []
         pending: set = set()
-        chunk: list = []
-        idx = 0
         try:
             # an explicit pool, not run_pooled: chunks are submitted as
-            # toLocalIterator yields them, bounded by FIRST_COMPLETED waits
+            # the stream yields them, bounded by FIRST_COMPLETED waits
             with ThreadPoolExecutor(max_workers=workers) as pool:
                 def reap(done) -> None:
                     # result() re-raises a worker's exception EAGERLY,
                     # aborting the producer loop instead of streaming
-                    # the rest of toLocalIterator into a doomed sync
+                    # the rest of the keys into a doomed sync
                     for f in done:
                         dirs.append(f.result())
 
-                def submit() -> None:
-                    nonlocal idx, pending
-                    if not chunk:
-                        return
+                def submit(idx: int, chunk: list) -> None:
+                    nonlocal pending
                     # bound in-flight chunks to the pool width: the
                     # producer blocks instead of buffering the key stream
                     while len(pending) >= workers:
@@ -330,16 +324,13 @@ class ParquetSyncExecutor:
                     # unit's FAIR pool and the caller's job group, and
                     # concurrent writes never share one property set
                     fetch = inheritable_thread_target(self.spark)(fetch_one)
-                    pending.add(pool.submit(fetch, idx, list(chunk)))
-                    idx += 1
-                    chunk.clear()
+                    pending.add(pool.submit(fetch, idx, chunk))
 
                 try:
-                    for r in miss.toLocalIterator():
-                        chunk.append(tuple(r))
-                        if len(chunk) >= chunk_size:
-                            submit()
-                    submit()
+                    stream = jdbc.stream_rows(miss, rows, chunk_size)
+                    chunks = jdbc.chunked(stream, chunk_size)
+                    for idx, chunk in enumerate(chunks):
+                        submit(idx, chunk)
                     done, _ = fwait(pending)
                     reap(done)
                 except BaseException:
@@ -349,8 +340,6 @@ class ParquetSyncExecutor:
         except BaseException:
             # the caller only learns the spill path from our return
             # value — on an error it never does, so clean up here
-            import shutil
-
             shutil.rmtree(spill, ignore_errors=True)
             raise
         if not dirs:
@@ -414,22 +403,26 @@ class ParquetSyncExecutor:
             if res.inserted == 0 and res.deleted == 0:
                 res.status = "noop"
                 return
-            self._log_delta(table, pk_cols, inserts, deletes)
+            counts = (res.inserted, res.deleted)
+            self._log_delta(table, pk_cols, inserts, deletes, counts)
             if self.cfg.dry_run:
                 res.status = "dry_run"
                 return
             target = full_slave if full_slave is not None else sdf
-            self._apply_changes(table, pk_cols, inserts, deletes, target)
+            self._apply_changes(table, pk_cols, inserts, deletes, target,
+                                counts)
             self.slave.invalidate()
         finally:
             if inserts is not None:
                 inserts.unpersist()
             deletes.unpersist()
 
-    def _apply_changes(self, table, pk_cols, inserts, deletes, target) -> None:
+    def _apply_changes(self, table, pk_cols, inserts, deletes, target,
+                       counts) -> None:
         """Materialize the delta on the slave. Parquet mode: pure-DataFrame
         merge + atomic file overwrite. Overridden by the SQL-target
-        executor with distributed DELETE/INSERT statement batches."""
+        executors. ``counts`` is ``(inserted, deleted)``, which only the
+        DBAPI sinks use."""
         merged = apply_delta(target, inserts, deletes, pk_cols)
         self.slave.write_table(merged, table)
 
@@ -438,15 +431,17 @@ class ParquetSyncExecutor:
     def run_unit(self, unit: SyncUnit) -> UnitResult:
         res = UnitResult(table=unit.table, action=unit.action.value)
         t0 = time.time()
+        sc = self.spark.sparkContext
+        # DDL units and run_single run on the caller's own thread:
+        # restore its pool, never clear it
+        caller_pool = sc.getLocalProperty("spark.scheduler.pool")
         try:
             # FAIR pool per sync unit: concurrent table syncs share the
             # cluster instead of FIFO head-of-line blocking — the Spark
             # replacement for one-OS-process-per-table
             # (Synchronizer.php:86-92). No-op unless
             # spark.scheduler.mode=FAIR is set on the session.
-            self.spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", f"sync-{unit.table}"
-            )
+            sc.setLocalProperty("spark.scheduler.pool", f"sync-{unit.table}")
             if unit.action == Action.DROP:
                 self._drop(unit, res)
             elif unit.action == Action.FULL_COPY:
@@ -461,9 +456,7 @@ class ParquetSyncExecutor:
             res.status = "error"
             res.error = f"{e}\n{traceback.format_exc(limit=5)}"
         finally:
-            self.spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", None
-            )
+            sc.setLocalProperty("spark.scheduler.pool", caller_pool)
         res.seconds = time.time() - t0
         return res
 
@@ -545,9 +538,10 @@ class DBAPISyncExecutor(ParquetSyncExecutor):
 
     Same control flow as the parquet executor (schema compare → digest
     short-circuit → hash diff), but mutations are the reference's real
-    write path: distributed chunked ``DELETE ... WHERE (pk) IN`` /
-    multi-row ``INSERT`` statements (TableConnection.php:289-387) pushed
-    through executor-side connections (sinks/jdbc.py), plus DDL through
+    write path: chunked ``DELETE ... WHERE (pk) IN`` / multi-row
+    ``INSERT`` statements (TableConnection.php:289-387), a delta's
+    streamed through one driver-side connection per table and a full
+    copy's through executor-side ones (sinks/jdbc.py), plus DDL through
     a driver-side connection. The master may be any Catalog (parquet,
     JDBC, DBAPI) — only the slave needs a connection factory.
     """
@@ -602,19 +596,21 @@ class DBAPISyncExecutor(ParquetSyncExecutor):
         )
         self.slave.invalidate()
 
-    def _apply_changes(self, table, pk_cols, inserts, deletes, target) -> None:
+    def _apply_changes(self, table, pk_cols, inserts, deletes, target,
+                       counts) -> None:
         # delete-before-insert (Synchronizer.php:496-517): excess keys
         # first, then replace (which deletes the changed rows' old
         # versions chunk-locally before inserting the new ones).
+        inserted, deleted = counts
         jdbc.apply_deletes(
             deletes, table, pk_cols, self.slave.connect_factory,
             chunk_size=self.cfg.chunk_size, quote=self._quote,
-            backslash_escapes=self._esc,
+            backslash_escapes=self._esc, rows=deleted,
         )
         jdbc.apply_replace(
             inserts, table, pk_cols, self.slave.connect_factory,
             chunk_size=self.cfg.chunk_size, quote=self._quote,
-            backslash_escapes=self._esc,
+            backslash_escapes=self._esc, rows=inserted,
         )
 
 
@@ -691,7 +687,8 @@ class JDBCSyncExecutor(ParquetSyncExecutor):
         self.slave.write_jdbc(m.df, unit.table)
         self.slave.invalidate()
 
-    def _apply_changes(self, table, pk_cols, inserts, deletes, target) -> None:
+    def _apply_changes(self, table, pk_cols, inserts, deletes, target,
+                       counts) -> None:
         stage = f"__sync_keys_{table}"
         keys = deletes.select(*pk_cols).unionByName(
             inserts.select(*pk_cols)

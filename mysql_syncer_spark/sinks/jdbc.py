@@ -4,27 +4,28 @@ Spark's DataFrame API has no DELETE pushdown for JDBC targets, so the
 reference's write path (chunked ``DELETE ... WHERE (pk...) IN (...)``
 and multi-row ``INSERT INTO ... VALUES (...),(...)`` —
 src/project/TableConnection.php:289-387, chunk loop
-Synchronizer.php:566-582) is reproduced here as ``foreachPartition``
-batches over delta DataFrames:
+Synchronizer.php:566-582) is reproduced here:
 
 * statement builders are pure functions (unit-tested without a DB);
-* executors open their own DBAPI connections via an injected factory
-  (a connection can't be pickled to workers) and commit per chunk —
+  each sink's statements come from one chunk-at-a-time generator, which
+  the sink executes and the statement log writes;
+* the delta sinks (:func:`apply_deletes`, :func:`apply_replace`) run on
+  the DRIVER, one connection per table, streaming the delta through
+  ``toLocalIterator`` (:func:`stream_rows`) and committing per chunk —
   idempotent under retry because DELETE-by-PK and delete-before-insert
   replace (TableConnection.php:599-627 replaceRows) re-apply cleanly;
+* full copies (:func:`apply_inserts`) stay distributed: one
+  ``foreachPartition`` connection per partition, opened by the executor
+  (a connection can't be pickled to workers);
 * ``chunk_size`` plays the reference's CHUNK_SIZE role
-  (settings.php.tmpl:32-34): bounds statement size / packet size, NOT
-  memory — partitions stream through ``itertools.islice``.
-
-At 100 TB the delta frames are small by construction (only changed
-rows), and the write parallelism equals the delta's partition count —
-``df.repartition(n)`` upstream is the knob for target-DB write
-concurrency.
+  (settings.php.tmpl:32-34): it bounds statement size and, given a
+  delta's row count, the streamed partition size.
 """
 
 from __future__ import annotations
 
 import itertools
+import math
 import sys
 from collections.abc import Callable, Iterable, Iterator, Sequence
 from datetime import date, datetime, timezone
@@ -34,7 +35,7 @@ from pyspark.sql import DataFrame
 
 DEFAULT_CHUNK_SIZE = 5000  # reference CHUNK_SIZE (settings.php.tmpl:34)
 
-# The foreachPartition closures below reference this module's statement
+# apply_inserts' foreachPartition closure references this module's statement
 # builders; by default cloudpickle ships module functions BY REFERENCE,
 # which requires mysql_syncer_spark to be importable inside executor
 # Python workers (--py-files). Registering the module for by-value
@@ -172,12 +173,81 @@ def delete_sql(
     return f"DELETE FROM {quote_ident(table, quote)} WHERE {key} IN ({tuples})"
 
 
-def _chunks(it: Iterator, size: int) -> Iterator[list]:
+def chunked(it: Iterator, size: int) -> Iterator[list]:
+    """Consecutive lists of at most ``size`` items of ``it``."""
     while True:
         chunk = list(itertools.islice(it, size))
         if not chunk:
             return
         yield chunk
+
+
+def stream_rows(df: DataFrame, rows: int | None = None,
+                chunk_size: int = DEFAULT_CHUNK_SIZE) -> Iterator:
+    """Stream ``df`` into the driver one partition at a time. ``rows``
+    (the frame's known row count) first coalesces it to
+    ``ceil(rows / chunk_size)`` partitions: ``toLocalIterator`` runs one
+    job per partition, so a one-chunk delta costs one job, and a
+    partition stays about one chunk at any delta size. ``coalesce``
+    never raises the partition count."""
+    if rows is not None:
+        df = df.coalesce(max(1, math.ceil(rows / chunk_size)))
+    return df.toLocalIterator()
+
+
+def delete_statements(keys: DataFrame, table: str, pk_cols: Sequence[str],
+                      chunk_size: int = DEFAULT_CHUNK_SIZE, quote: str = "`",
+                      backslash_escapes: bool = False,
+                      rows: int | None = None) -> Iterator[tuple]:
+    """The excess-key ``DELETE`` of each chunk of ``keys``."""
+    stream = stream_rows(keys.select(*pk_cols), rows, chunk_size)
+    for chunk in chunked(stream, chunk_size):
+        yield (delete_sql(table, pk_cols, chunk, quote, backslash_escapes),)
+
+
+def replace_statements(df: DataFrame, table: str, pk_cols: Sequence[str],
+                       chunk_size: int = DEFAULT_CHUNK_SIZE, quote: str = "`",
+                       backslash_escapes: bool = False,
+                       rows: int | None = None) -> Iterator[tuple]:
+    """Per chunk of ``df``, the ``DELETE`` of its PKs, then its INSERT."""
+    cols = df.columns
+    idx = [cols.index(c) for c in pk_cols]
+    for chunk in chunked(stream_rows(df, rows, chunk_size), chunk_size):
+        pks = [[r[i] for i in idx] for r in chunk]
+        yield (delete_sql(table, pk_cols, pks, quote, backslash_escapes),
+               insert_sql(table, cols, chunk, quote, backslash_escapes))
+
+
+def insert_statements(rows: Iterator, table: str, cols: Sequence[str],
+                      chunk_size: int = DEFAULT_CHUNK_SIZE, quote: str = "`",
+                      backslash_escapes: bool = False) -> Iterator[tuple]:
+    """The multi-row ``INSERT`` of each chunk of a row iterator."""
+    for chunk in chunked(rows, chunk_size):
+        yield (insert_sql(table, cols, chunk, quote, backslash_escapes),)
+
+
+def _execute(connection_factory: Callable[[], object],
+             chunks: Iterable[Sequence[str]], per_chunk: bool = True) -> None:
+    """Run every chunk's statements on ONE connection, opened with the
+    first chunk (an empty stream opens none). Commits after each chunk,
+    or with ``per_chunk=False`` once at the end: a retried
+    ``foreachPartition`` task must not re-insert rows an earlier attempt
+    committed."""
+    conn = None
+    try:
+        for statements in chunks:
+            if conn is None:
+                conn = connection_factory()
+                cur = conn.cursor()
+            for stmt in statements:
+                cur.execute(stmt)
+            if per_chunk:
+                conn.commit()
+        if conn is not None:
+            conn.commit()
+    finally:
+        if conn is not None:
+            conn.close()
 
 
 def apply_deletes(
@@ -188,26 +258,13 @@ def apply_deletes(
     chunk_size: int = DEFAULT_CHUNK_SIZE,
     quote: str = "`",
     backslash_escapes: bool = False,
+    rows: int | None = None,
 ) -> None:
-    """Execute chunked deletes for every key row, one connection per
-    partition (executors can't share the driver's connection)."""
-    cols = list(pk_cols)
-
-    def run(partition: Iterator) -> None:
-        it = (tuple(row[c] for c in cols) for row in partition)
-        first = next(it, None)
-        if first is None:
-            return
-        conn = connection_factory()
-        try:
-            cur = conn.cursor()
-            for chunk in _chunks(itertools.chain([first], it), chunk_size):
-                cur.execute(delete_sql(table, cols, chunk, quote, backslash_escapes))
-            conn.commit()
-        finally:
-            conn.close()
-
-    keys.select(*cols).foreachPartition(run)
+    """Execute chunked deletes for every key row from the driver, on
+    one connection; ``rows`` is the key count (see :func:`stream_rows`)."""
+    _execute(connection_factory, delete_statements(
+        keys, table, pk_cols, chunk_size, quote, backslash_escapes, rows
+    ))
 
 
 def apply_inserts(
@@ -218,61 +275,33 @@ def apply_inserts(
     quote: str = "`",
     backslash_escapes: bool = False,
 ) -> None:
-    """Execute chunked multi-row inserts, one connection per partition."""
+    """Execute chunked multi-row inserts, one connection per partition
+    (a table-sized full copy: the one distributed sink)."""
     cols = rows.columns
 
     def run(partition: Iterator) -> None:
-        it = (tuple(row[c] for c in cols) for row in partition)
-        first = next(it, None)
-        if first is None:
-            return
-        conn = connection_factory()
-        try:
-            cur = conn.cursor()
-            for chunk in _chunks(itertools.chain([first], it), chunk_size):
-                cur.execute(insert_sql(table, cols, chunk, quote, backslash_escapes))
-            conn.commit()
-        finally:
-            conn.close()
+        _execute(connection_factory, insert_statements(
+            partition, table, cols, chunk_size, quote, backslash_escapes
+        ), per_chunk=False)
 
     rows.foreachPartition(run)
 
 
 def apply_replace(
-    rows: DataFrame,
+    df: DataFrame,
     table: str,
     pk_cols: Sequence[str],
     connection_factory: Callable[[], object],
     chunk_size: int = DEFAULT_CHUNK_SIZE,
     quote: str = "`",
     backslash_escapes: bool = False,
+    rows: int | None = None,
 ) -> None:
-    """Delete-then-insert upsert — deliberately not REPLACE/ON DUPLICATE
-    (the reference dodges unique-key conflicts the same way,
-    TableConnection.php:599-627); delete-before-insert within each chunk
-    keeps the partition-move guard (Synchronizer.php:496-517)."""
-    cols = rows.columns
-    pks = list(pk_cols)
-
-    def run(partition: Iterator) -> None:
-        it = (tuple(row[c] for c in cols) for row in partition)
-        first = next(it, None)
-        if first is None:
-            return
-        idx = [cols.index(c) for c in pks]
-        conn = connection_factory()
-        try:
-            cur = conn.cursor()
-            for chunk in _chunks(itertools.chain([first], it), chunk_size):
-                cur.execute(
-                    delete_sql(
-                        table, pks, [[r[i] for i in idx] for r in chunk],
-                        quote, backslash_escapes,
-                    )
-                )
-                cur.execute(insert_sql(table, cols, chunk, quote, backslash_escapes))
-            conn.commit()
-        finally:
-            conn.close()
-
-    rows.foreachPartition(run)
+    """Delete-then-insert upsert from the driver, on one connection —
+    deliberately not REPLACE/ON DUPLICATE (the reference dodges
+    unique-key conflicts the same way, TableConnection.php:599-627);
+    delete-before-insert within each chunk keeps the partition-move
+    guard (Synchronizer.php:496-517). ``rows``: see :func:`stream_rows`."""
+    _execute(connection_factory, replace_statements(
+        df, table, pk_cols, chunk_size, quote, backslash_escapes, rows
+    ))

@@ -10,12 +10,12 @@ statements are composed from the planned delta frames (not captured
 from executed writes), ``dry_run=True`` + ``log_statements`` yields the
 same file without touching the slave — a replayable PREVIEW.
 
-Renderers are the sinks' own (:func:`~mysql_syncer_spark.sinks.jdbc
-.insert_sql` / :func:`~mysql_syncer_spark.sinks.jdbc.delete_sql`), with
-the same chunking and the same per-chunk delete-before-insert upsert
-order as :func:`~mysql_syncer_spark.sinks.jdbc.apply_replace`, so the
-log is byte-for-byte the statement stream the distributed sinks issue
-(modulo partition interleaving, which the file serializes).
+Statements come from the sinks' own generators
+(:func:`~mysql_syncer_spark.sinks.jdbc.delete_statements` /
+:func:`~mysql_syncer_spark.sinks.jdbc.replace_statements`), streamed
+with the same row counts, so the log is byte-for-byte the statement
+stream :func:`~mysql_syncer_spark.sinks.jdbc.apply_deletes` and
+:func:`~mysql_syncer_spark.sinks.jdbc.apply_replace` execute.
 
 Scale note: a single SQL file is an inherently serial artifact. The
 emitter streams delta frames through ``toLocalIterator`` (driver memory
@@ -26,16 +26,17 @@ replay of incremental deltas, like the reference's.
 
 from __future__ import annotations
 
-import itertools
 import threading
 from typing import Sequence
 
 from pyspark.sql import DataFrame
 
 from mysql_syncer_spark.sinks.jdbc import (
-    delete_sql,
-    insert_sql,
+    delete_statements,
+    insert_statements,
     quote_ident,
+    replace_statements,
+    stream_rows,
 )
 
 
@@ -65,10 +66,14 @@ class StatementLog:
                 f"-- mode: backslash_escapes={backslash_escapes}\n"
             )
 
-    def _append(self, lines) -> None:
+    def _append(self, lines, *chunk_streams) -> None:
+        """Write ``lines``, then every statement of the sink generators'
+        ``chunk_streams``, as one block."""
         with self._lock, open(self.path, "a") as f:
-            for line in lines:
-                f.write(line)
+            f.writelines(lines)
+            for chunks in chunk_streams:
+                for statements in chunks:
+                    f.writelines(stmt + ";\n" for stmt in statements)
 
     # -- statement blocks (each call = one contiguous file block) ------
 
@@ -82,19 +87,12 @@ class StatementLog:
         """DROP + CREATE + chunked INSERTs (copyTable,
         Synchronizer.php:330-354)."""
         q = quote_ident(table, self.quote)
-        cols = rows.columns
-
-        def gen():
-            yield f"-- full copy {table}\n"
-            yield f"DROP TABLE IF EXISTS {q};\n"
-            yield create_sql.rstrip().rstrip(";") + ";\n"
-            it = (tuple(r[c] for c in cols) for r in rows.toLocalIterator())
-            for chunk in _chunks(it, self.chunk_size):
-                yield insert_sql(
-                    table, cols, chunk, self.quote, self.backslash_escapes
-                ) + ";\n"
-
-        self._append(gen())
+        header = [f"-- full copy {table}\n", f"DROP TABLE IF EXISTS {q};\n",
+                  create_sql.rstrip().rstrip(";") + ";\n"]
+        self._append(header, insert_statements(
+            stream_rows(rows), table, rows.columns, self.chunk_size,
+            self.quote, self.backslash_escapes,
+        ))
 
     def log_delta(
         self,
@@ -102,38 +100,20 @@ class StatementLog:
         pk_cols: Sequence[str],
         inserts: DataFrame,
         deletes: DataFrame,
+        counts: tuple = (None, None),
     ) -> None:
         """The diff-sync hot path: excess-key DELETEs first, then the
         replace stream (per-chunk delete-before-insert) — the
-        reference's PK-collision ordering (Synchronizer.php:496-517)
-        exactly as apply_deletes + apply_replace execute it."""
-        pks = list(pk_cols)
-        cols = inserts.columns
-        idx = [cols.index(c) for c in pks]
-
-        def gen():
-            yield f"-- delta {table}\n"
-            key_it = (
-                tuple(r[c] for c in pks)
-                for r in deletes.select(*pks).toLocalIterator()
-            )
-            for chunk in _chunks(key_it, self.chunk_size):
-                yield delete_sql(
-                    table, pks, chunk, self.quote, self.backslash_escapes
-                ) + ";\n"
-            row_it = (
-                tuple(r[c] for c in cols) for r in inserts.toLocalIterator()
-            )
-            for chunk in _chunks(row_it, self.chunk_size):
-                yield delete_sql(
-                    table, pks, [[r[i] for i in idx] for r in chunk],
-                    self.quote, self.backslash_escapes,
-                ) + ";\n"
-                yield insert_sql(
-                    table, cols, chunk, self.quote, self.backslash_escapes
-                ) + ";\n"
-
-        self._append(gen())
+        reference's PK-collision ordering (Synchronizer.php:496-517).
+        ``counts`` is ``(inserted, deleted)``: streamed with the same
+        counts as the sinks, the block is exactly what they execute."""
+        inserted, deleted = counts
+        args = (self.chunk_size, self.quote, self.backslash_escapes)
+        self._append(
+            [f"-- delta {table}\n"],
+            delete_statements(deletes, table, pk_cols, *args, rows=deleted),
+            replace_statements(inserts, table, pk_cols, *args, rows=inserted),
+        )
 
     # -- replay ---------------------------------------------------------
 
@@ -152,14 +132,6 @@ class StatementLog:
             n += 1
         connection.commit()
         return n
-
-
-def _chunks(it, size: int):
-    while True:
-        chunk = list(itertools.islice(it, size))
-        if not chunk:
-            return
-        yield chunk
 
 
 def _split_statements(text: str):

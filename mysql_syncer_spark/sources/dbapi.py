@@ -15,9 +15,9 @@ That read shape is deliberate and documented: driver-side fetch is
 correct at integration/smoke scale (and is what lets this sandbox run a
 REAL perturb→sync→converged scenario against an on-disk SQL database —
 see tests/test_dbapi_sync.py); it is NOT the 100 TB read path. Writes
-have no such asymmetry — they go through the same distributed
-``foreachPartition`` chunked-statement sinks (sinks/jdbc.py) the JDBC
-mode uses, executors opening their own connections.
+match it: a delta's chunked statements run on one driver-side
+connection per table, and only a full copy's inserts go through
+executor-side connections (sinks/jdbc.py).
 
 Introspection speaks the sqlite dialect by default (``sqlite_master`` +
 ``PRAGMA table_info``, the stand-ins for SHOW TABLES / SHOW INDEX,
@@ -93,10 +93,11 @@ def _spark_type(decltype: str) -> T.DataType:
 
 class _InitFactory:
     """Picklable connection-factory wrapper that runs session-init
-    statements on every NEW connection — driver-side DDL connections and
-    executor-side sink connections alike. The Spark mirror of the
-    reference's startup queries, which run once per mysqli connection
-    (DatabaseConnection.php:31-39, SynchronizerFactory.php:16-19)."""
+    statements on every NEW connection — the driver's DDL and delta-sink
+    connections and the full copy's executor-side ones alike. The Spark
+    mirror of the reference's startup queries, run once per mysqli
+    connection (DatabaseConnection.php:31-39,
+    SynchronizerFactory.php:16-19)."""
 
     def __init__(self, factory: Callable[[], object],
                  statements: Sequence[str]):
@@ -115,9 +116,9 @@ class _InitFactory:
 class DBAPICatalog(Catalog):
     """A live SQL database as a catalog, via a DBAPI connection factory.
 
-    ``connect_factory`` must be picklable if the catalog's tables are
-    written through the distributed sinks (a module-level function or
-    ``functools.partial`` over one — executors re-create connections).
+    ``connect_factory`` must be picklable if a full copy writes the
+    catalog's tables (its insert sink is distributed: a module-level
+    function or ``functools.partial`` over one — executors re-connect).
 
     ``session_init`` statements run at the top of every connection the
     engine opens (SET FOREIGN_KEY_CHECKS=0 etc. — the reference's

@@ -84,3 +84,72 @@ def jobs_in_group(spark):
             jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+class _Recorder:
+    """See the ``recording_factory`` fixture."""
+
+    def __init__(self, path: str):
+        self.path = path
+
+    def factory(self, connect=None, session_init=()):
+        """A connection factory whose connections record every executed
+        statement, then run it on ``connect()``'s real connection (or
+        nowhere, without ``connect``). ``session_init`` statements run
+        first on every connection, through ``_InitFactory``. A closure,
+        so cloudpickle ships it by value to executor workers."""
+        from mysql_syncer_spark.sources.dbapi import _InitFactory
+
+        path = self.path
+
+        def factory():
+            real = connect() if connect is not None else None
+
+            class Cur:
+                def __init__(self):
+                    self.cur = real.cursor() if real is not None else None
+
+                def execute(self, sql, *args):
+                    with open(path, "a") as f:
+                        f.write(f"{os.getpid()}\x1f{sql}\n\x1e\n")
+                    if self.cur is not None:
+                        return self.cur.execute(sql, *args)
+
+                def __getattr__(self, name):  # fetchall & co.
+                    return getattr(self.cur, name)
+
+            class Conn:
+                def cursor(self):
+                    return Cur()
+
+                def commit(self):
+                    if real is not None:
+                        real.commit()
+
+                def close(self):
+                    if real is not None:
+                        real.close()
+
+            return Conn()
+
+        if session_init:
+            return _InitFactory(factory, session_init)
+        return factory
+
+    def recorded(self) -> list[tuple[int, str]]:
+        """``(pid, statement)`` for every statement executed so far, in
+        execution order."""
+        if not os.path.exists(self.path):
+            return []
+        with open(self.path) as f:
+            records = [r for r in f.read().split("\n\x1e\n") if r]
+        return [(int(pid), sql) for pid, sql in
+                (r.split("\x1f", 1) for r in records)]
+
+
+@pytest.fixture()
+def recording_factory(tmp_path):
+    """``rec.factory(connect=None, session_init=())`` makes connection
+    factories that log each executed statement with the pid of the
+    process that ran it; ``rec.recorded()`` reads the log back."""
+    return _Recorder(str(tmp_path / f"recorded-{uuid.uuid4().hex}.log"))

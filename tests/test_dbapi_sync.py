@@ -3,8 +3,8 @@
 The reference's core scenario (Synchronizer.php:34-84 planning +
 :193-230 per-table hot path) driven on a real on-disk SQL engine:
 sqlite3 stands in for MySQL (no server/driver jar in this sandbox),
-reached through the same DBAPI connection-factory contract the
-distributed sinks use. Every plan action is exercised:
+reached through the same DBAPI connection-factory contract the sinks
+use. Every plan action is exercised:
 
 * excess slave table            -> DROP (live DDL)
 * missing slave table           -> FULL_COPY (CREATE + distributed INSERT)
@@ -260,3 +260,32 @@ def test_keyed_fetch_error_cleans_spill_and_propagates(spark, tmp_path):
         ex._stream_keyed_fetch("orders", miss, ["o_orderkey"])
     after = set(glob.glob(tempfile.gettempdir() + "/syncer_fetch_*"))
     assert after - before == set()  # spill dir removed on the error path
+
+
+def test_multi_chunk_delta_converges_in_one_sync(spark, shared_dbs,
+                                                 recording_factory):
+    """chunk_size=7: the driver-side sinks split a 39-delete, 65-insert
+    delta into 7-row statements, run every excess-key DELETE before the
+    first INSERT, and converge in one sync."""
+    mpath, spath = shared_dbs
+    master = DBAPICatalog(spark, _factory(mpath))
+    slave = DBAPICatalog(spark, recording_factory.factory(_factory(spath)))
+    report = sync(master, slave, SyncConfig(chunk_size=7))
+    assert report.ok, [r.error for r in report.results]
+    orders = {r.table: r for r in report.results}["orders"]
+    assert (orders.inserted, orders.deleted) == (65, 39)
+    assert _dump(mpath, "orders", "o_orderkey") == _dump(
+        spath, "orders", "o_orderkey"
+    )
+    dml = [sql for _, sql in recording_factory.recorded()
+           if sql.startswith(('DELETE FROM "orders"', 'INSERT INTO "orders"'))]
+    inserts = [s for s in dml if s.startswith("INSERT")]
+    assert len(inserts) == -(-65 // 7)
+    assert all(s.count("),(") + 1 <= 7 for s in inserts)
+    first_insert = dml.index(inserts[0])
+    # the excess-key chunks, then the first chunk's replace DELETE
+    assert first_insert == -(-39 // 7) + 1
+    excess = [i for i, s in enumerate(dml)
+              if any(f"({10_000 + k})" in s for k in range(5))]
+    assert excess and max(excess) < first_insert
+    assert all(r.status == "noop" for r in sync(master, slave).results)

@@ -8,9 +8,10 @@ for the connection-factory path — the same factory contract the
 executors use (sinks/jdbc.py:118-213); only the dialect knobs differ
 (double-quote idents, no backslash escapes).
 
-foreachPartition really runs these statements from executor-side Python
-workers against the on-disk DB — this is the distributed write path,
-not a driver-side shortcut.
+The statements really run against the on-disk DB: the delta sinks
+(apply_deletes, apply_replace) from the driver over one connection, the
+full-copy sink (apply_inserts) from executor-side Python workers via
+foreachPartition.
 """
 
 import sqlite3

@@ -7,26 +7,25 @@ MySQL slave: multi-row INSERT with NULL/quote/backslash payloads
 delete-before-insert REPLACE ordering (:599-627), session-init startup
 statements on every connection (SynchronizerFactory.php:16-19,
 DatabaseConnection.php:31-39), and CREATE TABLE emission for a
-non-MySQL master. The recorded-connection tests run the REAL
-distributed sink path (foreachPartition from executor workers).
+non-MySQL master. The recorded-connection tests run the REAL sink
+paths: a delta streamed through the driver's one connection, and a full
+copy through ``foreachPartition`` on executor workers.
 """
 
 import datetime
+import os
 
 import pytest
 from pyspark.sql import types as T
 
 from mysql_syncer_spark.sinks.jdbc import (
+    apply_inserts,
     apply_replace,
     delete_sql,
     insert_sql,
     sql_literal,
 )
-from mysql_syncer_spark.sources.dbapi import (
-    MYSQL_SESSION_INIT,
-    MySQLCatalog,
-    _InitFactory,
-)
+from mysql_syncer_spark.sources.dbapi import MYSQL_SESSION_INIT, MySQLCatalog
 
 
 # ---------------------------------------------------------------------
@@ -130,76 +129,49 @@ def test_session_init_default_is_reference_startup():
 
 # ---------------------------------------------------------------------
 # recorded-connection goldens: REPLACE ordering + session init through
-# the real distributed sink path
+# the real sink paths
 # ---------------------------------------------------------------------
 
-def _recording_factory(path, statements=()):
-    """Factory whose connections append every executed statement to
-    ``path`` — defined as a closure so cloudpickle ships it by value to
-    executor workers."""
-
-    def factory():
-        class Cur:
-            def execute(self, sql):
-                with open(path, "a") as f:
-                    f.write(sql + "\n\x1e\n")
-
-        class Conn:
-            def cursor(self):
-                return Cur()
-
-            def commit(self):
-                pass
-
-            def close(self):
-                pass
-
-        return Conn()
-
-    if statements:
-        return _InitFactory(factory, statements)
-    return factory
-
-
-def _recorded(path):
-    with open(path) as f:
-        return [s for s in f.read().split("\n\x1e\n") if s]
-
-
-def test_replace_orders_delete_before_insert(spark, tmp_path):
+def test_replace_orders_delete_before_insert(spark, recording_factory):
     """apply_replace against a MySQL-dialect target: per chunk, the
     tuple-IN DELETE of the incoming PKs executes BEFORE the multi-row
     INSERT (the partition-move guard, Synchronizer.php:496-517)."""
-    log = str(tmp_path / "sql.log")
     rows = spark.createDataFrame(
         [(1, "new'"), (2, "v\\2")], "id INT, v STRING"
     ).coalesce(1)
     apply_replace(
-        rows, "t", ["id"], _recording_factory(log),
+        rows, "t", ["id"], recording_factory.factory(),
         quote="`", backslash_escapes=True,
     )
-    stmts = _recorded(log)
+    stmts = [sql for _, sql in recording_factory.recorded()]
     assert stmts == [
         "DELETE FROM `t` WHERE (`id`) IN ((1),(2))",
         "INSERT INTO `t` (`id`, `v`) VALUES (1, 'new'''),(2, 'v\\\\2')",
     ]
 
 
-def test_session_init_runs_on_every_connection(spark, tmp_path):
+def test_session_init_runs_on_every_connection(spark, recording_factory):
     """The reference's startup queries run at the top of EVERY
-    connection — driver-side and executor-side alike."""
-    log = str(tmp_path / "sql.log")
-    factory = _recording_factory(log, MYSQL_SESSION_INIT)
+    connection — the driver's delta connection and the full copy's
+    executor-side ones alike."""
+    factory = recording_factory.factory(session_init=MYSQL_SESSION_INIT)
     rows = spark.createDataFrame(
         [(1, "a")], "id INT, v STRING"
     ).coalesce(1)
     apply_replace(rows, "t", ["id"], factory,
                   quote="`", backslash_escapes=True)
-    stmts = _recorded(log)
+    apply_inserts(rows, "u", factory, quote="`", backslash_escapes=True)
+    recorded = recording_factory.recorded()
+    stmts = [sql for _, sql in recorded]
     assert stmts[0] == "SET group_concat_max_len = 18446744073709547520"
     assert stmts[1] == "SET FOREIGN_KEY_CHECKS=0"
     assert stmts[2].startswith("DELETE FROM `t` ")
     assert stmts[3].startswith("INSERT INTO `t` ")
+    assert stmts[4:] == [*MYSQL_SESSION_INIT,
+                         "INSERT INTO `u` (`id`, `v`) VALUES (1, 'a')"]
+    # the delta ran in the driver, the full copy in a worker
+    assert {pid for pid, _ in recorded[:4]} == {os.getpid()}
+    assert os.getpid() not in {pid for pid, _ in recorded[4:]}
 
 
 # ---------------------------------------------------------------------

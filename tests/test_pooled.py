@@ -10,7 +10,9 @@ from functools import partial
 import pytest
 
 from mysql_syncer_spark.digest import digests_equal
+from mysql_syncer_spark.executor import ParquetSyncExecutor, sync
 from mysql_syncer_spark.pooled import run_pooled
+from mysql_syncer_spark.sources.catalog import ParquetCatalog
 
 PROP = "mysql_syncer_spark.test.pooled"
 
@@ -80,3 +82,29 @@ def test_digest_gate_jobs_carry_the_callers_job_group(orders, jobs_in_group):
         assert digests_equal(orders, orders)
     # one scalar-agg job per side, both launched from pooled threads
     assert len(jobs) >= 2
+
+
+@pytest.mark.parametrize("entry", ["sync", "run_single"])
+def test_sync_keeps_the_callers_fair_pool(spark, tmp_path, entry):
+    """DDL units and run_single run on the caller's own thread: a unit
+    sets its own FAIR pool there and must hand the caller's back."""
+    pool = "spark.scheduler.pool"
+    df = spark.createDataFrame([(1, "x")], "k long, v string")
+    df.write.parquet(str(tmp_path / "m" / "a.parquet"))
+    df.write.parquet(str(tmp_path / "s" / "extra.parquet"))
+    master = ParquetCatalog(spark, str(tmp_path / "m"))
+    slave = ParquetCatalog(spark, str(tmp_path / "s"))
+    sc = spark.sparkContext
+    sc.setLocalProperty(pool, "etl")
+    try:
+        if entry == "sync":
+            report = sync(master, slave)
+        else:
+            report = ParquetSyncExecutor(master, slave).run_single("a")
+        after = sc.getLocalProperty(pool)
+    finally:
+        sc.setLocalProperty(pool, None)
+    assert report.ok, [r.error for r in report.results]
+    want = ["drop", "full_copy"] if entry == "sync" else ["full_copy"]
+    assert sorted(r.action for r in report.results) == want
+    assert after == "etl"

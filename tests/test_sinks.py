@@ -145,3 +145,24 @@ def test_changelog_path_records_sync_deltas(spark, tmp_path):
     )
     assert spark.read.parquet(clog).count() == 24  # both runs recorded
     assert spark.read.parquet(str(s / "t.parquet")).count() == 60
+
+
+@pytest.mark.parametrize("n,c", [(100, 30), (7, 1000), (0, 10)])
+def test_stream_rows_runs_one_job_per_chunk(spark, jobs_in_group, n, c):
+    """With the row count, stream_rows coalesces a 32-partition frame to
+    ceil(n / c) partitions (at least one) and so starts that many jobs;
+    every row arrives exactly once, with or without the count."""
+    import math
+
+    from mysql_syncer_spark.sinks.jdbc import stream_rows
+
+    df = spark.range(0, n, numPartitions=32).cache()
+    try:
+        df.count()
+        with jobs_in_group() as jobs:
+            got = [r.id for r in stream_rows(df, rows=n, chunk_size=c)]
+        assert len(jobs) == max(1, math.ceil(n / c))
+        assert sorted(got) == list(range(n))
+        assert sorted(r.id for r in stream_rows(df)) == list(range(n))
+    finally:
+        df.unpersist()

@@ -260,3 +260,34 @@ def test_statement_log_and_changelog_compose(spark, dbs, tmp_path):
     with sqlite3.connect(spath) as conn:
         StatementLog.replay(log, conn)
     assert _dump_all(spath) == _dump_all(mpath)
+
+
+def test_log_is_exactly_the_executed_delta(spark, dbs, tmp_path,
+                                           recording_factory):
+    """A real sync with a statement log: for every delta table, the DML
+    the driver executed on the slave is, byte for byte, the log's
+    delta block, and all of it ran in the driver process."""
+    import os
+    import re
+
+    mpath, spath = dbs
+    log = str(tmp_path / "queries.sql")
+    slave = DBAPICatalog(spark, recording_factory.factory(_factory(spath)))
+    rep = sync(
+        DBAPICatalog(spark, _factory(mpath)), slave,
+        SyncConfig(log_statements=log, chunk_size=16, max_parallel_tables=2),
+    )
+    assert rep.ok, [r.error for r in rep.results if r.error]
+    assert _dump_all(spath) == _dump_all(mpath)
+    text = open(log).read()
+    tables = re.findall(r"^-- delta (\w+)$", text, re.M)
+    assert tables == ["orders"]
+    for table in tables:
+        ran = [(pid, sql) for pid, sql in recording_factory.recorded()
+               if sql.startswith((f'DELETE FROM "{table}" ',
+                                  f'INSERT INTO "{table}" '))]
+        assert len(ran) > 4  # several chunks of each statement kind
+        assert {pid for pid, _ in ran} == {os.getpid()}
+        block = f"-- delta {table}\n" + "".join(sql + ";\n" for _, sql in ran)
+        rest = text[text.index(block) + len(block):]
+        assert rest == "" or rest.startswith("-- "), table
