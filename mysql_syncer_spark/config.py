@@ -10,21 +10,63 @@ TableHandle that carries the PK metadata Spark doesn't have natively.
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass, field
-from typing import Sequence
+from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 
-@dataclass(frozen=True)
 class TableHandle:
     """A DataFrame + the relational metadata Spark lacks (PK, partition
-    column) — SURVEY.md §1 'Table' row."""
+    column) — SURVEY.md §1 'Table' row.
 
-    name: str
-    df: DataFrame
-    pk_cols: tuple[str, ...] = ()
-    partition_col: str | None = None
+    The DataFrame is either given (``df=``, the file and JDBC catalogs)
+    or built on first access of :attr:`df` by ``build()``, at most once
+    per handle even under concurrent readers. A lazy handle carries its
+    ``schema`` up front, so planning never builds a DataFrame.
+
+    ``rows`` is the driver-held row list a DBAPI handle was fetched as
+    (``None`` for every other catalog). The digest gate compares two
+    handles' rows in the driver (``digest.digests_equal``) and builds no
+    DataFrame for a table that is unchanged; that driver compare may
+    never call equal what the Spark gate over the built frames calls
+    different.
+    """
+
+    def __init__(
+        self,
+        name: str,
+        df: DataFrame | None = None,
+        pk_cols: Sequence[str] = (),
+        partition_col: str | None = None,
+        *,
+        schema: T.StructType | None = None,
+        rows: list[tuple] | None = None,
+        build: Callable[[], DataFrame] | None = None,
+    ):
+        self.name = name
+        self.pk_cols = tuple(pk_cols)
+        self.partition_col = partition_col
+        self.rows = rows
+        self._df = df
+        self._schema = schema
+        self._build = build
+        self._lock = threading.Lock()
+
+    @property
+    def df(self) -> DataFrame:
+        if self._df is None:
+            with self._lock:
+                if self._df is None:
+                    self._df = self._build()
+        return self._df
+
+    @property
+    def schema(self) -> T.StructType:
+        """The table's schema; never builds the DataFrame."""
+        return self._schema if self._schema is not None else self.df.schema
 
     @property
     def has_pk(self) -> bool:

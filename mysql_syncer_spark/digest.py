@@ -30,13 +30,16 @@ more deterministic):
 
 from __future__ import annotations
 
+from collections import Counter
 from functools import partial
 from typing import Mapping, Sequence
 
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from mysql_syncer_spark.canon import row_hash_col
+from mysql_syncer_spark.config import TableHandle
 from mysql_syncer_spark.pooled import run_pooled
 
 #: first 15 hex chars of an md5 -> fits a signed 64-bit int (60 bits)
@@ -110,8 +113,6 @@ def fast_hash_sql(df: DataFrame, cols: Sequence[str] | None = None) -> str:
     * MapType is not hashable (and map iteration order is undefined
       anyway) — rendered via to_json first.
     """
-    from pyspark.sql import types as T
-
     by_name = {f.name: f.dataType for f in df.schema.fields}
     names = list(cols) if cols is not None else df.schema.fieldNames()
     nulls = ", ".join(f"isnull(`{n}`)" for n in names)
@@ -158,12 +159,67 @@ def _side_digest(df: DataFrame, cols: Sequence[str]) -> tuple:
     return (r["hash_sum"], r["hash_xor"], r["row_count"])
 
 
-def digests_equal(a: DataFrame, b: DataFrame,
-                  cols: Sequence[str] | None = None) -> bool:
+#: Spark type -> the Python value types the driver gate compares for
+#: it. ``==`` on these is exact and agrees with the built frame: an int
+#: equal to a float is that double (sqlite's NUMERIC affinity stores
+#: ``1.0`` as ``1`` next to ``2.5``), and a boolean column holds 0/1.
+_DRIVER_TYPES: dict = {
+    T.LongType(): {int},
+    T.DoubleType(): {int, float},
+    T.StringType(): {str},
+    T.BinaryType(): {bytes},
+    T.BooleanType(): {int, bool},
+}
+
+
+def _column_types(values) -> set:
+    return set(map(type, values)) - {type(None)}
+
+
+def _driver_verdict(a: TableHandle, b: TableHandle) -> bool | None:
+    """The gate over two handles' driver-held rows: True (equal),
+    False (different) or None (undecided: run the Spark gate).
+
+    Equal needs equal row counts, the same set of value types per
+    column on both sides — one type, or int and float in a double
+    column, each one the column's Spark type accepts (boolean values
+    0/1 only) — and equal row multisets. A type mismatch, or a value of
+    a type outside the column's (an unhashable one included), is
+    undecided. Different is final: the row diff that follows is
+    authoritative, so a rare "different" the Spark gate would call
+    equal only costs an empty diff."""
+    ra, rb = a.rows, b.rows
+    if len(ra) != len(rb):
+        return False
+    for f, ca, cb in zip(a.schema.fields, zip(*ra), zip(*rb)):
+        types = _column_types(ca)
+        if (types != _column_types(cb)
+                or not types <= _DRIVER_TYPES.get(f.dataType, set())
+                or len(types) > 1 and types != {int, float}):
+            return None
+        if (isinstance(f.dataType, T.BooleanType)
+                and not set(ca) | set(cb) <= {0, 1, None}):
+            return None
+    return Counter(ra) == Counter(rb)
+
+
+def digests_equal(a, b, cols: Sequence[str] | None = None) -> bool:
     """Digest short-circuit (Synchronizer.php:204-225): True ⇒ skip all
-    row-level work. Uses the fast xxhash64 digest (one cheap scan per
-    side); column order is pinned to ``a``'s so both sides hash the same
-    column sequence.
+    row-level work. ``a`` and ``b`` are DataFrames or table handles
+    (:class:`~mysql_syncer_spark.config.TableHandle`).
+
+    Two handles that both hold driver rows (two DBAPI catalogs) with
+    equal schemas, and no ``cols``, are compared in the driver
+    (:func:`_driver_verdict`): an unchanged table costs a row-multiset
+    compare and builds no DataFrame. Strictness rule: the driver
+    compare never says equal where the Spark gate over the built frames
+    says different. Python's ``hash`` is salted per process; a
+    ``Counter`` keeps no hash, so nothing of it outlives the call.
+
+    Every other case (an undecided driver compare included) runs the
+    Spark gate on the frames: the fast xxhash64 digest, one cheap scan
+    per side, column order pinned to ``a``'s so both sides hash the
+    same column sequence.
 
     The two sides run as CONCURRENT jobs on two driver threads: a noop
     re-sync is bounded by query *planning* latency, not scan time (the
@@ -178,6 +234,14 @@ def digests_equal(a: DataFrame, b: DataFrame,
     carry the calling thread's local properties and job tags — a unit's
     FAIR pool ``sync-<table>`` and the caller's job group.
     """
+    handles = isinstance(a, TableHandle) and isinstance(b, TableHandle)
+    if (handles and cols is None and a.rows is not None
+            and b.rows is not None and a.schema == b.schema):
+        verdict = _driver_verdict(a, b)
+        if verdict is not None:
+            return verdict
+    if handles:
+        a, b = a.df, b.df
     if cols is None:
         if set(a.columns) != set(b.columns):
             return False  # schema drift can never digest-match
@@ -286,8 +350,6 @@ def _mysql_text_col(name: str, dtype, ts_fsp: int = 0) -> "F.Column":
     is numeric: map BIT to an integer column on the Spark side and
     pass it via ``bit_cols`` server-side (wrapped ``CAST(c+0 AS
     UNSIGNED)``)."""
-    from pyspark.sql import types as T
-
     c = F.col(name)
     if isinstance(dtype, (T.StringType, T.CharType, T.VarcharType)):
         return c

@@ -139,7 +139,7 @@ class ParquetSyncExecutor:
         must cost two scans, not a rewrite."""
         m = self.master.table(unit.table)
         s = self.slave.table(unit.table)
-        if digests_equal(m.df, s.df):
+        if digests_equal(m, s):
             res.status = "noop"
             return
         if self.cfg.dry_run and self._stmt_log is None:
@@ -163,8 +163,9 @@ class ParquetSyncExecutor:
         m = self.master.table(unit.table)
         s = self.slave.table(unit.table)
         # digest short-circuit (Synchronizer.php:204-225): one cheap
-        # commutative-digest job per side; equal ⇒ zero row work.
-        if digests_equal(m.df, s.df):
+        # commutative-digest job per side, or a driver-side row compare
+        # for two DBAPI handles; equal ⇒ zero row work.
+        if digests_equal(m, s):
             res.status = "noop"
             return
         if unit.action == Action.DIFF_SYNC_PARTITIONED and unit.partition_col:
@@ -578,7 +579,7 @@ class DBAPISyncExecutor(ParquetSyncExecutor):
         (Synchronizer.php:330-354) without the chunked LIMIT/OFFSET walk."""
         m = self.master.table(unit.table)
         create = self.slave.create_table_sql(
-            unit.table, m.df.schema, m.pk_cols
+            unit.table, m.schema, m.pk_cols
         )
         if self._stmt_log is not None:
             self._stmt_log.log_full_copy(unit.table, create, m.df)
@@ -675,7 +676,7 @@ class JDBCSyncExecutor(ParquetSyncExecutor):
     def _full_copy(self, unit: SyncUnit, res: UnitResult) -> None:
         m = self.master.table(unit.table)
         create = self.slave.create_table_sql(
-            unit.table, m.df.schema, m.pk_cols
+            unit.table, m.schema, m.pk_cols
         )
         if self._stmt_log is not None:
             self._stmt_log.log_full_copy(unit.table, create, m.df)

@@ -16,7 +16,10 @@ handle costs a file listing and one footer read, the schema handed to
 ``load()`` so that Spark runs no job for it; only a table whose footer
 cannot be mapped exactly (``FileCatalog._footer_schema``), and every
 other file format, pays a schema-inference job. A DBAPI catalog fetches
-every row through the driver. The planner
+every row through the driver but builds no DataFrame: its handle carries
+the schema from the table's column info, and the DataFrame is built from
+the fetched rows only if a unit needs it (two DBAPI sides gate on the
+rows themselves, ``digest.digests_equal``). The planner
 resolves all ``2 × |shared|`` handles concurrently on
 ``SyncConfig.max_parallel_tables`` pooled threads before the schema loop,
 and the catalogs memoize them (``Catalog.invalidate`` clears the memo),
@@ -118,7 +121,7 @@ def plan_sync(
         cfg.max_parallel_tables,
     )
     for t, mh, sh in zip(shared, handles[0::2], handles[1::2]):
-        if not schemas_match(mh.df.schema, sh.df.schema):
+        if not schemas_match(mh.schema, sh.schema):
             units.append(SyncUnit(t, Action.FULL_COPY, "schema drift"))
             continue
         if not mh.has_pk:

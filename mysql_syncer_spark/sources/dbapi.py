@@ -5,11 +5,19 @@ The reference's core scenario is MySQL↔MySQL (DatabaseConnection.php:
 sources.catalog.JDBCCatalog` (partitioned server-side scans). This
 module is the *jar-free* counterpart: any DBAPI connection factory
 (sqlite3, MySQLdb, psycopg) becomes a syncable catalog, with reads
-fetched through ONE driver-side connection into ``createDataFrame``.
-A table is fetched once per sync, not once per ``table()`` call: the
-handle is memoized (``Catalog._memo``) until ``invalidate()``, which
-every sync run calls first and the executor calls after every write, so
-the planner's fetch is the one the executor's unit diffs.
+fetched through ONE driver-side connection. A table is fetched once per
+sync, not once per ``table()`` call: the handle is memoized
+(``Catalog._memo``) until ``invalidate()``, which every sync run calls
+first and the executor calls after every write, so the planner's fetch
+is the one the executor's unit uses. The handle keeps the fetched rows
+and builds its DataFrame from them (``_rows_to_df``) on first use: when
+both sides are DBAPI catalogs, the digest gate compares the rows in the
+driver, so an unchanged table never becomes a DataFrame.
+
+Row fetches run one at a time, process-wide (``_FETCH_LOCK``): sqlite3
+releases the GIL around every row step, so concurrent fetches from the
+planner's pooled threads convoy on it: six pooled resolves take about
+five times as long without the lock (measured at ``_FETCH_LOCK``).
 
 That read shape is deliberate and documented: driver-side fetch is
 correct at integration/smoke scale (and is what lets this sandbox run a
@@ -27,6 +35,8 @@ hooks are overridable for other engines.
 
 from __future__ import annotations
 
+import datetime as _dt
+import threading
 from collections.abc import Callable, Mapping, Sequence
 
 from pyspark.sql import SparkSession
@@ -78,6 +88,47 @@ _DECL_PREFIXES: tuple[tuple[str, T.DataType], ...] = (
     ("DATE", T.StringType()),
     ("BLOB", T.BinaryType()),
 )
+
+
+#: One driver-side row fetch at a time, process-wide: sqlite3 releases
+#: the GIL around every row step, so concurrent ``fetchall`` calls
+#: convoy on it. The six table resolves of a ``sql_slave`` plan (3
+#: tables, 37k rows) on 8 pooled threads take 0.49-0.70 s without this
+#: lock and 0.10-0.15 s with it, against 0.08-0.11 s one after another
+#: (4 cores). ``execute``, ``createDataFrame`` and Spark work still
+#: overlap; a buffered MySQL/psycopg cursor reads its result inside
+#: ``execute``, so for those the lock only covers returning a list.
+_FETCH_LOCK = threading.Lock()
+
+
+def _typed_column(field: T.StructField, values: Sequence) -> list:
+    """One fetched column as values its Spark type accepts (see
+    :meth:`DBAPICatalog._rows_to_df`)."""
+    t = field.dataType
+    if isinstance(t, T.TimestampType):
+        utc = _dt.timezone.utc
+        return [
+            v.replace(tzinfo=utc)
+            if isinstance(v, _dt.datetime) and v.tzinfo is None else v
+            for v in values
+        ]
+    if isinstance(t, T.BooleanType):
+        return [_as_bool(field.name, v) for v in values]
+    if isinstance(t, T.DoubleType) and int in set(map(type, values)):
+        return [float(v) if type(v) is int else v for v in values]
+    return list(values)
+
+
+def _as_bool(column: str, v):
+    """A BOOLEAN column's value: sqlite and MySQL (``TINYINT(1)``) store
+    booleans as the integers 0 and 1."""
+    if v is None:
+        return None
+    if isinstance(v, int) and v in (0, 1):
+        return bool(v)
+    raise ValueError(
+        f"column {column!r}: {v!r} is not a boolean (0, 1, true or false)"
+    )
 
 
 def _spark_type(decltype: str) -> T.DataType:
@@ -169,7 +220,8 @@ class DBAPICatalog(Catalog):
         exist on MySQL/postgres connections)."""
         cur = conn.cursor()
         cur.execute(sql)
-        return cur.fetchall()
+        with _FETCH_LOCK:
+            return cur.fetchall()
 
     def _to_spark_type(self, decltype: str) -> T.DataType:
         """Declared column type → Spark type; dialect hook."""
@@ -195,49 +247,31 @@ class DBAPICatalog(Catalog):
         return self._memo(name, lambda: self._resolve(name))
 
     def _resolve(self, name: str) -> TableHandle:
-        """Every row of ``name`` through the driver into a DataFrame."""
+        """Every row of ``name`` through the driver, fetched once; the
+        handle builds its DataFrame from those rows on first use."""
         conn = self.connect_factory()
         try:
-            info = self._table_info(conn, name)
-            if not info:
-                raise ValueError(f"no such table: {name}")
-            cols = [c for c, _, _ in info]
-            schema = T.StructType(
-                [T.StructField(c, self._to_spark_type(d), True)
-                 for c, d, _ in info]
-            )
+            cols, pk, schema = self._shape(conn, name)
             q = self.quote
             col_list = ", ".join(f"{q}{c}{q}" for c in cols)
             rows = self._run(conn, f"SELECT {col_list} FROM {q}{name}{q}")
         finally:
             conn.close()
-        pk = self.pk_map.get(name)
-        if pk is None:
-            by_ord = sorted(
-                ((o, c) for c, _, o in info if o > 0)
-            )
-            pk = tuple(c for _, c in by_ord)
-        df = self._rows_to_df(rows, schema)
         return TableHandle(
             name=name,
-            df=df,
-            pk_cols=tuple(pk),
+            pk_cols=pk,
             partition_col=self.partition_map.get(name),
+            schema=schema,
+            rows=rows,
+            build=lambda: self._rows_to_df(rows, schema),
         )
 
-    # -- server-side hash pushdown (SURVEY §4 row 2) -------------------
-
-    def table_meta(self, name: str):
-        """(columns, pk_cols, spark schema) WITHOUT fetching any rows —
-        the pushdown path must never pull the table to learn its shape."""
-        conn = self.connect_factory()
-        try:
-            info = self._table_info(conn, name)
-        finally:
-            conn.close()
+    def _shape(self, conn, name: str):
+        """(columns, pk_cols, spark schema) of ``name`` from
+        :meth:`_table_info`; ``pk_map`` overrides the declared key."""
+        info = self._table_info(conn, name)
         if not info:
             raise ValueError(f"no such table: {name}")
-        cols = [c for c, _, _ in info]
         schema = T.StructType(
             [T.StructField(c, self._to_spark_type(d), True)
              for c, d, _ in info]
@@ -247,7 +281,18 @@ class DBAPICatalog(Catalog):
             pk = tuple(
                 c for _, c in sorted((o, c) for c, _, o in info if o > 0)
             )
-        return cols, tuple(pk), schema
+        return [c for c, _, _ in info], tuple(pk), schema
+
+    # -- server-side hash pushdown (SURVEY §4 row 2) -------------------
+
+    def table_meta(self, name: str):
+        """(columns, pk_cols, spark schema) WITHOUT fetching any rows —
+        the pushdown path must never pull the table to learn its shape."""
+        conn = self.connect_factory()
+        try:
+            return self._shape(conn, name)
+        finally:
+            conn.close()
 
     def hash_pushdown_sql(
         self, name: str, columns: Sequence[str], pk_cols: Sequence[str]
@@ -310,41 +355,28 @@ class DBAPICatalog(Catalog):
         ``createDataFrame(list, schema)`` path — identical semantics,
         just slower.
 
-        Naive ``datetime`` values are normalized to UTC-aware BEFORE
-        either path runs: Arrow's ``to_arrow_schema`` pins tz=UTC while
-        Spark's pickle fallback (``TimestampType.toInternal``) uses
-        ``time.mktime`` — host-local TZ. Without the normalization the
-        two paths disagree by the host offset, and since path selection
-        is data-dependent one table's chunks could mix interpretations
-        and poison row hashes. The fallback triggers on Arrow
-        conversion errors (_ARROW_FALLBACK_ERRORS — type/value/
+        Every column is first typed by :func:`_typed_column`, before
+        either path runs, so both paths see the same values: naive
+        ``datetime`` values become UTC-aware (Arrow pins tz=UTC, the
+        pickle path would read host-local time, and a data-dependent
+        path choice must not change a row hash), ``BooleanType`` columns
+        take sqlite's and MySQL's ``0``/``1``, and ``DoubleType`` columns
+        take the ints sqlite's NUMERIC affinity stores (Arrow refuses an
+        int past 2^53, the pickle path any int). The fallback triggers
+        on Arrow conversion errors (_ARROW_FALLBACK_ERRORS — type/value/
         capacity/memory/not-implemented) and is logged when it engages;
-        Spark-side schema failures still raise."""
+        a value no column type accepts and Spark-side schema failures
+        still raise."""
         if not rows:
             return self.spark.createDataFrame([], schema)
-        import datetime as _dt
-
-        has_ts = any(
-            isinstance(f.dataType, T.TimestampType) for f in schema.fields
-        )
-        if has_ts:
-            def _utc(v):
-                if isinstance(v, _dt.datetime) and v.tzinfo is None:
-                    return v.replace(tzinfo=_dt.timezone.utc)
-                return v
-
-            rows = [tuple(_utc(v) for v in r) for r in rows]
+        cols = [_typed_column(f, c) for f, c in zip(schema.fields, zip(*rows))]
         try:
             import pyarrow as pa
             from pyspark.sql.pandas.types import to_arrow_schema
 
             aschema = to_arrow_schema(schema)
-            cols = list(zip(*rows))
             tbl = pa.Table.from_arrays(
-                [
-                    pa.array(list(c), type=f.type)
-                    for c, f in zip(cols, aschema)
-                ],
+                [pa.array(c, type=f.type) for c, f in zip(cols, aschema)],
                 schema=aschema,
             )
             return self.spark.createDataFrame(tbl, schema)
@@ -362,9 +394,7 @@ class DBAPICatalog(Catalog):
             logging.getLogger(__name__).warning(
                 "Arrow row transfer fell back to pickle path: %s", e
             )
-            return self.spark.createDataFrame(
-                [tuple(r) for r in rows], schema
-            )
+            return self.spark.createDataFrame(list(zip(*cols)), schema)
 
     def fetch_rows(
         self,

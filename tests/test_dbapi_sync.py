@@ -167,38 +167,104 @@ def shared_dbs(dbs):
 
 
 def test_sync_fetches_each_table_once_per_side(spark, shared_dbs,
-                                               monkeypatch):
+                                               monkeypatch,
+                                               recording_factory):
     """The planner's driver-side fetch is the one the executor's unit
-    diffs: one sync pulls each table's rows through the driver once per
-    side, converging or noop."""
+    uses: one sync runs each table's data SELECT once per side,
+    converging or noop. A DataFrame is built from those rows only for a
+    table the sync diffs or copies: ``orders`` on both sides and
+    ``tags`` on the master (its full copy reads the master) when
+    converging, nothing in the noop re-sync."""
+    import re
+
     mpath, spath = shared_dbs
-    master = DBAPICatalog(spark, _factory(mpath))
-    slave = DBAPICatalog(spark, _factory(spath))
-    fetches = Counter()
+    slave_rec = type(recording_factory)(spath + ".log")
+    master = DBAPICatalog(spark, recording_factory.factory(_factory(mpath)))
+    slave = DBAPICatalog(spark, slave_rec.factory(_factory(spath)))
+    builds = Counter()
     rows_to_df = DBAPICatalog._rows_to_df
 
     def counting(self, rows, schema):
         side = "master" if self is master else "slave"
-        fetches[side, schema.fieldNames()[0]] += 1
+        builds[side, schema.fieldNames()[0]] += 1
         return rows_to_df(self, rows, schema)
 
     monkeypatch.setattr(DBAPICatalog, "_rows_to_df", counting)
-    once = Counter({
-        (side, col): 1
-        for side in ("master", "slave") for col in ("o_orderkey", "label")
-    })
+    data_select = re.compile(r'SELECT "[^(]* FROM "(\w+)"$')
+
+    def selects(rec, seen):
+        tables = [m.group(1) for _, sql in rec.recorded()[seen:]
+                  if (m := data_select.match(sql))]
+        return Counter(tables), len(rec.recorded())
+
+    once = Counter({"orders": 1, "tags": 1})
 
     report = sync(master, slave)
     assert report.ok, [r.error for r in report.results]
     assert {r.table: r.status for r in report.results} == {
         "orders": "ok", "tags": "ok",
     }
-    assert fetches == once
+    (m_sel, m_seen), (s_sel, s_seen) = (
+        selects(recording_factory, 0), selects(slave_rec, 0))
+    assert (m_sel, s_sel) == (once, once)
+    assert builds == Counter({("master", "o_orderkey"): 1,
+                              ("slave", "o_orderkey"): 1,
+                              ("master", "label"): 1})
 
-    fetches.clear()
+    builds.clear()
     report2 = sync(master, slave)
     assert all(r.status == "noop" for r in report2.results), report2.results
-    assert fetches == once
+    assert (selects(recording_factory, m_seen)[0],
+            selects(slave_rec, s_seen)[0]) == (once, once)
+    assert builds == Counter()
+
+
+FLAGS_DDL = "CREATE TABLE flags (id INTEGER PRIMARY KEY, ok BOOLEAN)"
+
+
+def _flags_dbs(tmp_path, master_rows, slave_rows):
+    paths = str(tmp_path / "m.db"), str(tmp_path / "s.db")
+    for path, rows in zip(paths, (master_rows, slave_rows)):
+        with sqlite3.connect(path) as conn:
+            conn.execute(FLAGS_DDL)
+            conn.executemany("INSERT INTO flags VALUES (?, ?)", rows)
+            conn.execute("CREATE TABLE other (id INTEGER PRIMARY KEY, v TEXT)")
+            if path == paths[0]:
+                conn.execute("INSERT INTO other VALUES (1, 'a')")
+    return paths
+
+
+def test_boolean_column_converges_then_noops(spark, tmp_path):
+    """sqlite stores BOOLEAN values as the integers 0/1; they read back
+    as booleans and sync like any other column."""
+    mpath, spath = _flags_dbs(
+        tmp_path,
+        [(k, (None, 0, 1, True, False)[k % 5]) for k in range(20)],
+        [(k, 1) for k in range(3, 25)],
+    )
+    master = DBAPICatalog(spark, _factory(mpath))
+    slave = DBAPICatalog(spark, _factory(spath))
+    report = sync(master, slave)
+    assert report.ok, [r.error for r in report.results]
+    assert {r.table: r.status for r in report.results} == {
+        "flags": "ok", "other": "ok"}
+    assert _dump(mpath, "flags", "id") == _dump(spath, "flags", "id")
+    assert master.table("flags").df.where("ok").count() == 8
+    report2 = sync(master, slave)
+    assert all(r.status == "noop" for r in report2.results), report2.results
+
+
+def test_boolean_value_out_of_range_is_a_unit_error(spark, tmp_path):
+    """A BOOLEAN cell holding 2 fails its own unit, naming the column;
+    the other units still finish."""
+    mpath, spath = _flags_dbs(tmp_path, [(1, 1), (2, 0)], [(1, 2), (2, 0)])
+    report = sync(DBAPICatalog(spark, _factory(mpath)),
+                  DBAPICatalog(spark, _factory(spath)))
+    by_table = {r.table: r for r in report.results}
+    assert by_table["flags"].status == "error"
+    assert "column 'ok': 2 is not a boolean" in by_table["flags"].error
+    assert (by_table["other"].status, by_table["other"].inserted) == ("ok", 1)
+    assert _dump(mpath, "other", "id") == _dump(spath, "other", "id")
 
 
 def test_external_master_write_between_syncs_is_picked_up(spark, dbs):
