@@ -319,7 +319,7 @@ def run_skew_torture() -> None:
       digest is a combinable groupBy (map-side partial agg absorbs
       the hot value before the shuffle) — the claim to demonstrate is
       wall-time parity with the uniform twin, not a skew-split.
-    * lane B (join_mode='hash'): 1/3 of rows share IDENTICAL content,
+    * lane B (diff mode='hash'): 1/3 of rows share IDENTICAL content,
       so the content-hash join key itself floods. This is the lane
       where AQE's skew-join split must ENGAGE — plan-gated by
       `skew=true` on the executed SortMergeJoin.
@@ -375,7 +375,7 @@ def run_skew_torture() -> None:
 
     def base_flood(flooded: bool):
         # the hash-mode adversary: 1/3 of rows are byte-IDENTICAL full
-        # rows (same pk, same content) — in join_mode='hash' the row
+        # rows (same pk, same content) — in diff mode='hash' the row
         # hash IS the join key (it covers the pk too, so merely
         # duplicated content with distinct pks never collides; full-row
         # duplicates are the only true flood, the no-PK-table shape)
@@ -635,7 +635,7 @@ def run_keyed_fetch() -> None:
     import tempfile
 
     from mysql_syncer_spark.config import SyncConfig
-    from mysql_syncer_spark.executor import DBAPISyncExecutor
+    from mysql_syncer_spark.executor import SyncExecutor
     from mysql_syncer_spark.sources.dbapi import DBAPICatalog
 
     spark = _session()
@@ -657,7 +657,7 @@ def run_keyed_fetch() -> None:
     miss.count()  # materialize the plan before timing
 
     def measure(workers: int, catalog: DBAPICatalog) -> float:
-        ex = DBAPISyncExecutor(
+        ex = SyncExecutor(
             catalog, catalog, SyncConfig(max_parallel_tables=workers)
         )
         best = None
@@ -699,7 +699,7 @@ def run_keyed_fetch() -> None:
 
 
 def run_jdbc_skew() -> None:
-    """Round-10 VERDICT item 7 — JDBCSyncExecutor partitioned diff-sync
+    """Round-10 VERDICT item 7 — Derby-slave partitioned diff-sync
     under partition imbalance, against a real JDBC database (embedded
     Derby): ONE partition value holds 50% of all rows (the skew-lane
     shape), the slave is perturbed inside BOTH the hot and a cold

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from mysql_syncer_spark.pin import pin
 
 from mysql_syncer_spark.config import SyncConfig
-from mysql_syncer_spark.executor import ParquetSyncExecutor, SyncReport
+from mysql_syncer_spark.executor import SyncExecutor, SyncReport
 from mysql_syncer_spark.plans.plan import plan_sync
 from mysql_syncer_spark.sources.catalog import ParquetCatalog, configure_session
 
@@ -76,8 +76,6 @@ def build_parser() -> argparse.ArgumentParser:
                        help="plan + count deltas, mutate nothing")
         p.add_argument("--parallel", type=int, default=8,
                        help="concurrent table syncs (1 = serial)")
-        p.add_argument("--join-mode", choices=("pk_hash", "hash"),
-                       default="pk_hash")
         p.add_argument("--cpus", default="*",
                        help="local[N] cores when the CLI owns the session")
         p.add_argument("--shuffle-partitions", type=int, default=32)
@@ -310,7 +308,6 @@ def _catalogs(spark, args) -> tuple[ParquetCatalog, ParquetCatalog, SyncConfig]:
         sync_shared_partitions=not args.no_shared_partitions,
         copy_tables_with_no_primary=not args.no_copy_no_pk,
         max_parallel_tables=args.parallel,
-        join_mode=args.join_mode,
         dry_run=args.dry_run,
     )
     master = ParquetCatalog(spark, args.master, pk_map=pk_map or None,
@@ -601,7 +598,7 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None,
         if args.command in ("index-build", "ingest", "index-compact"):
             return _run_index_command(spark, args, out)
         master, slave, cfg = _catalogs(spark, args)
-        ex = ParquetSyncExecutor(master, slave, cfg)
+        ex = SyncExecutor(master, slave, cfg)
         if args.command == "plan":
             for u in plan_sync(master, slave, cfg):
                 print(json.dumps({

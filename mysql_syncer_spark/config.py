@@ -94,8 +94,6 @@ class SyncConfig:
     chunk_size: int = 5000
     #: concurrent sync units (reference: ThreadWrapper.jar <cores>)
     max_parallel_tables: int = 8
-    #: 'hash' = reference-faithful content-set diff; 'pk_hash' = strict
-    join_mode: str = "pk_hash"
     #: write every planned mutation to a changelog instead of applying
     #: (generalizes LOG_QUERIES, settings.php.tmpl:25-30)
     dry_run: bool = False
@@ -124,8 +122,9 @@ class SyncConfig:
     #: the steady-state few-percent delta; a FIRST sync or a 100×
     #: delta belongs on the distributed paths (JDBC partitioned scan
     #: or parquet), which read the table with executor parallelism —
-    #: leave hash_pushdown off there, or use JDBCSyncExecutor whose
-    #: pushdown fetch stays server-side.
+    #: leave hash_pushdown off there, or use a JDBC master, whose
+    #: missing rows come from Spark's distributed JDBC scan instead of
+    #: driver-side point fetches.
     hash_pushdown: bool = False
     #: path of an ordered, REPLAYABLE SQL statement file (the
     #: reference's LOG_QUERIES query log, settings.php.tmpl:25-30, at
@@ -134,7 +133,7 @@ class SyncConfig:
     #: (Synchronizer.php:496-517), so replaying the file through a
     #: DBAPI connection reproduces the converged slave exactly.
     #: Combine with dry_run=True for a replayable preview that touches
-    #: nothing. SQL-slave executors only (DBAPI/JDBC).
+    #: nothing. SQL-backed slaves only (DBAPI/Derby catalogs).
     log_statements: str | None = None
     #: parquet dir for the STRUCTURED changelog (sinks/changelog.py):
     #: every computed row delta appends ``(op, table_name, pk json,

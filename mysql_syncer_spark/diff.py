@@ -9,12 +9,14 @@ hash join otherwise, with AQE skew handling for free.
 
 Two join modes (SURVEY.md §2.3 J7):
 
-* ``on="hash"`` (reference-faithful): set semantics on row *content* —
-  duplicate-content rows with different PKs share a hash and are treated
-  as one. This is exactly the reference's ``hash NOT IN (...)`` behavior.
-* ``on="pk_hash"`` (strict): a row is "same" only if PK *and* hash match —
-  catches content that moved between PKs. The mode the sync executor uses,
-  since it must produce per-PK actions anyway.
+* ``mode="hash"`` (reference-faithful): set semantics on the row hash —
+  exactly the reference's ``hash NOT IN (...)`` behavior. Rows that
+  duplicate content under different PKs share a hash only when
+  ``hash_cols`` leaves the PK out.
+* ``mode="pk_hash"`` (strict): a row is "same" only if PK *and* hash
+  match. The default, and the mode the sync executor uses: its hash
+  covers every column, PK included, so the two modes return the same
+  keys there (barring an md5 collision).
 """
 
 from __future__ import annotations

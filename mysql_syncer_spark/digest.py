@@ -123,26 +123,6 @@ def fast_hash_sql(df: DataFrame, cols: Sequence[str] | None = None) -> str:
     return f"xxhash64({vals}, xxhash64({nulls}))"
 
 
-def fast_row_hash_col(df: DataFrame, cols: Sequence[str] | None = None):
-    """Column form of :func:`fast_hash_sql` (same hash, same caveats)."""
-    return F.expr(fast_hash_sql(df, cols))
-
-
-def table_digest_fast(df: DataFrame, cols: Sequence[str] | None = None) -> Row:
-    """Commutative multiset digest over :func:`fast_row_hash_col`:
-    Row(hash_sum, hash_xor, row_count). Same shape as
-    :func:`table_digest_scalable` (map-side combinable, one scalar agg)
-    but the per-row hash skips the md5/canonicalization layer — this is
-    the digest the re-sync short-circuit runs, where oracle parity is
-    irrelevant and scan throughput is everything."""
-    h = fast_row_hash_col(df, cols).alias("h")
-    return df.select(h).agg(
-        F.sum(F.col("h").cast("decimal(38,0)")).alias("hash_sum"),
-        F.bit_xor("h").alias("hash_xor"),
-        F.count(F.lit(1)).alias("row_count"),
-    ).first()
-
-
 _DIGEST_AGG = (
     "sum(cast(h as decimal(38,0))) as hash_sum",
     "bit_xor(h) as hash_xor",
@@ -449,7 +429,7 @@ def table_digest_mysql_compat(
 
     This is a single-reducer exact digest (the ordered concatenation is
     inherently sequential — same as the MySQL server's own evaluation);
-    for engine-internal gating at scale use :func:`table_digest_fast`.
+    for engine-internal gating at scale use :func:`digests_equal`.
     """
     h = mysql_compat_row_hash_col(df, cols, ts_fsp=ts_fsp)
     ordered = F.array_sort(

@@ -1,10 +1,15 @@
 """Sync executor — applies a SyncPlan and reports what it did.
 
-Parquet ("file") mode is the primary path: mutations are expressed as
-pure-DataFrame rewrites (anti-join out deletes, union in inserts) and an
-atomic overwrite of the slave table. JDBC-mode deletes/inserts (the
-reference's chunked DELETE ... IN / multi-row INSERT,
-src/project/TableConnection.php:289-387) are in sinks/jdbc.py.
+One executor for every slave: it owns the control flow (statement log →
+dry run → write → invalidate) and leaves each write to the slave catalog
+that owns the storage, through ``drop_table`` / ``copy_table`` /
+``apply_changes`` (sources/catalog.py) — the reference's table
+connection owns its writes the same way (insertRows / deleteRows /
+replaceRows, TableConnection.php:289-387, :599-627). A file slave
+rewrites the table as a pure-DataFrame merge and swaps it in atomically;
+a DBAPI slave runs chunked DELETE/INSERT statements (sinks/jdbc.py); a
+Derby slave stages the delta's keys and deletes them in one server-side
+statement. A read-only slave fails per unit.
 
 Control flow per table mirrors the reference hot path
 (Synchronizer.php:193-230 / SURVEY.md §3.2):
@@ -20,7 +25,6 @@ try/except + a row in the report.
 
 from __future__ import annotations
 
-import os
 import shutil
 import time
 import traceback
@@ -31,12 +35,12 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import functions as F
 
 from mysql_syncer_spark.config import SyncConfig, TableHandle
-from mysql_syncer_spark.diff import apply_delta, diff_tables, rows_to_copy
+from mysql_syncer_spark.diff import diff_tables, rows_to_copy
 from mysql_syncer_spark.digest import digests_equal, differing_partitions
 from mysql_syncer_spark.plans.plan import Action, SyncPlan, SyncUnit, plan_sync
 from mysql_syncer_spark.pooled import run_pooled
 from mysql_syncer_spark.sinks import jdbc
-from mysql_syncer_spark.sources.catalog import ParquetCatalog
+from mysql_syncer_spark.sources.catalog import Catalog
 
 
 @dataclass
@@ -68,10 +72,11 @@ class SyncReport:
         }
 
 
-class ParquetSyncExecutor:
-    """Executes a SyncPlan between two ParquetCatalogs (slave mutated)."""
+class SyncExecutor:
+    """Executes a SyncPlan between two catalogs; the slave is mutated
+    through its own ``drop_table`` / ``copy_table`` / ``apply_changes``."""
 
-    def __init__(self, master: ParquetCatalog, slave: ParquetCatalog,
+    def __init__(self, master: Catalog, slave: Catalog,
                  config: SyncConfig | None = None):
         self.master = master
         self.slave = slave
@@ -88,15 +93,15 @@ class ParquetSyncExecutor:
         if not hasattr(self.slave, "create_table_sql"):
             raise ValueError(
                 "log_statements requires a SQL-backed slave catalog "
-                "(DBAPI/Derby executors); file-backed slaves have no "
+                "(DBAPI/Derby catalogs); file-backed slaves have no "
                 "statement form"
             )
         from mysql_syncer_spark.sinks.statement_log import StatementLog
 
         return StatementLog(
             self.cfg.log_statements,
-            quote=getattr(self.slave, "quote", '"'),
-            backslash_escapes=getattr(self.slave, "backslash_escapes", False),
+            quote=self.slave.quote,
+            backslash_escapes=self.slave.backslash_escapes,
             chunk_size=self.cfg.chunk_size,
         )
 
@@ -113,23 +118,32 @@ class ParquetSyncExecutor:
     # -- unit handlers ------------------------------------------------
 
     def _drop(self, unit: SyncUnit, res: UnitResult) -> None:
+        if self._stmt_log is not None:
+            self._stmt_log.log_drop(unit.table)
         if self.cfg.dry_run:
             res.status = "dry_run"
             return
-        path = self.slave.table_path(unit.table)
-        if os.path.exists(path):
-            shutil.rmtree(path) if os.path.isdir(path) else os.remove(path)
+        self.slave.drop_table(unit.table)
         self.slave.invalidate()
 
     def _full_copy(self, unit: SyncUnit, res: UnitResult) -> None:
         """The reference's copyTable (drop + create + chunked scan/insert,
-        Synchronizer.php:330-354, self-described 'extremely slow!') is a
-        single parallel read→write here."""
+        Synchronizer.php:330-354, self-described 'extremely slow!') is one
+        ``copy_table`` pass here. A dry run without a statement log never
+        resolves the master."""
+        if self.cfg.dry_run and self._stmt_log is None:
+            res.status = "dry_run"
+            return
+        m = self.master.table(unit.table)
+        if self._stmt_log is not None:
+            create = self.slave.create_table_sql(
+                unit.table, m.schema, m.pk_cols
+            )
+            self._stmt_log.log_full_copy(unit.table, create, m.df)
         if self.cfg.dry_run:
             res.status = "dry_run"
             return
-        mdf = self.master.table(unit.table).df
-        self.slave.write_table(mdf, unit.table)
+        self.slave.copy_table(unit.table, m, self.cfg.chunk_size)
         self.slave.invalidate()
 
     def _copy_if_changed(self, unit: SyncUnit, res: UnitResult) -> None:
@@ -142,11 +156,6 @@ class ParquetSyncExecutor:
         if digests_equal(m, s):
             res.status = "noop"
             return
-        if self.cfg.dry_run and self._stmt_log is None:
-            res.status = "dry_run"
-            return
-        # with a statement log, fall through: _full_copy logs the
-        # replayable statements and handles dry_run itself
         self._full_copy(unit, res)
 
     def _diff_sync(self, unit: SyncUnit, res: UnitResult) -> None:
@@ -251,7 +260,8 @@ class ParquetSyncExecutor:
             if self.cfg.dry_run:
                 res.status = "dry_run"
                 return
-            self._apply_changes(table, pk, inserts, exc, s.df, counts)
+            self.slave.apply_changes(table, pk, inserts, exc, s.df, counts,
+                                     self.cfg.chunk_size)
             self.slave.invalidate()
         finally:
             keys.unpersist()
@@ -384,11 +394,11 @@ class ParquetSyncExecutor:
         mdf = m.df.where(F.col(pcol).isin(values))
         sdf = s.df.where(F.col(pcol).isin(values))
         self._apply_diff(unit.table, mdf, sdf, m.pk_cols, res,
-                         full_slave=s.df, scope=(pcol, values))
+                         full_slave=s.df)
 
     def _apply_diff(self, table: str, mdf, sdf, pk_cols, res: UnitResult,
-                    full_slave=None, scope=None) -> None:
-        d = diff_tables(mdf, sdf, pk_cols, mode=self.cfg.join_mode)
+                    full_slave=None) -> None:
+        d = diff_tables(mdf, sdf, pk_cols)
         deletes = d["delete"].persist()
         inserts = None
         try:
@@ -409,23 +419,14 @@ class ParquetSyncExecutor:
             if self.cfg.dry_run:
                 res.status = "dry_run"
                 return
-            target = full_slave if full_slave is not None else sdf
-            self._apply_changes(table, pk_cols, inserts, deletes, target,
-                                counts)
+            current = full_slave if full_slave is not None else sdf
+            self.slave.apply_changes(table, pk_cols, inserts, deletes,
+                                     current, counts, self.cfg.chunk_size)
             self.slave.invalidate()
         finally:
             if inserts is not None:
                 inserts.unpersist()
             deletes.unpersist()
-
-    def _apply_changes(self, table, pk_cols, inserts, deletes, target,
-                       counts) -> None:
-        """Materialize the delta on the slave. Parquet mode: pure-DataFrame
-        merge + atomic file overwrite. Overridden by the SQL-target
-        executors. ``counts`` is ``(inserted, deleted)``, which only the
-        DBAPI sinks use."""
-        merged = apply_delta(target, inserts, deletes, pk_cols)
-        self.slave.write_table(merged, table)
 
     # -- driver --------------------------------------------------------
 
@@ -534,198 +535,10 @@ class ParquetSyncExecutor:
         return report
 
 
-class DBAPISyncExecutor(ParquetSyncExecutor):
-    """Executes a SyncPlan against a LIVE SQL slave (DBAPICatalog).
-
-    Same control flow as the parquet executor (schema compare → digest
-    short-circuit → hash diff), but mutations are the reference's real
-    write path: chunked ``DELETE ... WHERE (pk) IN`` / multi-row
-    ``INSERT`` statements (TableConnection.php:289-387), a delta's
-    streamed through one driver-side connection per table and a full
-    copy's through executor-side ones (sinks/jdbc.py), plus DDL through
-    a driver-side connection. The master may be any Catalog (parquet,
-    JDBC, DBAPI) — only the slave needs a connection factory.
-    """
-
-    def __init__(self, master, slave, config: SyncConfig | None = None):
-        super().__init__(master, slave, config)
-        # dialect knobs the sinks need, carried by the DBAPI catalog
-        self._quote = getattr(slave, "quote", '"')
-        self._esc = getattr(slave, "backslash_escapes", False)
-
-    def _execute_ddl(self, *statements: str) -> None:
-        conn = self.slave.connect_factory()
-        try:
-            cur = conn.cursor()
-            for stmt in statements:
-                cur.execute(stmt)
-            conn.commit()
-        finally:
-            conn.close()
-
-    def _drop(self, unit: SyncUnit, res: UnitResult) -> None:
-        if self._stmt_log is not None:
-            self._stmt_log.log_drop(unit.table)
-        if self.cfg.dry_run:
-            res.status = "dry_run"
-            return
-        q = self._quote
-        self._execute_ddl(f"DROP TABLE IF EXISTS {q}{unit.table}{q}")
-        self.slave.invalidate()
-
-    def _full_copy(self, unit: SyncUnit, res: UnitResult) -> None:
-        """Drop + CREATE TABLE from the master's Spark schema + one
-        distributed insert pass — the reference's copyTable
-        (Synchronizer.php:330-354) without the chunked LIMIT/OFFSET walk."""
-        m = self.master.table(unit.table)
-        create = self.slave.create_table_sql(
-            unit.table, m.schema, m.pk_cols
-        )
-        if self._stmt_log is not None:
-            self._stmt_log.log_full_copy(unit.table, create, m.df)
-        if self.cfg.dry_run:
-            res.status = "dry_run"
-            return
-        q = self._quote
-        self._execute_ddl(
-            f"DROP TABLE IF EXISTS {q}{unit.table}{q}",
-            create,
-        )
-        jdbc.apply_inserts(
-            m.df, unit.table, self.slave.connect_factory,
-            chunk_size=self.cfg.chunk_size, quote=q, backslash_escapes=self._esc,
-        )
-        self.slave.invalidate()
-
-    def _apply_changes(self, table, pk_cols, inserts, deletes, target,
-                       counts) -> None:
-        # delete-before-insert (Synchronizer.php:496-517): excess keys
-        # first, then replace (which deletes the changed rows' old
-        # versions chunk-locally before inserting the new ones).
-        inserted, deleted = counts
-        jdbc.apply_deletes(
-            deletes, table, pk_cols, self.slave.connect_factory,
-            chunk_size=self.cfg.chunk_size, quote=self._quote,
-            backslash_escapes=self._esc, rows=deleted,
-        )
-        jdbc.apply_replace(
-            inserts, table, pk_cols, self.slave.connect_factory,
-            chunk_size=self.cfg.chunk_size, quote=self._quote,
-            backslash_escapes=self._esc, rows=inserted,
-        )
-
-
-class JDBCSyncExecutor(ParquetSyncExecutor):
-    """Executes a SyncPlan against a LIVE JDBC slave (a
-    :class:`~mysql_syncer_spark.sources.catalog.JDBCCatalog` flavor
-    with driver-side statement support, e.g. ``DerbyCatalog``).
-
-    Same control flow as the other executors (schema compare → digest
-    short-circuit → hash diff), with the writes shaped for a real
-    database at scale:
-
-    * bulk row movement (full copies, insert deltas) goes through
-      Spark's DISTRIBUTED JDBC writer — executors hold the
-      connections; no Python worker, no driver row loop;
-    * deletes are ONE server-side statement per table: the delta's
-      keys are staged into a ``__sync_keys_<table>`` scratch table via
-      the same distributed writer, then ``DELETE ... WHERE EXISTS
-      (SELECT 1 FROM <stage> ...)`` runs INSIDE the database (the
-      composite-key-safe correlated form). No key list ever passes
-      through the driver, so a 100%-delta first sync stays flat in
-      driver memory — the JDBC twin of the DBAPI executor's chunked
-      statement sinks (sinks/jdbc.py), trading its per-chunk
-      round-trips for one in-database semi-join;
-    * DDL (drop/create/scratch management) runs on a driver-side
-      ``java.sql`` connection.
-
-    Delete-before-insert ordering (Synchronizer.php:496-517) is kept:
-    the staged key set is the union of excess keys and changed-row
-    keys, deleted in one statement before the insert pass appends.
-    """
-
-    def __init__(self, master, slave, config: SyncConfig | None = None):
-        super().__init__(master, slave, config)
-        for need in ("execute", "create_table_sql", "write_jdbc"):
-            if not hasattr(slave, need):
-                raise ValueError(
-                    "JDBCSyncExecutor needs a slave catalog with "
-                    f"driver-side statement support ({need!r} missing); "
-                    "plain JDBCCatalog is read-only — use DerbyCatalog "
-                    "or a subclass that implements the statement surface"
-                )
-
-    #: SQLStates meaning "object does not exist", swallowed on DROP
-    _MISSING = ("42Y55", "42X05")
-
-    def _drop_if_exists(self, name: str) -> None:
-        self.slave.execute(
-            f"DROP TABLE {self.slave._qualified(name)}",
-            ignore_states=self._MISSING,
-        )
-
-    def _drop(self, unit: SyncUnit, res: UnitResult) -> None:
-        if self._stmt_log is not None:
-            self._stmt_log.log_drop(unit.table)
-        if self.cfg.dry_run:
-            res.status = "dry_run"
-            return
-        self._drop_if_exists(unit.table)
-        self.slave.invalidate()
-
-    def _full_copy(self, unit: SyncUnit, res: UnitResult) -> None:
-        m = self.master.table(unit.table)
-        create = self.slave.create_table_sql(
-            unit.table, m.schema, m.pk_cols
-        )
-        if self._stmt_log is not None:
-            self._stmt_log.log_full_copy(unit.table, create, m.df)
-        if self.cfg.dry_run:
-            res.status = "dry_run"
-            return
-        self._drop_if_exists(unit.table)
-        self.slave.execute(create)
-        self.slave.write_jdbc(m.df, unit.table)
-        self.slave.invalidate()
-
-    def _apply_changes(self, table, pk_cols, inserts, deletes, target,
-                       counts) -> None:
-        stage = f"__sync_keys_{table}"
-        keys = deletes.select(*pk_cols).unionByName(
-            inserts.select(*pk_cols)
-        ).distinct()
-        self._drop_if_exists(stage)
-        # scratch DDL through our own type map (Spark's JDBC overwrite
-        # would map StringType to CLOB, which Derby can't equi-compare)
-        self.slave.execute(
-            self.slave.create_table_sql(stage, keys.schema, ())
-        )
-        self.slave.write_jdbc(keys, stage)
-        q = self.slave._qualified
-        cond = " AND ".join(
-            f'd."{c}" = t."{c}"' for c in pk_cols
-        )
-        try:
-            self.slave.execute(
-                f"DELETE FROM {q(table)} t WHERE EXISTS "
-                f"(SELECT 1 FROM {q(stage)} d WHERE {cond})"
-            )
-            self.slave.write_jdbc(inserts, table)
-        finally:
-            self._drop_if_exists(stage)
-
-
-def make_executor(master, slave, config: SyncConfig | None = None):
-    """Pick the executor for the slave's catalog type: parquet rewrite
-    for file-backed slaves, statement sinks for connection-backed ones,
-    staged server-side statements for JDBC-backed ones."""
-    if hasattr(slave, "connect_factory"):
-        return DBAPISyncExecutor(master, slave, config)
-    if hasattr(slave, "write_jdbc"):
-        return JDBCSyncExecutor(master, slave, config)
-    return ParquetSyncExecutor(master, slave, config)
+#: the name perfbench/tracing.py wraps ``run_unit`` under
+ParquetSyncExecutor = SyncExecutor
 
 
 def sync(master, slave, config: SyncConfig | None = None) -> SyncReport:
     """One-call full sync: plan + execute. After this, slave ≡ master."""
-    return make_executor(master, slave, config).run()
+    return SyncExecutor(master, slave, config).run()

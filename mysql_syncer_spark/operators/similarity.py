@@ -50,7 +50,8 @@ def dot(a: Column | str, b: Column | str) -> Column:
     # 64-term F.get multiply-add chain ("codegen instead of HOF") and
     # measured it 3x SLOWER on Spark 4.1 (the giant Add chain trips
     # the huge-method codegen fallback; the HOF fold is efficient) —
-    # plans/r12 micro-bench. Keep the fold; optimize around it by
+    # OPTIMIZATION_r12.md, "codegen instead of HOF" negative result.
+    # Keep the fold; optimize around it by
     # hoisting norms/casts out of pair loops instead.
     #
     # str args name COLUMNS (F.col semantics) and take the parse-once

@@ -47,7 +47,7 @@ VALID_TO = "valid_to"
 #: projections of every fold after the first. The hash is a
 #: deterministic function of row content, so a carried hash is
 #: byte-identical to a recomputed one (exceptAll-proven in
-#: tests/test_scd.py and plans/r13/w5_scd2_ab.py).
+#: tests/test_scd.py; OPTIMIZATION_r13.md, wave 5 ``keep_hash`` entry).
 SCD2_HASH = "__scd2_hash"
 
 

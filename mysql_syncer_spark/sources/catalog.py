@@ -19,7 +19,12 @@ Implementations:
 * :class:`DerbyCatalog` — the ANSI-dialect JDBC flavor, proven live
   in-sandbox against embedded Apache Derby (tests/test_jdbc_derby.py):
   real ``spark.read.jdbc`` split scans, DatabaseMetaData introspection,
-  and the statement surface JDBCSyncExecutor mutates through.
+  and the statement surface its slave writes run through.
+
+A writable catalog owns its slave writes: :meth:`Catalog.drop_table`,
+:meth:`Catalog.copy_table` and :meth:`Catalog.apply_changes`, the three
+calls the sync executor makes. The base raises, so a read-only slave
+(plain :class:`JDBCCatalog`) fails per sync unit.
 """
 
 from __future__ import annotations
@@ -27,6 +32,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 from typing import Callable, Iterable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mysql_syncer_spark.config import TableHandle
+from mysql_syncer_spark.diff import apply_delta
 
 #: PKs of the driver fixture tables (FIXTURES.md §1) — parquet carries no
 #: PK metadata, so parquet-mode catalogs take a pk map with these defaults.
@@ -152,6 +159,27 @@ class Catalog:
     def table(self, name: str) -> TableHandle:
         raise NotImplementedError
 
+    # -- slave writes (the executor invalidates after each) ------------
+
+    def drop_table(self, name: str) -> None:
+        """Remove table ``name`` if it exists."""
+        raise NotImplementedError(f"{type(self).__name__} is read-only")
+
+    def copy_table(self, name: str, master: TableHandle,
+                   chunk_size: int) -> None:
+        """Replace table ``name`` with the master's rows and schema."""
+        raise NotImplementedError(f"{type(self).__name__} is read-only")
+
+    def apply_changes(self, name: str, pk_cols: Sequence[str], inserts,
+                      deletes, current, counts: tuple[int, int],
+                      chunk_size: int) -> None:
+        """Apply one delta to table ``name``: every slave row whose key is
+        in ``deletes`` goes, then ``inserts`` are added (delete before
+        insert, Synchronizer.php:496-517). ``current`` is the slave frame
+        the delta was computed against and ``counts`` is ``(inserted,
+        deleted)``."""
+        raise NotImplementedError(f"{type(self).__name__} is read-only")
+
     def has_table(self, name: str) -> bool:
         return name in self.table_names()
 
@@ -247,6 +275,22 @@ class FileCatalog(Catalog):
 
     def table_path(self, name: str) -> str:
         return os.path.join(self.path, f"{name}{self.ext}")
+
+    def drop_table(self, name: str) -> None:
+        path = self.table_path(name)
+        if os.path.exists(path):
+            shutil.rmtree(path) if os.path.isdir(path) else os.remove(path)
+
+    def copy_table(self, name: str, master: TableHandle,
+                   chunk_size: int) -> None:
+        """One parallel read→write of the master's frame."""
+        self.write_table(master.df, name)
+
+    def apply_changes(self, name, pk_cols, inserts, deletes, current,
+                      counts, chunk_size) -> None:
+        """Pure-DataFrame merge of the delta into ``current``, swapped in
+        by :meth:`write_table`."""
+        self.write_table(apply_delta(current, inserts, deletes, pk_cols), name)
 
     def _recover(self, name: str) -> None:
         """Heal the one crash window of the write_table swap: a kill
@@ -356,8 +400,6 @@ class FileCatalog(Catalog):
         ``__old__`` when a kill between the renames left it the only
         copy. Writing over the target directly would also delete the
         input a lazy plan is still reading (executor discipline)."""
-        import shutil
-
         self._recover(name)
         path = self.table_path(name)
         tmp = path + ".__staging__"
@@ -623,10 +665,11 @@ class DerbyCatalog(JDBCCatalog):
       ``digest.mysql_compat_row_hash_col`` — exclude such columns or
       disable pushdown for that table.
 
-    Used by :class:`mysql_syncer_spark.executor.JDBCSyncExecutor` as a
-    live slave: DDL + single-statement server-side deletes run through
-    the driver-side connection; bulk row movement stays on Spark's
-    distributed JDBC writer."""
+    Writable as a live slave: DDL and single-statement server-side
+    deletes run through the driver-side connection; bulk row movement
+    (full copies, insert deltas) stays on Spark's distributed JDBC
+    writer, so executors hold the connections and no key list passes
+    through the driver."""
 
     quote = '"'
     backslash_escapes = False
@@ -738,7 +781,55 @@ class DerbyCatalog(JDBCCatalog):
     def _quote_col(self, col: str) -> str:
         return f'"{col}"'
 
-    # -- DDL generation (executor full-copy / staging tables) ----------
+    # -- slave writes --------------------------------------------------
+
+    #: SQLStates meaning "object does not exist", swallowed on DROP
+    _MISSING = ("42Y55", "42X05")
+
+    def drop_table(self, name: str) -> None:
+        self.execute(
+            f"DROP TABLE {self._qualified(name)}", ignore_states=self._MISSING
+        )
+
+    def copy_table(self, name: str, master: TableHandle,
+                   chunk_size: int) -> None:
+        create = self.create_table_sql(name, master.schema, master.pk_cols)
+        self.drop_table(name)
+        self.execute(create)
+        self.write_jdbc(master.df, name)
+
+    def apply_changes(self, name, pk_cols, inserts, deletes, current,
+                      counts, chunk_size) -> None:
+        """ONE server-side delete per table: the keys of the excess and
+        changed rows are staged into a ``__sync_keys_<table>`` scratch
+        table through the distributed writer, then ``DELETE ... WHERE
+        EXISTS (SELECT 1 FROM <stage> ...)`` (the composite-key-safe
+        correlated form) runs inside the database before the inserts
+        are appended. A 100%-delta first sync stays flat in driver
+        memory — the twin of the DBAPI catalog's chunked statements,
+        trading their per-chunk round trips for one in-database
+        semi-join."""
+        stage = f"__sync_keys_{name}"
+        keys = deletes.select(*pk_cols).unionByName(
+            inserts.select(*pk_cols)
+        ).distinct()
+        self.drop_table(stage)
+        # scratch DDL through our own type map (Spark's JDBC overwrite
+        # would map StringType to CLOB, which Derby can't equi-compare)
+        self.execute(self.create_table_sql(stage, keys.schema, ()))
+        self.write_jdbc(keys, stage)
+        q = self._qualified
+        cond = " AND ".join(f'd."{c}" = t."{c}"' for c in pk_cols)
+        try:
+            self.execute(
+                f"DELETE FROM {q(name)} t WHERE EXISTS "
+                f"(SELECT 1 FROM {q(stage)} d WHERE {cond})"
+            )
+            self.write_jdbc(inserts, name)
+        finally:
+            self.drop_table(stage)
+
+    # -- DDL generation (full copy / staging tables) -------------------
 
     def ddl_type(self, dtype) -> str:
         s = dtype.simpleString()

@@ -43,6 +43,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from mysql_syncer_spark.config import TableHandle
+from mysql_syncer_spark.sinks import jdbc
 from mysql_syncer_spark.sources.catalog import Catalog
 
 #: Errors that route the Arrow row-transfer path to the pickle
@@ -407,8 +408,6 @@ class DBAPICatalog(Catalog):
         ``WHERE (pk...) IN ((...),...)`` point fetches — the reference's
         keyed multi-point scan (TableConnection.php:177-209, 5000 tuples
         per query). The pushdown diff fetches ONLY the delta this way."""
-        from mysql_syncer_spark.sinks.jdbc import sql_literal
-
         cols, _, schema = self.table_meta(name)
         q = self.quote
         col_list = ", ".join(f"{q}{c}{q}" for c in cols)
@@ -422,13 +421,13 @@ class DBAPICatalog(Catalog):
                 chunk = keys[i : i + chunk_size]
                 if len(pk_cols) == 1:
                     in_list = ", ".join(
-                        sql_literal(k[0], esc) for k in chunk
+                        jdbc.sql_literal(k[0], esc) for k in chunk
                     )
                     where = f"{q}{pk_cols[0]}{q} IN ({in_list})"
                 else:
                     pk_list = ", ".join(f"{q}{c}{q}" for c in pk_cols)
                     tuples = ", ".join(
-                        "(" + ", ".join(sql_literal(v, esc) for v in k) + ")"
+                        "(" + ", ".join(jdbc.sql_literal(v, esc) for v in k) + ")"
                         for k in chunk
                     )
                     where = f"({pk_list}) IN ({tuples})"
@@ -440,7 +439,56 @@ class DBAPICatalog(Catalog):
             conn.close()
         return self._rows_to_df(out, schema)
 
-    # -- DDL helpers used by the executor -----------------------------
+    # -- slave writes --------------------------------------------------
+    # The sinks are called through the ``jdbc`` module, not bound names,
+    # so a wrapper installed on the module (the benchmark's tracer) sees
+    # every call.
+
+    def _execute_ddl(self, *statements: str) -> None:
+        conn = self.connect_factory()
+        try:
+            cur = conn.cursor()
+            for stmt in statements:
+                cur.execute(stmt)
+            conn.commit()
+        finally:
+            conn.close()
+
+    def drop_table(self, name: str) -> None:
+        q = self.quote
+        self._execute_ddl(f"DROP TABLE IF EXISTS {q}{name}{q}")
+
+    def copy_table(self, name: str, master: TableHandle,
+                   chunk_size: int) -> None:
+        """Drop + CREATE TABLE from the master's Spark schema + one
+        distributed insert pass — the reference's copyTable
+        (Synchronizer.php:330-354) without the chunked LIMIT/OFFSET
+        walk."""
+        q = self.quote
+        self._execute_ddl(
+            f"DROP TABLE IF EXISTS {q}{name}{q}",
+            self.create_table_sql(name, master.schema, master.pk_cols),
+        )
+        jdbc.apply_inserts(
+            master.df, name, self.connect_factory, chunk_size=chunk_size,
+            quote=q, backslash_escapes=self.backslash_escapes,
+        )
+
+    def apply_changes(self, name, pk_cols, inserts, deletes, current,
+                      counts, chunk_size) -> None:
+        """Chunked statements streamed through one driver-side
+        connection per sink call: excess keys are deleted first, then
+        replace deletes the changed rows' old versions chunk-locally
+        before inserting the new ones."""
+        inserted, deleted = counts
+        dialect = dict(chunk_size=chunk_size, quote=self.quote,
+                       backslash_escapes=self.backslash_escapes)
+        jdbc.apply_deletes(deletes, name, pk_cols, self.connect_factory,
+                           rows=deleted, **dialect)
+        jdbc.apply_replace(inserts, name, pk_cols, self.connect_factory,
+                           rows=inserted, **dialect)
+
+    # -- DDL helpers ---------------------------------------------------
 
     def sql_type(self, t: T.DataType) -> str:
         """Spark type → portable column type for CREATE TABLE."""

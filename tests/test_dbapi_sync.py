@@ -21,7 +21,7 @@ from collections import Counter
 import pytest
 
 from mysql_syncer_spark.config import SyncConfig
-from mysql_syncer_spark.executor import DBAPISyncExecutor, make_executor, sync
+from mysql_syncer_spark.executor import SyncExecutor, sync
 from mysql_syncer_spark.plans.plan import Action, plan_sync
 from mysql_syncer_spark.sources.dbapi import DBAPICatalog
 
@@ -113,7 +113,6 @@ def test_dbapi_sync_converges_then_noops(spark, dbs):
     mpath, spath = dbs
     master = DBAPICatalog(spark, _factory(mpath))
     slave = DBAPICatalog(spark, _factory(spath))
-    assert isinstance(make_executor(master, slave), DBAPISyncExecutor)
 
     report = sync(master, slave, SyncConfig(max_parallel_tables=2))
     assert report.ok, [r.error for r in report.results]
@@ -147,7 +146,7 @@ def test_dbapi_single_table_sync(spark, dbs):
     mpath, spath = dbs
     master = DBAPICatalog(spark, _factory(mpath))
     slave = DBAPICatalog(spark, _factory(spath))
-    rep = DBAPISyncExecutor(master, slave).run_single("orders")
+    rep = SyncExecutor(master, slave).run_single("orders")
     assert rep.ok and rep.results[0].status == "ok"
     assert _dump(mpath, "orders", "o_orderkey") == _dump(
         spath, "orders", "o_orderkey"
@@ -304,7 +303,7 @@ def test_keyed_fetch_error_cleans_spill_and_propagates(spark, tmp_path):
         )
         m.commit()
     cat = DBAPICatalog(spark, _factory(mpath))
-    ex = DBAPISyncExecutor(
+    ex = SyncExecutor(
         cat, cat, SyncConfig(max_parallel_tables=2, chunk_size=10)
     )
 

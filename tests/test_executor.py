@@ -9,9 +9,13 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from mysql_syncer_spark.config import SyncConfig
+from mysql_syncer_spark.config import SyncConfig, TableHandle
 from mysql_syncer_spark.executor import sync
-from mysql_syncer_spark.sources.catalog import ParquetCatalog, load_table
+from mysql_syncer_spark.sources.catalog import (
+    Catalog,
+    ParquetCatalog,
+    load_table,
+)
 
 
 @pytest.fixture()
@@ -241,6 +245,47 @@ def test_dry_run_touches_nothing(spark, sf_dir, pair):
     )
     assert rep.ok
     assert spark.read.parquet(f"{sdir}/orders.parquet").count() == before
+
+
+class _ReadOnly(Catalog):
+    """In-memory frames keyed on ``k``, with no write surface."""
+
+    def __init__(self, frames):
+        self.frames = frames
+
+    def table_names(self):
+        return sorted(self.frames)
+
+    def table(self, name):
+        return TableHandle(name=name, df=self.frames[name], pk_cols=("k",))
+
+
+def test_read_only_slave_fails_per_unit(spark, tmp_path):
+    """Every write to a catalog without ``drop_table`` / ``copy_table``
+    / ``apply_changes`` is a unit error that says so; an unchanged table
+    still gates to noop and no exception escapes ``sync()``."""
+    schema = "k long, v string"
+    rows = [(1, "a"), (2, "b"), (3, "c")]
+    mdir = str(tmp_path / "master")
+    for name in ("same", "changed", "missing"):
+        spark.createDataFrame(rows, schema).write.parquet(
+            f"{mdir}/{name}.parquet"
+        )
+    master = ParquetCatalog(
+        spark, mdir, pk_map={t: ("k",) for t in ("same", "changed", "missing")}
+    )
+    slave = _ReadOnly({
+        "same": spark.createDataFrame(rows, schema),
+        "changed": spark.createDataFrame([(1, "a"), (2, "B"), (3, "c")],
+                                         schema),
+        "extra": spark.createDataFrame(rows, schema),
+    })
+    rep = sync(master, slave)
+    by = {r.table: r for r in rep.results}
+    assert by["same"].status == "noop"
+    for name in ("changed", "missing", "extra"):
+        assert by[name].status == "error", (name, by[name].status)
+        assert "_ReadOnly is read-only" in by[name].error, by[name].error
 
 
 class TestExternalWriterResilience:

@@ -10,7 +10,7 @@ from functools import partial
 import pytest
 
 from mysql_syncer_spark.digest import digests_equal
-from mysql_syncer_spark.executor import ParquetSyncExecutor, sync
+from mysql_syncer_spark.executor import SyncExecutor, sync
 from mysql_syncer_spark.pooled import run_pooled
 from mysql_syncer_spark.sources.catalog import ParquetCatalog
 
@@ -100,7 +100,7 @@ def test_sync_keeps_the_callers_fair_pool(spark, tmp_path, entry):
         if entry == "sync":
             report = sync(master, slave)
         else:
-            report = ParquetSyncExecutor(master, slave).run_single("a")
+            report = SyncExecutor(master, slave).run_single("a")
         after = sc.getLocalProperty(pool)
     finally:
         sc.setLocalProperty(pool, None)
