@@ -323,6 +323,31 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+#: the fixed_shuffle2 settle rule's version, stamped into every group's
+#: BENCH_GROUP_JSON: values taken under different rules never compare
+#: as equals. v1 settled on any 3 reps within 6%; v2 also requires the
+#: window to have stopped falling.
+PROBE_METHOD = "fixed_shuffle2/settle-v2"
+
+
+def probe_settled(window: list[float]) -> bool:
+    """Three consecutive probe reps agree within 6% and have stopped
+    falling: the last is not below both earlier ones. A slow ramp
+    (each rep a little under the one before) is still falling at any
+    spread, and reading it would report above the floor."""
+    return (max(window) / min(window) <= 1.06
+            and window[-1] >= min(window[:-1]))
+
+
+def probe_value(reps: list[float]) -> float:
+    """The mean of the last 3 reps once they settle; if they never do
+    (an ambient burst mid-probe), the minimum rolling 3-mean: the most
+    settled window the run offered, never the burst itself."""
+    if probe_settled(reps[-3:]):
+        return sum(reps[-3:]) / 3
+    return min(sum(reps[i:i + 3]) / 3 for i in range(len(reps) - 2))
+
+
 def run_group(group: str) -> None:
     """Child mode: one fresh JVM, warmup, 3 passes over the group's
     keys, per-key min; prints one JSON blob to stdout (parent parses).
@@ -515,15 +540,11 @@ def run_group(group: str) -> None:
         # 2.05]) while the mid-round run had settled by rep 1, so the
         # fixed mean-of-middle-3 read the ramp, not the floor. The
         # probe now SETTLES adaptively: repeat until the last 3 reps
-        # agree within 6% (max 12), then report the mean of those 3.
-        # If it NEVER settles (an ambient burst mid-probe — one run
-        # spiked reps 11-12 to 4.4/8.0 s), report the MINIMUM rolling
-        # 3-mean instead: the most-settled window the run offered,
-        # never the burst itself. Still excluded from every total;
-        # raw reps stay in the detail artifact for exactly this kind
-        # of diagnosis.
+        # settle (probe_settled; max 12), then report probe_value —
+        # one run that never settled spiked reps 11-12 to 4.4/8.0 s.
+        # Still excluded from every total; raw reps stay in the detail
+        # artifact for exactly this kind of diagnosis.
         reps = []
-        settled = False
         while len(reps) < 12:
             t0 = time.time()
             force(
@@ -543,24 +564,16 @@ def run_group(group: str) -> None:
                 )
             )
             reps.append(time.time() - t0)
-            if len(reps) >= 3:
-                last3 = reps[-3:]
-                if max(last3) / min(last3) <= 1.06:
-                    settled = True
-                    break
-        if settled:
-            probe = sum(reps[-3:]) / 3
-        else:
-            probe = min(
-                sum(reps[i:i + 3]) / 3 for i in range(len(reps) - 2)
-            )
-        times["fixed_shuffle2"] = round(probe, 3)
+            if len(reps) >= 3 and probe_settled(reps[-3:]):
+                break
+        times["fixed_shuffle2"] = round(probe_value(reps), 3)
         pass1["fixed_shuffle2_reps"] = [round(r, 3) for r in reps]
     print(
         "BENCH_GROUP_JSON:"
         + json.dumps(
             {
                 "group": group,
+                "probe_method": PROBE_METHOD,
                 "times": times,
                 "pass1": pass1,
                 "pass2": pass2,

@@ -85,7 +85,9 @@ def canonical_col(col: Column | str, dtype: T.DataType) -> Column:
     if isinstance(dtype, T.DateType):
         return F.date_format(c, "yyyy-MM-dd")
     if isinstance(dtype, T.BooleanType):
-        return F.when(c, F.lit("true")).otherwise(F.lit("false"))
+        # NULL must stay NULL here too: an otherwise() branch would
+        # render it 'false', so a NULL <-> false change never diffed
+        return F.when(c, F.lit("true")).when(~c, F.lit("false"))
     if isinstance(dtype, T.BinaryType):
         return F.base64(c)
     if isinstance(dtype, (T.ArrayType, T.MapType, T.StructType)):

@@ -32,7 +32,8 @@ class TableHandle:
     handles' rows in the driver (``digest.digests_equal``) and builds no
     DataFrame for a table that is unchanged; that driver compare may
     never call equal what the Spark gate over the built frames calls
-    different.
+    different. A changed keyed table is diffed from the same rows
+    (``diff.diff_rows``), so its frames are not built either.
     """
 
     def __init__(
@@ -90,7 +91,8 @@ class SyncConfig:
     copy_tables_with_no_primary: bool = True
     #: rows per DELETE/INSERT statement — the reference's CHUNK_SIZE=5000
     #: (settings.php.tmpl:32-34) — and per streamed partition of a DBAPI
-    #: delta (ceil(rows / chunk_size) partitions); unused in parquet mode
+    #: delta frame (ceil(rows / chunk_size) partitions; a delta diffed in
+    #: the driver is already a row list); unused in parquet mode
     chunk_size: int = 5000
     #: concurrent sync units (reference: ThreadWrapper.jar <cores>)
     max_parallel_tables: int = 8

@@ -5,7 +5,9 @@ and computes two anti-joins with ``NOT IN`` subqueries over indexed hash
 columns (src/project/Synchronizer.php:446-524 missing rows, :531-583 excess
 rows). Here the hash maps are lazy DataFrames and the anti-joins are
 Catalyst ``left_anti`` joins — broadcast when one side is small, shuffled
-hash join otherwise, with AQE skew handling for free.
+hash join otherwise, with AQE skew handling for free. Rows already held
+in the driver (two DBAPI catalogs) are diffed there instead, by
+:func:`diff_rows`.
 
 Two join modes (SURVEY.md §2.3 J7):
 
@@ -21,6 +23,7 @@ Two join modes (SURVEY.md §2.3 J7):
 
 from __future__ import annotations
 
+from operator import itemgetter
 from typing import Literal, Sequence
 
 from pyspark.sql import DataFrame
@@ -125,6 +128,38 @@ def diff_tables(
         "master_hashes": mh,
         "slave_hashes": sh,
     }
+
+
+def diff_rows(
+    master: Sequence[tuple], slave: Sequence[tuple], key_idx: Sequence[int]
+) -> tuple[list, list]:
+    """:func:`diff_tables`' pk_hash diff of two driver-held row lists,
+    as the sync executor applies it: ``(inserts, deletes)``.
+
+    ``deletes`` holds the key (the values at ``key_idx``) of every slave
+    row whose full tuple is not a master row, once per such row;
+    ``inserts`` every master row whose key is missing from the slave or
+    deleted (a duplicate slave PK takes the kept copy with it), each
+    once, in master order — the ``rows_to_copy`` semi-join. A key
+    holding a NULL never matches, as in a Spark join: its slave rows
+    are deletes and its master rows are never inserted.
+
+    Rows compare by exact value, where the Spark row hash renders
+    doubles to about 1e-6 (canon.py): two doubles closer than that are
+    rewritten here and not there. So these keys are a superset of the
+    Spark diff's, and equal to them whenever exact and canonical
+    equality agree. Values must be hashable and equal to themselves: the
+    caller checks ``digest.driver_comparable`` first, which leaves a
+    float NaN to the Spark path."""
+    get = itemgetter(*key_idx)
+    key = get if len(key_idx) > 1 else (lambda r: (get(r),))
+    in_master, in_slave = set(master), set(slave)
+    deletes = [k for r, k in zip(slave, map(key, slave))
+               if None in k or r not in in_master]
+    wanted = {key(r) for r in master if r not in in_slave}
+    wanted.update(deletes)
+    return [r for r, k in zip(master, map(key, master))
+            if k in wanted and None not in k], deletes
 
 
 def merge_tables(

@@ -156,31 +156,56 @@ def _column_types(values) -> set:
     return set(map(type, values)) - {type(None)}
 
 
-def _driver_verdict(a: TableHandle, b: TableHandle) -> bool | None:
-    """The gate over two handles' driver-held rows: True (equal),
-    False (different) or None (undecided: run the Spark gate).
+def _columns(rows: list, width: int) -> list:
+    """``rows`` as ``width`` columns (an empty list has empty columns)."""
+    return list(zip(*rows)) if rows else [()] * width
 
-    Equal needs equal row counts, the same set of value types per
-    column on both sides — one type, or int and float in a double
-    column, each one the column's Spark type accepts (boolean values
-    0/1 only) — and equal row multisets. A type mismatch, or a value of
-    a type outside the column's (an unhashable one included), is
-    undecided. Different is final: the row diff that follows is
-    authoritative, so a rare "different" the Spark gate would call
-    equal only costs an empty diff."""
-    ra, rb = a.rows, b.rows
-    if len(ra) != len(rb):
+
+def driver_comparable(a: TableHandle, b: TableHandle) -> bool:
+    """The type rule under every driver-side compare of two handles'
+    rows, shared by the gate (:func:`_driver_verdict`) and the
+    executor's driver row diff: both handles hold rows, their schemas
+    are equal, and per column both sides hold the same set of value
+    types — one type, or int and float in a double column, each one the
+    column's Spark type accepts (boolean values 0/1 only, no float NaN).
+    Python ``==`` on such values is exact and agrees with the built
+    frame. Anything else (an unhashable value, a NaN, which never equals
+    itself) is left to the Spark path, which renders NaN as ``'NaN'``."""
+    if a.rows is None or b.rows is None or a.schema != b.schema:
         return False
-    for f, ca, cb in zip(a.schema.fields, zip(*ra), zip(*rb)):
+    fields = a.schema.fields
+    for f, ca, cb in zip(fields, _columns(a.rows, len(fields)),
+                         _columns(b.rows, len(fields))):
         types = _column_types(ca)
         if (types != _column_types(cb)
                 or not types <= _DRIVER_TYPES.get(f.dataType, set())
                 or len(types) > 1 and types != {int, float}):
-            return None
+            return False
         if (isinstance(f.dataType, T.BooleanType)
                 and not set(ca) | set(cb) <= {0, 1, None}):
-            return None
-    return Counter(ra) == Counter(rb)
+            return False
+        if float in types and any(v != v for v in ca + cb):
+            return False
+    return True
+
+
+def _driver_verdict(a: TableHandle, b: TableHandle) -> bool | None:
+    """The gate over two handles' driver-held rows: True (equal),
+    False (different) or None (undecided: run the Spark gate).
+
+    Equal needs equal row counts, the type rule of
+    :func:`driver_comparable`, and equal row multisets. Different is
+    final: the row diff that follows is authoritative, so a rare
+    "different" the Spark gate would call equal only costs an empty
+    diff. Handles without rows, or with different schemas, are
+    undecided."""
+    if a.rows is None or b.rows is None or a.schema != b.schema:
+        return None
+    if len(a.rows) != len(b.rows):
+        return False
+    if not driver_comparable(a, b):
+        return None
+    return Counter(a.rows) == Counter(b.rows)
 
 
 def digests_equal(a, b, cols: Sequence[str] | None = None) -> bool:
@@ -215,8 +240,7 @@ def digests_equal(a, b, cols: Sequence[str] | None = None) -> bool:
     FAIR pool ``sync-<table>`` and the caller's job group.
     """
     handles = isinstance(a, TableHandle) and isinstance(b, TableHandle)
-    if (handles and cols is None and a.rows is not None
-            and b.rows is not None and a.schema == b.schema):
+    if handles and cols is None:
         verdict = _driver_verdict(a, b)
         if verdict is not None:
             return verdict

@@ -16,6 +16,12 @@ Control flow per table mirrors the reference hot path
 
   schema compare → digest short-circuit → hash maps → anti-joins → apply
 
+Between two DBAPI catalogs every row of both sides is already in the
+driver, so a keyed table is gated and diffed there (``diff.diff_rows``)
+and its delta reaches the statement sinks as row lists: no DataFrame is
+built and no Spark job runs for it. Partitioned and pushdown units, and
+rows the driver compare cannot decide, take the Spark anti-joins.
+
 Parallelism: one thread per sync unit submitting independent Spark jobs
 (FAIR scheduler pool), replacing the reference's one-OS-process-per-table
 ThreadWrapper pool (Synchronizer.php:73-101). Errors are isolated per
@@ -33,14 +39,20 @@ from functools import partial
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from mysql_syncer_spark.config import SyncConfig, TableHandle
-from mysql_syncer_spark.diff import diff_tables, rows_to_copy
-from mysql_syncer_spark.digest import digests_equal, differing_partitions
+from mysql_syncer_spark.diff import diff_rows, diff_tables, rows_to_copy
+from mysql_syncer_spark.digest import (
+    differing_partitions,
+    digests_equal,
+    driver_comparable,
+)
 from mysql_syncer_spark.plans.plan import Action, SyncPlan, SyncUnit, plan_sync
 from mysql_syncer_spark.pooled import run_pooled
 from mysql_syncer_spark.sinks import jdbc
 from mysql_syncer_spark.sources.catalog import Catalog
+from mysql_syncer_spark.sources.dbapi import typed_rows
 
 
 @dataclass
@@ -105,12 +117,21 @@ class SyncExecutor:
             chunk_size=self.cfg.chunk_size,
         )
 
-    def _log_delta(self, table, pk_cols, inserts, deletes, counts) -> None:
+    def _log_delta(self, table, pk_cols, inserts, deletes, counts,
+                   schema=None) -> None:
+        """Statement log and changelog of one delta: two frames, or
+        (with the table's ``schema``) insert rows and delete keys."""
+        cols = None if schema is None else schema.fieldNames()
         if self._stmt_log is not None:
-            self._stmt_log.log_delta(table, pk_cols, inserts, deletes, counts)
+            self._stmt_log.log_delta(table, pk_cols, inserts, deletes,
+                                     counts, cols)
         if self.cfg.changelog_path is not None:
             from mysql_syncer_spark.sinks.changelog import changelog
 
+            if schema is not None:
+                inserts = self.spark.createDataFrame(inserts, schema)
+                deletes = self.spark.createDataFrame(
+                    deletes, T.StructType([schema[c] for c in pk_cols]))
             changelog(
                 inserts, deletes.select(*pk_cols), table, pk_cols
             ).write.mode("append").parquet(self.cfg.changelog_path)
@@ -180,7 +201,25 @@ class SyncExecutor:
         if unit.action == Action.DIFF_SYNC_PARTITIONED and unit.partition_col:
             self._diff_sync_partitioned(unit, m, s, res)
             return
+        if unit.action == Action.DIFF_SYNC and driver_comparable(m, s):
+            self._driver_diff(unit.table, m, s, res)
+            return
         self._apply_diff(unit.table, m.df, s.df, m.pk_cols, res)
+
+    def _driver_diff(self, table: str, m: TableHandle, s: TableHandle,
+                     res: UnitResult) -> None:
+        """The row diff of two handles' driver-held rows
+        (:func:`~mysql_syncer_spark.diff.diff_rows`, the keys of
+        :meth:`_apply_diff`). The delta is typed as a built frame would
+        hold it, so the statements carry the same literals on either
+        path, and reaches the log and the slave as row lists."""
+        fields = m.schema.fields
+        idx = [m.schema.fieldNames().index(c) for c in m.pk_cols]
+        inserts, deletes = diff_rows(m.rows, s.rows, idx)
+        res.inserted, res.deleted = len(inserts), len(deletes)
+        self._write_delta(table, m.pk_cols, typed_rows(fields, inserts),
+                          typed_rows([fields[i] for i in idx], deletes),
+                          None, res, schema=m.schema)
 
     def _diff_sync_pushdown(self, unit: SyncUnit, res: UnitResult) -> None:
         """Minimal-egress diff (SURVEY §4 row 2): the master computes the
@@ -411,22 +450,30 @@ class SyncExecutor:
                 mdf, d["missing"].unionByName(deletes), pk_cols
             ).persist()
             res.inserted = inserts.count()
-            if res.inserted == 0 and res.deleted == 0:
-                res.status = "noop"
-                return
-            counts = (res.inserted, res.deleted)
-            self._log_delta(table, pk_cols, inserts, deletes, counts)
-            if self.cfg.dry_run:
-                res.status = "dry_run"
-                return
             current = full_slave if full_slave is not None else sdf
-            self.slave.apply_changes(table, pk_cols, inserts, deletes,
-                                     current, counts, self.cfg.chunk_size)
-            self.slave.invalidate()
+            self._write_delta(table, pk_cols, inserts, deletes, current, res)
         finally:
             if inserts is not None:
                 inserts.unpersist()
             deletes.unpersist()
+
+    def _write_delta(self, table: str, pk_cols, inserts, deletes, current,
+                     res: UnitResult, schema=None) -> None:
+        """Log and apply one counted delta (``res`` holds its counts),
+        unless it is empty or the run is dry. With ``schema`` the delta
+        is insert rows and delete keys, not frames."""
+        if res.inserted == 0 and res.deleted == 0:
+            res.status = "noop"
+            return
+        counts = (res.inserted, res.deleted)
+        self._log_delta(table, pk_cols, inserts, deletes, counts, schema)
+        if self.cfg.dry_run:
+            res.status = "dry_run"
+            return
+        cols = None if schema is None else schema.fieldNames()
+        self.slave.apply_changes(table, pk_cols, inserts, deletes, current,
+                                 counts, self.cfg.chunk_size, cols=cols)
+        self.slave.invalidate()
 
     # -- driver --------------------------------------------------------
 

@@ -10,10 +10,12 @@ Synchronizer.php:566-582) is reproduced here:
   each sink's statements come from one chunk-at-a-time generator, which
   the sink executes and the statement log writes;
 * the delta sinks (:func:`apply_deletes`, :func:`apply_replace`) run on
-  the DRIVER, one connection per table, streaming the delta through
-  ``toLocalIterator`` (:func:`stream_rows`) and committing per chunk —
-  idempotent under retry because DELETE-by-PK and delete-before-insert
-  replace (TableConnection.php:599-627 replaceRows) re-apply cleanly;
+  the DRIVER, one connection per table, and take the delta as a
+  DataFrame, streamed through ``toLocalIterator`` (:func:`stream_rows`),
+  or as a row list the driver already holds (a delta diffed from two
+  DBAPI handles' rows); they commit per chunk — idempotent under retry
+  because DELETE-by-PK and delete-before-insert replace
+  (TableConnection.php:599-627 replaceRows) re-apply cleanly;
 * full copies (:func:`apply_inserts`) stay distributed: one
   ``foreachPartition`` connection per partition, opened by the executor
   (a connection can't be pickled to workers);
@@ -182,36 +184,43 @@ def chunked(it: Iterator, size: int) -> Iterator[list]:
         yield chunk
 
 
-def stream_rows(df: DataFrame, rows: int | None = None,
+def stream_rows(df: DataFrame | list, rows: int | None = None,
                 chunk_size: int = DEFAULT_CHUNK_SIZE) -> Iterator:
-    """Stream ``df`` into the driver one partition at a time. ``rows``
-    (the frame's known row count) first coalesces it to
+    """Stream ``df`` into the driver one partition at a time; a row list
+    (a delta the driver diffed) is iterated as it is. ``rows`` (the
+    frame's known row count) first coalesces it to
     ``ceil(rows / chunk_size)`` partitions: ``toLocalIterator`` runs one
     job per partition, so a one-chunk delta costs one job, and a
     partition stays about one chunk at any delta size. ``coalesce``
     never raises the partition count."""
+    if isinstance(df, list):
+        return iter(df)
     if rows is not None:
         df = df.coalesce(max(1, math.ceil(rows / chunk_size)))
     return df.toLocalIterator()
 
 
-def delete_statements(keys: DataFrame, table: str, pk_cols: Sequence[str],
+def delete_statements(keys: DataFrame | list, table: str,
+                      pk_cols: Sequence[str],
                       chunk_size: int = DEFAULT_CHUNK_SIZE, quote: str = "`",
                       backslash_escapes: bool = False,
                       rows: int | None = None) -> Iterator[tuple]:
-    """The excess-key ``DELETE`` of each chunk of ``keys``."""
-    stream = stream_rows(keys.select(*pk_cols), rows, chunk_size)
-    for chunk in chunked(stream, chunk_size):
+    """The excess-key ``DELETE`` of each chunk of ``keys``: a frame
+    holding the ``pk_cols``, or a list of key tuples in their order."""
+    if not isinstance(keys, list):
+        keys = keys.select(*pk_cols)
+    for chunk in chunked(stream_rows(keys, rows, chunk_size), chunk_size):
         yield (delete_sql(table, pk_cols, chunk, quote, backslash_escapes),)
 
 
-def replace_statements(df: DataFrame, table: str, pk_cols: Sequence[str],
+def replace_statements(df: DataFrame | list, table: str,
+                       pk_cols: Sequence[str], cols: Sequence[str],
                        chunk_size: int = DEFAULT_CHUNK_SIZE, quote: str = "`",
                        backslash_escapes: bool = False,
                        rows: int | None = None) -> Iterator[tuple]:
-    """Per chunk of ``df``, the ``DELETE`` of its PKs, then its INSERT."""
-    cols = df.columns
-    idx = [cols.index(c) for c in pk_cols]
+    """Per chunk of ``df`` (a frame or a row list, its columns named
+    ``cols``), the ``DELETE`` of its PKs, then its INSERT."""
+    idx = [list(cols).index(c) for c in pk_cols]
     for chunk in chunked(stream_rows(df, rows, chunk_size), chunk_size):
         pks = [[r[i] for i in idx] for r in chunk]
         yield (delete_sql(table, pk_cols, pks, quote, backslash_escapes),
@@ -251,7 +260,7 @@ def _execute(connection_factory: Callable[[], object],
 
 
 def apply_deletes(
-    keys: DataFrame,
+    keys: DataFrame | list,
     table: str,
     pk_cols: Sequence[str],
     connection_factory: Callable[[], object],
@@ -260,8 +269,9 @@ def apply_deletes(
     backslash_escapes: bool = False,
     rows: int | None = None,
 ) -> None:
-    """Execute chunked deletes for every key row from the driver, on
-    one connection; ``rows`` is the key count (see :func:`stream_rows`)."""
+    """Execute chunked deletes for every key row (or key tuple of a
+    list) from the driver, on one connection; ``rows`` is the key count
+    (see :func:`stream_rows`)."""
     _execute(connection_factory, delete_statements(
         keys, table, pk_cols, chunk_size, quote, backslash_escapes, rows
     ))
@@ -288,7 +298,7 @@ def apply_inserts(
 
 
 def apply_replace(
-    df: DataFrame,
+    df: DataFrame | list,
     table: str,
     pk_cols: Sequence[str],
     connection_factory: Callable[[], object],
@@ -296,12 +306,15 @@ def apply_replace(
     quote: str = "`",
     backslash_escapes: bool = False,
     rows: int | None = None,
+    cols: Sequence[str] | None = None,
 ) -> None:
     """Delete-then-insert upsert from the driver, on one connection —
     deliberately not REPLACE/ON DUPLICATE (the reference dodges
     unique-key conflicts the same way, TableConnection.php:599-627);
     delete-before-insert within each chunk keeps the partition-move
-    guard (Synchronizer.php:496-517). ``rows``: see :func:`stream_rows`."""
+    guard (Synchronizer.php:496-517). ``rows``: see :func:`stream_rows`;
+    ``cols`` names a row list's columns (a frame's default to its own)."""
+    cols = df.columns if cols is None else cols
     _execute(connection_factory, replace_statements(
-        df, table, pk_cols, chunk_size, quote, backslash_escapes, rows
+        df, table, pk_cols, cols, chunk_size, quote, backslash_escapes, rows
     ))

@@ -12,16 +12,18 @@ same file without touching the slave — a replayable PREVIEW.
 
 Statements come from the sinks' own generators
 (:func:`~mysql_syncer_spark.sinks.jdbc.delete_statements` /
-:func:`~mysql_syncer_spark.sinks.jdbc.replace_statements`), streamed
-with the same row counts, so the log is byte-for-byte the statement
-stream :func:`~mysql_syncer_spark.sinks.jdbc.apply_deletes` and
-:func:`~mysql_syncer_spark.sinks.jdbc.apply_replace` execute.
+:func:`~mysql_syncer_spark.sinks.jdbc.replace_statements`), fed the
+same delta — DataFrames streamed with the same row counts, or the row
+lists of a delta the driver diffed — so the log is byte-for-byte the
+statement stream :func:`~mysql_syncer_spark.sinks.jdbc.apply_deletes`
+and :func:`~mysql_syncer_spark.sinks.jdbc.apply_replace` execute.
 
 Scale note: a single SQL file is an inherently serial artifact. The
 emitter streams delta frames through ``toLocalIterator`` (driver memory
-stays one-chunk-bounded at any delta size), but emitting a 100 TB first
-sync as SQL text is not the intended use — the log is for audit and
-replay of incremental deltas, like the reference's.
+stays one-chunk-bounded at any delta size; a row-list delta is already
+in the driver), but emitting a 100 TB first sync as SQL text is not the
+intended use — the log is for audit and replay of incremental deltas,
+like the reference's.
 """
 
 from __future__ import annotations
@@ -98,21 +100,27 @@ class StatementLog:
         self,
         table: str,
         pk_cols: Sequence[str],
-        inserts: DataFrame,
-        deletes: DataFrame,
+        inserts: DataFrame | list,
+        deletes: DataFrame | list,
         counts: tuple = (None, None),
+        cols: Sequence[str] | None = None,
     ) -> None:
         """The diff-sync hot path: excess-key DELETEs first, then the
         replace stream (per-chunk delete-before-insert) — the
         reference's PK-collision ordering (Synchronizer.php:496-517).
         ``counts`` is ``(inserted, deleted)``: streamed with the same
-        counts as the sinks, the block is exactly what they execute."""
+        counts as the sinks, the block is exactly what they execute.
+        The delta is two frames, or insert rows named ``cols`` and
+        delete key tuples, as :func:`~mysql_syncer_spark.sinks.jdbc.
+        apply_replace` takes it."""
         inserted, deleted = counts
+        cols = inserts.columns if cols is None else cols
         args = (self.chunk_size, self.quote, self.backslash_escapes)
         self._append(
             [f"-- delta {table}\n"],
             delete_statements(deletes, table, pk_cols, *args, rows=deleted),
-            replace_statements(inserts, table, pk_cols, *args, rows=inserted),
+            replace_statements(inserts, table, pk_cols, cols, *args,
+                               rows=inserted),
         )
 
     # -- replay ---------------------------------------------------------

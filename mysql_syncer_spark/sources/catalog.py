@@ -172,12 +172,15 @@ class Catalog:
 
     def apply_changes(self, name: str, pk_cols: Sequence[str], inserts,
                       deletes, current, counts: tuple[int, int],
-                      chunk_size: int) -> None:
+                      chunk_size: int, cols=None) -> None:
         """Apply one delta to table ``name``: every slave row whose key is
         in ``deletes`` goes, then ``inserts`` are added (delete before
         insert, Synchronizer.php:496-517). ``current`` is the slave frame
         the delta was computed against and ``counts`` is ``(inserted,
-        deleted)``."""
+        deleted)``. With ``cols`` (the insert columns) the delta is a
+        driver diff's row lists, insert rows and delete key tuples, and
+        ``current`` is None; only a catalog whose handles hold rows (a
+        DBAPI catalog) receives one."""
         raise NotImplementedError(f"{type(self).__name__} is read-only")
 
     def has_table(self, name: str) -> bool:
@@ -287,7 +290,7 @@ class FileCatalog(Catalog):
         self.write_table(master.df, name)
 
     def apply_changes(self, name, pk_cols, inserts, deletes, current,
-                      counts, chunk_size) -> None:
+                      counts, chunk_size, cols=None) -> None:
         """Pure-DataFrame merge of the delta into ``current``, swapped in
         by :meth:`write_table`."""
         self.write_table(apply_delta(current, inserts, deletes, pk_cols), name)
@@ -799,7 +802,7 @@ class DerbyCatalog(JDBCCatalog):
         self.write_jdbc(master.df, name)
 
     def apply_changes(self, name, pk_cols, inserts, deletes, current,
-                      counts, chunk_size) -> None:
+                      counts, chunk_size, cols=None) -> None:
         """ONE server-side delete per table: the keys of the excess and
         changed rows are staged into a ``__sync_keys_<table>`` scratch
         table through the distributed writer, then ``DELETE ... WHERE

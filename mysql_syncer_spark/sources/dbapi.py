@@ -10,9 +10,11 @@ sync, not once per ``table()`` call: the handle is memoized
 (``Catalog._memo``) until ``invalidate()``, which every sync run calls
 first and the executor calls after every write, so the planner's fetch
 is the one the executor's unit uses. The handle keeps the fetched rows
-and builds its DataFrame from them (``_rows_to_df``) on first use: when
+and builds its DataFrame from them (``_rows_to_df``) on first use. When
 both sides are DBAPI catalogs, the digest gate compares the rows in the
-driver, so an unchanged table never becomes a DataFrame.
+driver, and a changed keyed table is diffed there too (``diff.diff_rows``):
+its delta goes to the statement sinks as row lists, so a DBAPI-to-DBAPI
+diff sync builds no DataFrame and runs no Spark job.
 
 Row fetches run one at a time, process-wide (``_FETCH_LOCK``): sqlite3
 releases the GIL around every row step, so concurrent fetches from the
@@ -118,6 +120,15 @@ def _typed_column(field: T.StructField, values: Sequence) -> list:
     if isinstance(t, T.DoubleType) and int in set(map(type, values)):
         return [float(v) if type(v) is int else v for v in values]
     return list(values)
+
+
+def typed_rows(fields: Sequence[T.StructField], rows: list) -> list:
+    """Fetched rows with every column typed by :func:`_typed_column`:
+    the values a frame built from them holds, so a statement renders
+    the same literals from either (an int in a DOUBLE column as
+    ``1.0``)."""
+    cols = [_typed_column(f, c) for f, c in zip(fields, zip(*rows))]
+    return list(zip(*cols))
 
 
 def _as_bool(column: str, v):
@@ -475,18 +486,19 @@ class DBAPICatalog(Catalog):
         )
 
     def apply_changes(self, name, pk_cols, inserts, deletes, current,
-                      counts, chunk_size) -> None:
+                      counts, chunk_size, cols=None) -> None:
         """Chunked statements streamed through one driver-side
         connection per sink call: excess keys are deleted first, then
         replace deletes the changed rows' old versions chunk-locally
-        before inserting the new ones."""
+        before inserting the new ones. The delta is two frames, or
+        insert rows named ``cols`` and delete key tuples."""
         inserted, deleted = counts
         dialect = dict(chunk_size=chunk_size, quote=self.quote,
                        backslash_escapes=self.backslash_escapes)
         jdbc.apply_deletes(deletes, name, pk_cols, self.connect_factory,
                            rows=deleted, **dialect)
         jdbc.apply_replace(inserts, name, pk_cols, self.connect_factory,
-                           rows=inserted, **dialect)
+                           rows=inserted, cols=cols, **dialect)
 
     # -- DDL helpers ---------------------------------------------------
 

@@ -50,3 +50,18 @@ def test_row_hash_matches_duckdb(spark, sf_dir, table, pk):
     ).fetchall()
     duck_hashes = dict(duck)
     assert spark_hashes == duck_hashes
+
+
+def test_null_boolean_hashes_apart_from_false(spark):
+    """A NULL boolean renders the NULL sentinel, as in the DuckDB mirror
+    (CAST(NULL AS VARCHAR)), not 'false': a NULL <-> false change is a
+    row change."""
+    df = spark.createDataFrame([(1, None), (1, False), (1, True)],
+                               "k long, b boolean")
+    kinds = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+    spark_hashes = [r[0] for r in df.select(row_hash_col(df)).collect()]
+    assert len(set(spark_hashes)) == 3
+    duck = duckdb.connect().execute(
+        f"SELECT {duckdb_row_hash_expr(kinds)} FROM (VALUES (1, NULL::BOOLEAN),"
+        " (1, false), (1, true)) t(k, b)").fetchall()
+    assert spark_hashes == [h for (h,) in duck]

@@ -11,7 +11,9 @@ Covered here:
 * no Spark job and no DataFrame build in planning, and no Spark job in
   a noop re-sync between two DBAPI catalogs;
 * a handle's DataFrame is built once under concurrent readers;
-* mixed catalogs (parquet on one side) keep the Spark gate.
+* mixed catalogs (parquet on one side) keep the Spark gate;
+* the driver row diff: its keys against ``diff_tables``' (property test),
+  no Spark job in a converging sync, and duplicate slave PKs.
 """
 
 import os
@@ -28,6 +30,7 @@ from pyspark.sql import types as T
 
 from mysql_syncer_spark import digest
 from mysql_syncer_spark.config import TableHandle
+from mysql_syncer_spark.diff import diff_rows, diff_tables, rows_to_copy
 from mysql_syncer_spark.executor import sync
 from mysql_syncer_spark.plans.plan import plan_sync
 from mysql_syncer_spark.sources.catalog import ParquetCatalog
@@ -158,6 +161,12 @@ def test_driver_verdicts():
     assert v(h((1.0, True)), h((1.0, 1))) is None
     assert v(h(("1", 1)), h(("1", 1))) is None
     assert v(h(([1], 1)), h(([1], 1))) is None  # unhashable: not a float
+    # two NaN objects never compare equal: the Spark gate renders 'NaN'
+    assert v(h((float("nan"), 1)), h((float("nan"), 1))) is None
+    assert v(h((1, 1), (float("nan"), 0)), h((1, 1), (2.5, 0))) is None
+    assert not digest.driver_comparable(h((float("nan"), 1)), h((1.0, 1)))
+    assert digest.driver_comparable(h((1, 1), (2.5, None)),
+                                    h((2.5, 0), (1, 1)))
     # a driver verdict is final: no DataFrame, no Spark job
     assert digest.digests_equal(h((1.0, 1)), h((1.0, 1))) is True
 
@@ -319,3 +328,182 @@ def test_dbapi_master_parquet_slave_gates_in_spark(spark, tmp_path,
     got = sorted(tuple(r) for r in slave.table("flags").df.collect())
     assert got == sorted(
         (k, ok, -1.0 if k == 7 else p) for k, ok, p in FLAG_ROWS)
+
+
+# -- the driver row diff -----------------------------------------------------
+
+KEYED_TYPED_DDL = (
+    "CREATE TABLE t (k INTEGER PRIMARY KEY, i INTEGER, r REAL, n NUMERIC, "
+    "s TEXT, b BLOB, o BOOLEAN)"
+)
+#: doubles on a 1/8 grid below 1e6 (and 2^53): two of them are equal
+#: exactly iff the Spark row hash renders them alike
+_GRID = st.one_of(st.none(), st.sampled_from([0.0, -0.0, 2.0**53]),
+                  st.integers(-8 * 10**6, 8 * 10**6).map(lambda i: i / 8))
+#: the strictness test's cells, with grid doubles and without NUL in
+#: text (a NUL cannot travel inside a SQL statement)
+_DIFF_CELLS = (
+    _CELLS[0],
+    _GRID,
+    st.one_of(_GRID, st.integers(-2**52, 2**52)),
+    st.one_of(st.none(), st.sampled_from(["", "é", "it's", "日本語"]),
+              st.text(st.characters(blacklist_categories=("Cs",),
+                                    blacklist_characters="\x00"),
+                      max_size=4)),
+    _CELLS[4],
+    _CELLS[5],
+)
+#: below the row hash's ~1e-6 resolution for every nonzero grid double
+_NEAR = 2.0**-30
+
+
+@st.composite
+def _keyed_pair(draw):
+    """(master, slave, near): slave rows derived from the master's by
+    dropping, editing, twinning (an exactly equal value) and nudging a
+    double by ``_NEAR``, plus slave-only keys; ``near`` says whether a
+    nudge happened."""
+    keys = draw(st.lists(st.integers(0, 40), unique=True, max_size=8))
+    master = [(k, *draw(st.tuples(*_DIFF_CELLS))) for k in keys]
+    slave, near = [], False
+    for row in master:
+        op = draw(st.sampled_from(["keep", "drop", "edit", "twin", "near",
+                                   "near"]))
+        row = list(row)
+        if op == "drop":
+            continue
+        if op == "edit":
+            c = draw(st.integers(1, 6))
+            row[c] = draw(_DIFF_CELLS[c - 1])
+        elif op == "twin":
+            row[1:] = [_twin(c, v) for c, v in enumerate(row[1:])]
+        elif op == "near" and row[2] is not None and 0 < abs(row[2]) < 2**52:
+            row[2] += _NEAR  # a REAL cell: stays a float in sqlite
+            near = True
+        slave.append(tuple(row))
+    extra = draw(st.lists(st.integers(41, 60), unique=True, max_size=3))
+    slave += [(k, *draw(st.tuples(*_DIFF_CELLS))) for k in extra]
+    return master, slave, near
+
+
+def _except_both_ways(mpath, spath):
+    with sqlite3.connect(mpath) as conn:
+        conn.execute("ATTACH DATABASE ? AS s", (spath,))
+        return [conn.execute(f"SELECT * FROM {a} EXCEPT SELECT * FROM {b}"
+                             ).fetchall()
+                for a, b in (("main.t", "s.t"), ("s.t", "main.t"))]
+
+
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture,
+                                 HealthCheck.too_slow])
+@given(pair=_keyed_pair())
+@example(pair=([(1, 1, 1.5, 2, "a", b"", 1), (2, 0, 0.5, 2.5, "b", b"", 0)],
+               [(1, 1, 1.5 + _NEAR, 2, "a", b"", 1),
+                (2, 0, 0.5, 2.5, "b", b"", 0)], True))
+@example(pair=([(1, None, 1.0, 1, "x", None, 1)],
+               [(1, None, 1.0, 1.0, "x", None, True), (9, 1, 0.0, 0, "", b"",
+                                                       0)], False))
+@example(pair=([(1, None, None, None, None, None, 0)],  # NULL <-> false
+               [(1, None, None, None, None, None, None)], False))
+def test_driver_diff_keys_match_the_spark_diff(spark, pair):
+    """The driver diff's delete and insert keys equal ``diff_tables``'
+    wherever exact and canonical double equality agree, and contain
+    them otherwise; the sync converges exactly and re-syncs as noop."""
+    master_rows, slave_rows, near = pair
+    with tempfile.TemporaryDirectory() as d:
+        mpath = _create(os.path.join(d, "m.db"), KEYED_TYPED_DDL, master_rows)
+        spath = _create(os.path.join(d, "s.db"), KEYED_TYPED_DDL, slave_rows)
+        master = DBAPICatalog(spark, _factory(mpath))
+        slave = DBAPICatalog(spark, _factory(spath))
+        m, s = master.table("t"), slave.table("t")
+        driver = digest.driver_comparable(m, s)
+        event(f"driver diff: {driver}, near: {near}")
+        if driver:
+            inserts, deletes = diff_rows(m.rows, s.rows, [0])
+            got = ({r[0] for r in inserts}, {k for (k,) in deletes})
+            d_ = diff_tables(m.df, s.df, ["k"])
+            spark_deletes = {r.k for r in d_["delete"].collect()}
+            spark_inserts = {r.k for r in rows_to_copy(
+                m.df, d_["missing"].unionByName(d_["delete"]), ["k"]
+            ).collect()}
+            want = (spark_inserts, spark_deletes)
+            if near:
+                assert got[0] >= want[0] and got[1] >= want[1], (got, want)
+            else:
+                assert got == want
+        assert sync(master, slave).ok
+        if driver or not near:
+            assert _except_both_ways(mpath, spath) == [[], []]
+            assert all(r.status == "noop" for r in sync(master, slave).results)
+
+
+def test_converging_dbapi_sync_runs_no_spark_job(spark, dbapi_pair,
+                                                 jobs_in_group):
+    mpath, spath = dbapi_pair
+    with sqlite3.connect(spath) as conn:
+        conn.execute("UPDATE t SET v = 'edited' WHERE id = 7")
+        conn.execute("INSERT INTO t VALUES (99, 'excess', 1.0)")
+    master = DBAPICatalog(spark, _factory(mpath))
+    slave = DBAPICatalog(spark, _factory(spath))
+    with jobs_in_group() as jobs:
+        report = sync(master, slave)
+    assert [(r.status, r.inserted, r.deleted) for r in report.results] == [
+        ("ok", 6, 2)]
+    assert jobs == []
+    assert _except_both_ways(mpath, spath) == [[], []]
+
+
+@pytest.mark.parametrize("master_rows, slave_rows, counts", [
+    # a slave key held twice, once with the master's content
+    ([(1, "a")], [(1, "a"), (1, "zzz")], (1, 1)),
+    # ... and a key held twice with neither copy the master's
+    ([(1, "a"), (2, "b")], [(1, "a"), (1, "zzz"), (2, "y"), (2, "z")],
+     (2, 3)),
+])
+def test_duplicate_slave_pk_converges_in_one_driver_sync(
+        spark, tmp_path, jobs_in_group, master_rows, slave_rows, counts):
+    """Every stray slave row counts as one delete, and each deleted
+    key's master row is copied back in the same sync, without a Spark
+    job."""
+    ddl = "CREATE TABLE t (id INTEGER, v TEXT)"
+    mpath = _create(str(tmp_path / "m.db"), ddl, master_rows)
+    spath = _create(str(tmp_path / "s.db"), ddl, slave_rows)
+    pk = {"t": ("id",)}
+    master = DBAPICatalog(spark, _factory(mpath), pk_map=pk)
+    slave = DBAPICatalog(spark, _factory(spath), pk_map=pk)
+    with jobs_in_group() as jobs:
+        report = sync(master, slave)
+    assert [(r.status, r.inserted, r.deleted) for r in report.results] == [
+        ("ok", *counts)]
+    assert jobs == []
+    with sqlite3.connect(spath) as conn:
+        assert conn.execute("SELECT * FROM t ORDER BY id").fetchall() == (
+            master_rows)
+    assert [r.status for r in sync(master, slave).results] == ["noop"]
+
+
+def test_null_key_rows_diff_as_in_a_spark_join(spark, tmp_path):
+    """A NULL in a key column never matches, in a Spark join or in the
+    driver diff: its slave rows are deletes and its master rows are
+    never inserted, so a repeated sync leaves such rows alone instead of
+    adding a copy each time."""
+    ddl = "CREATE TABLE t (id TEXT PRIMARY KEY, v TEXT)"
+    mpath = _create(str(tmp_path / "m.db"), ddl, [(None, "a"), ("k", "x")])
+    spath = _create(str(tmp_path / "s.db"), ddl, [(None, "b"), ("k", "y")])
+    master = DBAPICatalog(spark, _factory(mpath))
+    slave = DBAPICatalog(spark, _factory(spath))
+    m, s = master.table("t"), slave.table("t")
+    inserts, deletes = diff_rows(m.rows, s.rows, [0])
+    d = diff_tables(m.df, s.df, ["id"])
+    assert sorted(deletes, key=repr) == sorted(
+        ((r.id,) for r in d["delete"].collect()), key=repr)
+    assert inserts == [tuple(r) for r in rows_to_copy(
+        m.df, d["missing"].unionByName(d["delete"]), ["id"]).collect()]
+    for counts in ((1, 2), (0, 1)):
+        report = sync(master, slave)
+        assert [(r.inserted, r.deleted) for r in report.results] == [counts]
+        with sqlite3.connect(spath) as conn:
+            assert sorted(conn.execute("SELECT * FROM t").fetchall(),
+                          key=repr) == sorted([(None, "b"), ("k", "x")],
+                                              key=repr)

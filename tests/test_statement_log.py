@@ -291,3 +291,34 @@ def test_log_is_exactly_the_executed_delta(spark, dbs, tmp_path,
         block = f"-- delta {table}\n" + "".join(sql + ";\n" for _, sql in ran)
         rest = text[text.index(block) + len(block):]
         assert rest == "" or rest.startswith("-- "), table
+
+
+def test_driver_delta_logs_the_literals_of_a_built_frame(spark, tmp_path,
+                                                         monkeypatch):
+    """A delta diffed from two DBAPI handles' rows is typed as a built
+    frame would hold it: an int a DOUBLE (NUMERIC) column stores logs as
+    ``1.0``, a BOOLEAN column's 0/1 log as ``0``/``1``, and the
+    changelog takes the same rows. No DataFrame is built from the rows."""
+    ddl = "CREATE TABLE t (id INTEGER PRIMARY KEY, x NUMERIC, ok BOOLEAN)"
+    mpath, spath = str(tmp_path / "m.db"), str(tmp_path / "s.db")
+    for path, rows in ((mpath, [(1, 1, 1), (2, 2, 0), (3, 4, 0)]),
+                       (spath, [(1, 3, 1), (2, 2, 0)])):
+        with sqlite3.connect(path) as conn:
+            conn.execute(ddl)
+            conn.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
+    monkeypatch.setattr(DBAPICatalog, "_rows_to_df",
+                        lambda *a: pytest.fail("built a DataFrame"))
+    log, clog = str(tmp_path / "queries.sql"), str(tmp_path / "changelog")
+    rep = sync(DBAPICatalog(spark, _factory(mpath)),
+               DBAPICatalog(spark, _factory(spath)),
+               SyncConfig(log_statements=log, changelog_path=clog))
+    assert [(r.status, r.inserted, r.deleted) for r in rep.results] == [
+        ("ok", 2, 1)]
+    text = open(log).read()
+    assert ('INSERT INTO "t" ("id", "x", "ok") VALUES (1, 1.0, 1),'
+            '(3, 4.0, 0);') in text, text
+    got = sorted(tuple(r) for r in spark.read.parquet(clog)
+                 .select("op", "pk").collect())
+    assert got == [("delete", '{"id":1}'), ("insert", '{"id":1}'),
+                   ("insert", '{"id":3}')]
+    assert _dump_all(spath) == _dump_all(mpath)
