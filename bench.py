@@ -418,44 +418,6 @@ def run_group(group: str) -> None:
                 )
             )
             times["fixed_work"] = round(time.time() - t0, 3)
-            # ~1.4 s fixed-SHUFFLE host normalizer (r12, VERDICT r11
-            # item 1): fixed_work is pure JVM-codegen CPU, so its
-            # quotient corrects compute speed but is blind to the
-            # memory-bandwidth / shuffle-IO contention real queries
-            # pay under ambient load (BASELINE.md names the gap; r10+
-            # r11 both read above band with flat fixed_work). This
-            # probe moves 16 M rows x ~40 B (hash key + incompressible
-            # md5 payload — constant payloads would lz4 away the IO
-            # component) through ONE full exchange and folds them:
-            # zero registry code dependence, contention-sensitive by
-            # construction. canary_norm3 divides by its quotient.
-            # Min of 3 reps per pass: the first execution of this plan
-            # in a session pays JIT/codegen compilation (~2.5 s extra,
-            # measured r12 — a steady-state 1.25 s probe read 3.8 s
-            # single-shot), which is JVM state, not host load; the
-            # min-of-reps converges to the contention floor the same
-            # way the action-floor's min-of-20 does.
-            probes = []
-            for _ in range(3):
-                t0 = time.time()
-                force(
-                    spark.range(0, 16_000_000, 1, int(CPUS))
-                    .select(
-                        F.pmod(F.xxhash64("id"), F.lit(1_000_003)).alias("k"),
-                        F.md5(F.col("id").cast("string")).alias("payload"),
-                    )
-                    .repartition(int(CPUS), "k")
-                    .select(
-                        F.sum(
-                            F.pmod(
-                                F.xxhash64("k", "payload"),
-                                F.lit(1_000_000_007),
-                            )
-                        ).alias("s")
-                    )
-                )
-                probes.append(time.time() - t0)
-            times["fixed_shuffle"] = round(min(probes), 3)
         for name in keys:
             t0 = time.time()
             force(qmap[name](spark, SF_DIR))
@@ -623,7 +585,7 @@ def main() -> None:
         sum(
             v
             for k, v in merged.items()
-            if k not in ("fixed_work", "fixed_shuffle", "fixed_shuffle2")
+            if k not in ("fixed_work", "fixed_shuffle2")
         ),
         3,
     )
@@ -657,32 +619,6 @@ def main() -> None:
         / max(merged.get("fixed_work", _R10_FIXED_WORK) / _R10_FIXED_WORK, 1e-9),
         3,
     )
-    # r12 normalizer v3 (VERDICT r11 item 1): same quotient form, but
-    # against the CONTENTION-SENSITIVE fixed-shuffle probe — ambient
-    # load that saturates memory bandwidth / shuffle IO inflates this
-    # denominator the way it inflates real queries, which the pure-CPU
-    # fixed_work quotient cannot see. Anchored to the r12 quiet-host
-    # measurement on this box (_R12_FIXED_SHUFFLE), so canary_norm3
-    # reads r12-equivalent seconds. A round-over-round canary move is
-    # "load" only if norm2 OR norm3 explains it to within the
-    # BASELINE.md band; otherwise it is a regression.
-    # RE-ANCHORED mid-r12 (BASELINE.md §r12-recal): the original 1.46
-    # calibration was itself taken under residual load — a genuinely
-    # idle host reads 0.94-1.18 (three idle canary-group runs
-    # 1.177/0.971/0.987; the mid-round full bench's in-session min
-    # 0.942). 0.95 is the idle in-bench steady state; with the 1.46
-    # anchor a QUIET host would read norm3 ~22 — outside its own band
-    # in the direction that cries regression on the best evidence.
-    _R12_FIXED_SHUFFLE = 0.95
-    canary_norm3 = round(
-        canary_total
-        / max(
-            merged.get("fixed_shuffle", _R12_FIXED_SHUFFLE)
-            / _R12_FIXED_SHUFFLE,
-            1e-9,
-        ),
-        3,
-    )
     # r13 normalizer v4 (VERDICT r12 item 8): same quotient form
     # against the LOW-VARIANCE fixed_shuffle2 probe (32 M-row single
     # exchange, mean of middle 3 of 5 reps, run once per bench after
@@ -708,7 +644,6 @@ def main() -> None:
         "canary_sec": canary_total,
         "canary_norm": canary_norm,
         "canary_norm2": canary_norm2,
-        "canary_norm3": canary_norm3,
         "canary_norm4": canary_norm4,
         "cpus": int(CPUS),
         "queries": merged,
@@ -743,10 +678,6 @@ def main() -> None:
         round(cpasses[p].get("fixed_work", 0.0), 2)
         for p in ("pass1", "pass2", "pass3")
     ]
-    shuffle_pass = [
-        round(cpasses[p].get("fixed_shuffle", 0.0), 2)
-        for p in ("pass1", "pass2", "pass3")
-    ]
     compact = {
         "metric": "total_headline_sec",
         "value": total,
@@ -760,14 +691,11 @@ def main() -> None:
         "canary_sec": canary_total,
         "canary_norm": canary_norm,
         "canary_norm2": canary_norm2,
-        "canary_norm3": canary_norm3,
         "canary_norm4": canary_norm4,
         "fixed_work": merged.get("fixed_work"),
-        "fixed_shuffle": merged.get("fixed_shuffle"),
         "fixed_shuffle2": merged.get("fixed_shuffle2"),
         "canary_pass_sec": canary_pass,
         "fixed_work_pass": fixed_pass,
-        "fixed_shuffle_pass": shuffle_pass,
         "n_queries": len(merged),
         "detail": "BENCH_DETAIL.json",
         "sf": float(sf) if sf else SF_DIR,

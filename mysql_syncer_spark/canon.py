@@ -33,6 +33,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mysql_syncer_spark.memo import SessionMemo
+
 NULL_SENTINEL = "NULL"
 HASH_SEP = "#"
 HASH_COL = "__row_hash"
@@ -106,30 +108,10 @@ def canonical_cols(df: DataFrame, cols: Sequence[str] | None = None) -> list[Col
     ]
 
 
-#: schema-keyed memo of built row-hash Columns (r12 wave 16): a Column
-#: is an immutable unresolved expression tree — the same object is
-#: reusable across DataFrames AND across session restarts in one
-#: process (verified: the py4j gateway outlives SparkSession.stop()).
-#: Building the canonical-cols tree costs ~20 py4j roundtrips per
-#: float column and ~5 per scalar column, re-paid on every diff /
-#: digest / SCD2 call; the memo pays it once per distinct schema.
-#: r13 hygiene (ADVICE r12): the key carries the py4j gateway's
-#: identity — a cached Column holds JavaObject refs that die with the
-#: gateway, so a forked/recreated gateway must never see the old
-#: entries — and the dict is bounded (drop-oldest past the cap; far
-#: above any real schema count, it only guards pathological callers
-#: that synthesize schemas in a loop).
-_ROW_HASH_CACHE: dict[tuple, Column] = {}
-_ROW_HASH_CACHE_MAX = 256
-
-
-def _gateway_token(df: DataFrame) -> int:
-    """Identity of the JVM gateway backing ``df``'s session (0 when the
-    internals are unavailable — no caching across unknown gateways)."""
-    try:
-        return id(df.sparkSession._sc._gateway)
-    except Exception:
-        return 0
+#: built row-hash Columns per session and schema: building the
+#: canonical-cols tree costs ~20 py4j round trips per float column and
+#: ~5 per scalar column, on every diff, digest and SCD2 call.
+_ROW_HASH_CACHE: SessionMemo[Column] = SessionMemo()
 
 
 def row_hash_col(df: DataFrame, cols: Sequence[str] | None = None) -> Column:
@@ -141,22 +123,10 @@ def row_hash_col(df: DataFrame, cols: Sequence[str] | None = None) -> Column:
     """
     by_name = {f.name: f.dataType for f in df.schema.fields}
     names = list(cols) if cols is not None else df.schema.fieldNames()
-    token = _gateway_token(df)
-    key = (token, *((n, by_name[n].simpleString()) for n in names))
-    col = _ROW_HASH_CACHE.get(key) if token else None
-    if col is None:
-        col = F.md5(F.concat_ws(HASH_SEP, *canonical_cols(df, cols)))
-        if token:
-            # snapshot + pop: pooled callers evict concurrently, and
-            # iterating the live dict or deleting a key another thread
-            # already dropped would raise
-            stale = [k for k in list(_ROW_HASH_CACHE) if k[0] != token]
-            for k in stale:
-                _ROW_HASH_CACHE.pop(k, None)
-            while len(_ROW_HASH_CACHE) >= _ROW_HASH_CACHE_MAX:
-                _ROW_HASH_CACHE.pop(next(iter(_ROW_HASH_CACHE)), None)
-            _ROW_HASH_CACHE[key] = col
-    return col
+    key = tuple((n, by_name[n].simpleString()) for n in names)
+    return _ROW_HASH_CACHE.get(
+        df.sparkSession, key,
+        lambda: F.md5(F.concat_ws(HASH_SEP, *canonical_cols(df, cols))))
 
 
 def with_row_hash(

@@ -139,54 +139,44 @@ def _side_digest(df: DataFrame, cols: Sequence[str]) -> tuple:
     return (r["hash_sum"], r["hash_xor"], r["row_count"])
 
 
-#: Spark type -> the Python value types the driver gate compares for
-#: it. ``==`` on these is exact and agrees with the built frame: an int
-#: equal to a float is that double (sqlite's NUMERIC affinity stores
-#: ``1.0`` as ``1`` next to ``2.5``), and a boolean column holds 0/1.
+#: Spark type -> the one Python type of its non-NULL values in typed
+#: driver rows (``dbapi.typed_rows``). ``==`` on these is exact and
+#: agrees with the built frame.
 _DRIVER_TYPES: dict = {
-    T.LongType(): {int},
-    T.DoubleType(): {int, float},
-    T.StringType(): {str},
-    T.BinaryType(): {bytes},
-    T.BooleanType(): {int, bool},
+    T.LongType(): int,
+    T.DoubleType(): float,
+    T.StringType(): str,
+    T.BinaryType(): bytes,
+    T.BooleanType(): bool,
 }
 
 
-def _column_types(values) -> set:
-    return set(map(type, values)) - {type(None)}
-
-
-def _columns(rows: list, width: int) -> list:
-    """``rows`` as ``width`` columns (an empty list has empty columns)."""
-    return list(zip(*rows)) if rows else [()] * width
+def _typed_side(fields, rows: list) -> bool:
+    """Each non-NULL value of ``rows`` has its column's one driver type,
+    and no double is NaN."""
+    for f, col in zip(fields, zip(*rows)):
+        t = _DRIVER_TYPES.get(f.dataType)
+        if t is None or not set(map(type, col)) <= {t, type(None)}:
+            return False
+        if t is float and any(v != v for v in col):
+            return False
+    return True
 
 
 def driver_comparable(a: TableHandle, b: TableHandle) -> bool:
     """The type rule under every driver-side compare of two handles'
     rows, shared by the gate (:func:`_driver_verdict`) and the
     executor's driver row diff: both handles hold rows, their schemas
-    are equal, and per column both sides hold the same set of value
-    types — one type, or int and float in a double column, each one the
-    column's Spark type accepts (boolean values 0/1 only, no float NaN).
+    are equal, and on each side every non-NULL value has its column's
+    one driver type (:data:`_DRIVER_TYPES`) and no double is NaN.
     Python ``==`` on such values is exact and agrees with the built
-    frame. Anything else (an unhashable value, a NaN, which never equals
-    itself) is left to the Spark path, which renders NaN as ``'NaN'``."""
+    frame. Anything else (an untyped value, an unhashable one, a NaN,
+    which never equals itself) is left to the Spark path, which renders
+    NaN as ``'NaN'``."""
     if a.rows is None or b.rows is None or a.schema != b.schema:
         return False
     fields = a.schema.fields
-    for f, ca, cb in zip(fields, _columns(a.rows, len(fields)),
-                         _columns(b.rows, len(fields))):
-        types = _column_types(ca)
-        if (types != _column_types(cb)
-                or not types <= _DRIVER_TYPES.get(f.dataType, set())
-                or len(types) > 1 and types != {int, float}):
-            return False
-        if (isinstance(f.dataType, T.BooleanType)
-                and not set(ca) | set(cb) <= {0, 1, None}):
-            return False
-        if float in types and any(v != v for v in ca + cb):
-            return False
-    return True
+    return _typed_side(fields, a.rows) and _typed_side(fields, b.rows)
 
 
 def _driver_verdict(a: TableHandle, b: TableHandle) -> bool | None:

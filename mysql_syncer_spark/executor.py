@@ -52,7 +52,6 @@ from mysql_syncer_spark.plans.plan import Action, SyncPlan, SyncUnit, plan_sync
 from mysql_syncer_spark.pooled import run_pooled
 from mysql_syncer_spark.sinks import jdbc
 from mysql_syncer_spark.sources.catalog import Catalog
-from mysql_syncer_spark.sources.dbapi import typed_rows
 
 
 @dataclass
@@ -210,16 +209,15 @@ class SyncExecutor:
                      res: UnitResult) -> None:
         """The row diff of two handles' driver-held rows
         (:func:`~mysql_syncer_spark.diff.diff_rows`, the keys of
-        :meth:`_apply_diff`). The delta is typed as a built frame would
-        hold it, so the statements carry the same literals on either
-        path, and reaches the log and the slave as row lists."""
-        fields = m.schema.fields
+        :meth:`_apply_diff`). The rows are typed as a built frame holds
+        them (``dbapi.typed_rows``), so the statements carry the same
+        literals on either path; the delta reaches the log and the slave
+        as row lists."""
         idx = [m.schema.fieldNames().index(c) for c in m.pk_cols]
         inserts, deletes = diff_rows(m.rows, s.rows, idx)
         res.inserted, res.deleted = len(inserts), len(deletes)
-        self._write_delta(table, m.pk_cols, typed_rows(fields, inserts),
-                          typed_rows([fields[i] for i in idx], deletes),
-                          None, res, schema=m.schema)
+        self._write_delta(table, m.pk_cols, inserts, deletes, None, res,
+                          schema=m.schema)
 
     def _diff_sync_pushdown(self, unit: SyncUnit, res: UnitResult) -> None:
         """Minimal-egress diff (SURVEY §4 row 2): the master computes the

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from mysql_syncer_spark.memo import SessionMemo
 from mysql_syncer_spark.pin import pin
 
 from mysql_syncer_spark.canon import (
@@ -1280,12 +1281,8 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     nearest the query. No oracle: the iterative float k-means is not
     SQL-expressible (driver records the rows-only check); recall vs the
     brute-force baseline is asserted in tests/test_similarity.py.
-    Every call pays the DECLARED computation — train + assign + probe
-    (the r12 per-sf_dir codebook memo made bench passes 2-3 skip
-    training entirely; VERDICT r12 flagged that as result memoization
-    and it was removed in r13). Train-once semantics live ONLY in
-    ``ann_topk_ivf_indexed``, the persisted-index serving path with
-    its own lifecycle tests."""
+    Every call trains, assigns and probes; train-once semantics live
+    only in ``ann_topk_ivf_indexed``, the persisted-index serving path."""
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = _query_vector(emb)
     cents = similarity.ivf_train(emb, k=8, iters=2)
@@ -1309,14 +1306,8 @@ def ann_topk_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = _query_vector(emb)
     tag = re.sub(r"\W+", "_", sf_dir).strip("_")
-    fp = _IVFIDX_FP_CACHE.get(sf_dir)
-    if fp is None:
-        row = emb.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("vec_id").cast("decimal(38,0)")).alias("s"),
-        ).first()
-        fp = f"{row['n']}_{int(row['s'] or 0) & 0xFFFFFFFFFFFF:x}"
-        _IVFIDX_FP_CACHE[sf_dir] = fp
+    fp = _IVFIDX_FP_CACHE.get(
+        spark, sf_dir, lambda: _content_fp(emb, "vec_id"))
     wh = spark.conf.get("spark.sql.warehouse.dir")
     path = f"{wh}/ivfidx_{tag}_{fp}"
     if not _location_files_exist(spark, f"{path}/meta"):
@@ -1337,10 +1328,7 @@ def ann_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (float k-means is not SQL-expressible — same status as
     ann_topk_ivf); recall and the numpy-reference encode equivalence
     are pytest-gated (tests/test_similarity.py TestPQ). Every call
-    pays the DECLARED computation — train + encode + ADC scan +
-    re-rank (the r12 per-sf_dir codebook memo made bench passes 2-3
-    skip training; removed in r13 per VERDICT r12 — train-once
-    semantics belong only to the ``_indexed`` serving keys)."""
+    trains, encodes, scans and re-ranks."""
     from mysql_syncer_spark.operators import similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1353,7 +1341,21 @@ def ann_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("score", F.round("score", 6))
 
 
-_IVFIDX_FP_CACHE: dict[str, str] = {}
+#: content fingerprints naming the persisted indexes, per session: the
+#: fingerprint scan runs once per session, not once per call
+_IVFIDX_FP_CACHE: SessionMemo[str] = SessionMemo()
+_MHIDX_FP_CACHE: SessionMemo[str] = SessionMemo()
+
+
+def _content_fp(df: DataFrame, *cols: str) -> str:
+    """``<rows>_<hash>`` over ``cols`` of ``df``: one two-column agg.
+    decimal(38,0): ANSI mode makes a long SUM of 64-bit hashes throw on
+    overflow (the digests' rule)."""
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("s"),
+    ).first()
+    return f"{row['n']}_{int(row['s'] or 0) & 0xFFFFFFFFFFFF:x}"
 
 
 @_register("approx_distinct_users_events")
@@ -2063,9 +2065,6 @@ def _ingest_pair(spark: SparkSession, sf_dir: str, split: int):
     return docs.where(b < split), docs.where(b >= split)
 
 
-_MHIDX_FP_CACHE: dict[tuple[str, int], str] = {}
-
-
 def _ingest_gate_indexed(
     spark: SparkSession, sf_dir: str, split: int
 ) -> DataFrame:
@@ -2075,29 +2074,17 @@ def _ingest_gate_indexed(
     )
 
     corpus, incoming = _ingest_pair(spark, sf_dir, split)
-    # Index name carries a CONTENT fingerprint (one two-column agg —
-    # a single scan, nothing like the full shingle/sign cost): a fresh
-    # process re-attaches the on-disk index when the corpus is
-    # byte-identical and can never silently serve an index built from
-    # different data. The hash covers the TEXT itself, not its length:
-    # an (id, length)-only fingerprint collided at sf1 with an index
-    # built from an older synth whose replica texts were deliberately
-    # length-preserving — 18 near-dup pairs silently missed (r8
-    # root-cause). Cached per (sf_dir, split) so repeat calls in one
-    # session skip even that scan.
+    # Index name carries a CONTENT fingerprint (a single scan, nothing
+    # like the full shingle/sign cost): a fresh process re-attaches the
+    # on-disk index when the corpus is byte-identical and can never
+    # silently serve an index built from different data. The hash
+    # covers the TEXT itself, not its length: an (id, length)-only
+    # fingerprint collided at sf1 with an index built from an older
+    # synth whose replica texts were deliberately length-preserving —
+    # 18 near-dup pairs silently missed (r8 root-cause).
     tag = re.sub(r"\W+", "_", sf_dir).strip("_")
-    fp = _MHIDX_FP_CACHE.get((sf_dir, split))
-    if fp is None:
-        row = corpus.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal(38,0): ANSI mode makes a long SUM of 64-bit hashes
-            # throw on overflow (same rule as the digests)
-            F.sum(
-                F.xxhash64("doc_id", "text").cast("decimal(38,0)")
-            ).alias("s"),
-        ).first()
-        fp = f"{row['n']}_{int(row['s'] or 0) & 0xFFFFFFFFFFFF:x}"
-        _MHIDX_FP_CACHE[(sf_dir, split)] = fp
+    fp = _MHIDX_FP_CACHE.get(
+        spark, (sf_dir, split), lambda: _content_fp(corpus, "doc_id", "text"))
     idx = ensure_minhash_index(
         corpus, f"mhidx_{tag}_{fp}_docs", num_hashes=16, bands=4
     )

@@ -113,9 +113,6 @@ def incremental_ingest_2pct_indexed(
     return _ingest_gate_indexed(spark, sf_dir, 9800)
 
 
-# (_MHIDX_FP_CACHE moved to _part1 with its user _ingest_gate_indexed)
-
-
 @_register(
     "bigram_logprob_docs",
     f"""WITH toks AS (
@@ -162,24 +159,18 @@ def bpe_tokens_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, operators/bpe.py), then Arrow-encoded. No SQL oracle
     (iterative training is not one query — rows-only here, like the
     IVF rows); exactness is pytest-gated against an independent
-    pure-Python reference trainer (tests/test_bpe.py). Merges cached
-    per sf_dir so repeat calls (bench passes) pay only the encode."""
+    pure-Python reference trainer (tests/test_bpe.py). Every call
+    trains the merges, then encodes."""
     from mysql_syncer_spark.operators.bpe import bpe_encode, bpe_train
 
     docs = load_table(spark, sf_dir, "documents")
-    merges = _BPE_CACHE.get(sf_dir)
-    if merges is None:
-        merges = bpe_train(docs, num_merges=20, min_freq=2)
-        _BPE_CACHE[sf_dir] = merges
+    merges = bpe_train(docs, num_merges=20, min_freq=2)
     return bpe_encode(docs, merges).select(
         "doc_id", "n_bpe_tokens",
         # Surfaced as a string: the driver's pandas canonicalizer
         # sort_values cannot hash list columns (r10 window TypeError).
         F.concat_ws(" ", F.slice("bpe_tokens", 1, 5)).alias("first_tokens"),
     )
-
-
-_BPE_CACHE: dict[str, list] = {}
 
 
 @_register(
@@ -1139,8 +1130,8 @@ def quality_score_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-local gradient aggregation, scoring a broadcast map-side
     transform). Rows-only: a trained model has no SQL-oracle form;
     separation/determinism/round-trip are pytest-gated
-    (tests/test_classifier.py). Model cached per sf_dir so bench passes
-    measure the scoring path."""
+    (tests/test_classifier.py). Every call trains the model, then
+    scores."""
     from mysql_syncer_spark.operators.classifier import (
         score_quality,
         train_quality_classifier,
@@ -1148,18 +1139,12 @@ def quality_score_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    model = _QMODEL_CACHE.get(sf_dir)
-    if model is None:
-        model = train_quality_classifier(
-            weak_labels_from_gopher(docs), num_features=1 << 14
-        )
-        _QMODEL_CACHE[sf_dir] = model
+    model = train_quality_classifier(
+        weak_labels_from_gopher(docs), num_features=1 << 14
+    )
     return score_quality(docs.select("doc_id", "text"), model).select(
         "doc_id", "quality_score"
     )
-
-
-_QMODEL_CACHE: dict[str, object] = {}
 
 
 @_register(

@@ -2343,10 +2343,7 @@ def pca_whiten_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    model = _PCA_CACHE.get(sf_dir)
-    if model is None:
-        model = pca_train(emb, n_components=8, whiten=True)
-        _PCA_CACHE[sf_dir] = model
+    model = pca_train(emb, n_components=8, whiten=True)
     out = pca_apply(emb, model)
     # scalar surface (driver canonicalizer hashes pandas sort_values —
     # array columns are unhashable, the r10 bpe red-row class): leading
@@ -2366,6 +2363,3 @@ def pca_whiten_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("pca_norm"),
     )
-
-
-_PCA_CACHE: dict = {}

@@ -41,6 +41,7 @@ from pyspark.sql import types as T
 
 from mysql_syncer_spark.config import TableHandle
 from mysql_syncer_spark.diff import apply_delta
+from mysql_syncer_spark.memo import SessionMemo
 
 #: PKs of the driver fixture tables (FIXTURES.md §1) — parquet carries no
 #: PK metadata, so parquet-mode catalogs take a pk map with these defaults.
@@ -990,22 +991,13 @@ def configure_session(builder):
     )
 
 
-#: (session UUID, dir, table) -> lazy DataFrame (r12 wave 16): a warm
-#: `spark.read.parquet` costs ~110-180 ms per call (file listing +
-#: footer schema read) and the registry pays it 1-3x per query build,
-#: every pass. The memo holds the LAZY plan only — every action still
-#: scans the parquet files, nothing is materialized — and is keyed on
-#: the owning session's UUID so a new session never sees a frame bound
-#: to a stopped one. Entries of OTHER session UUIDs are evicted on
-#: insert (r13, ADVICE r12): frames of stopped sessions held JVM plan
-#: refs forever in processes that cycle sessions (test suites,
-#: services); eviction runs on EVERY call (the cache holds at most a
-#: fixture-catalog's worth of keys, so the scan is trivial), not just
-#: on miss — a hit for an already-cached table must not keep a dead
-#: session's frames alive. Fixture dirs are immutable by contract; callers
-#: that rewrite a path mid-session must not route it through
-#: load_table (none do — the sync executor uses ParquetCatalog).
-_LOAD_TABLE_CACHE: dict[tuple, DataFrame] = {}
+#: lazy fixture DataFrames per session, dir and table: a warm
+#: ``spark.read.parquet`` costs ~110-180 ms (file listing and footer
+#: read), and the registry reads each table 1-3 times per query build.
+#: Only the lazy plan is held; every action still scans the files.
+#: Fixture dirs are immutable by contract (the sync executor reads
+#: through ParquetCatalog, never through this memo).
+_LOAD_TABLE_CACHE: SessionMemo[DataFrame] = SessionMemo()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1021,26 +1013,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # depend on the host's default TZ (reference bootstrap.php:9-11)
     if spark.conf.get("spark.sql.session.timeZone", None) != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = (
-        spark._jsparkSession.sessionUUID(),
-        os.path.abspath(sf_dir),
-        name,
-    )
-    # snapshot + pop: pooled callers evict concurrently, and iterating
-    # the live dict or deleting a key another thread already dropped
-    # would raise
-    for stale in [k for k in list(_LOAD_TABLE_CACHE) if k[0] != key[0]]:
-        _LOAD_TABLE_CACHE.pop(stale, None)
-    cached = _LOAD_TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return _LOAD_TABLE_CACHE.get(
+        spark, (os.path.abspath(sf_dir), name),
+        lambda: _read_fixture(spark, sf_dir, name))
+
+
+def _read_fixture(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     for col in _NANOS_TS_COLS.get(name, ()):
         if dict(df.dtypes).get(col) == "bigint":
             df = df.withColumn(
                 col, F.timestamp_micros(F.expr(f"{col} div 1000"))
             )
-    _LOAD_TABLE_CACHE[key] = df
     return df
 
 

@@ -40,6 +40,7 @@ from __future__ import annotations
 import datetime as _dt
 import threading
 from collections.abc import Callable, Mapping, Sequence
+from operator import itemgetter
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
@@ -123,11 +124,24 @@ def _typed_column(field: T.StructField, values: Sequence) -> list:
 
 
 def typed_rows(fields: Sequence[T.StructField], rows: list) -> list:
-    """Fetched rows with every column typed by :func:`_typed_column`:
-    the values a frame built from them holds, so a statement renders
-    the same literals from either (an int in a DOUBLE column as
-    ``1.0``)."""
-    cols = [_typed_column(f, c) for f, c in zip(fields, zip(*rows))]
+    """Fetched rows as the driver compares and writes them: an int in a
+    DOUBLE column becomes that double (sqlite's NUMERIC affinity stores
+    ``1.0`` as ``1``), and 0/1 in a BOOLEAN column become booleans, the
+    values a frame built from the rows holds. An out-of-range BOOLEAN
+    value stays as fetched, for the frame build to refuse. ``rows``
+    itself when no value changes."""
+    fix = [i for i, f in enumerate(fields)
+           if isinstance(f.dataType, (T.DoubleType, T.BooleanType))
+           and int in set(map(type, map(itemgetter(i), rows)))]
+    if not fix:
+        return rows
+    cols = list(zip(*rows))
+    for i in fix:
+        if isinstance(fields[i].dataType, T.DoubleType):
+            cols[i] = _typed_column(fields[i], cols[i])
+        else:
+            cols[i] = [bool(v) if type(v) is int and v in (0, 1) else v
+                       for v in cols[i]]
     return list(zip(*cols))
 
 
@@ -259,8 +273,9 @@ class DBAPICatalog(Catalog):
         return self._memo(name, lambda: self._resolve(name))
 
     def _resolve(self, name: str) -> TableHandle:
-        """Every row of ``name`` through the driver, fetched once; the
-        handle builds its DataFrame from those rows on first use."""
+        """Every row of ``name`` through the driver, fetched once and
+        typed (:func:`typed_rows`); the handle builds its DataFrame from
+        those rows on first use."""
         conn = self.connect_factory()
         try:
             cols, pk, schema = self._shape(conn, name)
@@ -269,6 +284,7 @@ class DBAPICatalog(Catalog):
             rows = self._run(conn, f"SELECT {col_list} FROM {q}{name}{q}")
         finally:
             conn.close()
+        rows = typed_rows(schema.fields, rows)
         return TableHandle(
             name=name,
             pk_cols=pk,

@@ -34,7 +34,7 @@ from mysql_syncer_spark.diff import diff_rows, diff_tables, rows_to_copy
 from mysql_syncer_spark.executor import sync
 from mysql_syncer_spark.plans.plan import plan_sync
 from mysql_syncer_spark.sources.catalog import ParquetCatalog
-from mysql_syncer_spark.sources.dbapi import DBAPICatalog
+from mysql_syncer_spark.sources.dbapi import DBAPICatalog, typed_rows
 
 
 def _factory(path):
@@ -142,7 +142,7 @@ def test_driver_equal_implies_spark_equal(spark, pair):
 
 
 def test_driver_verdicts():
-    """Equal, different and undecided on handcrafted row lists."""
+    """Equal, different and undecided on handcrafted typed row lists."""
     schema = T.StructType([T.StructField("x", T.DoubleType()),
                            T.StructField("o", T.BooleanType())])
 
@@ -151,24 +151,45 @@ def test_driver_verdicts():
                            build=lambda: pytest.fail("built a DataFrame"))
 
     v = digest._driver_verdict
-    assert v(h((1, 1), (2.5, None)), h((2.5, None), (1.0, 1))) is None
-    assert v(h((1, 1), (2.5, 0)), h((2.5, 0), (1, 1))) is True
+    assert v(h((1.0, True), (2.5, None)),
+             h((2.5, None), (1.0, True))) is True
     assert v(h(), h()) is True
-    assert v(h((1.0, 1)), h((1.0, 1), (1.0, 1))) is False
-    assert v(h((1.0, 1), (2.0, 1)), h((1.0, 1), (1.0, 1))) is False
-    # a boolean column outside 0/1 is left to the Spark path
-    assert v(h((1.0, 2)), h((1.0, 2))) is None
-    assert v(h((1.0, True)), h((1.0, 1))) is None
-    assert v(h(("1", 1)), h(("1", 1))) is None
-    assert v(h(([1], 1)), h(([1], 1))) is None  # unhashable: not a float
+    assert v(h(), h((1.0, True))) is False
+    assert v(h((1.0, True)), h((1.0, True), (1.0, True))) is False
+    assert v(h((1.0, True), (2.0, True)),
+             h((1.0, True), (1.0, True))) is False
+    # a value not of its column's one type is left to the Spark path:
+    # rows are typed when fetched, so an int here was not typed
+    assert v(h((1, True)), h((1.0, True))) is None
+    assert v(h((1.0, 1)), h((1.0, True))) is None
+    assert v(h((1.0, 2)), h((1.0, 2))) is None  # out-of-range boolean
+    assert v(h(("1", True)), h(("1", True))) is None
+    assert v(h(([1], True)), h(([1], True))) is None  # not a float
     # two NaN objects never compare equal: the Spark gate renders 'NaN'
-    assert v(h((float("nan"), 1)), h((float("nan"), 1))) is None
-    assert v(h((1, 1), (float("nan"), 0)), h((1, 1), (2.5, 0))) is None
-    assert not digest.driver_comparable(h((float("nan"), 1)), h((1.0, 1)))
-    assert digest.driver_comparable(h((1, 1), (2.5, None)),
-                                    h((2.5, 0), (1, 1)))
+    assert v(h((float("nan"), True)), h((float("nan"), True))) is None
+    assert v(h((1.0, True), (float("nan"), False)),
+             h((1.0, True), (2.5, False))) is None
+    assert not digest.driver_comparable(h((float("nan"), True)),
+                                        h((1.0, True)))
+    # the rule holds per side: an empty or all-NULL side is comparable
+    assert digest.driver_comparable(h((1.0, True), (2.5, None)), h())
+    assert digest.driver_comparable(h((None, None)), h((2.5, False)))
     # a driver verdict is final: no DataFrame, no Spark job
-    assert digest.digests_equal(h((1.0, 1)), h((1.0, 1))) is True
+    assert digest.digests_equal(h((1.0, True)), h((1.0, True))) is True
+
+
+def test_typed_rows_types_only_columns_that_change():
+    fields = [T.StructField("i", T.LongType()),
+              T.StructField("x", T.DoubleType()),
+              T.StructField("o", T.BooleanType())]
+    rows = [(1, 2.5, True), (2, None, None)]
+    assert typed_rows(fields, rows) is rows
+    assert typed_rows(fields, []) == []
+    typed = typed_rows(fields, [(1, 2, 1), (2, 2.5, 2)])
+    assert [tuple(map(type, r)) for r in typed] == [(int, float, bool),
+                                                    (int, float, int)]
+    assert typed == [(1, 2.0, True), (2, 2.5, 2)]  # 2 is left for the
+    # frame build to refuse
 
 
 # -- lazy handles, zero Spark jobs -----------------------------------------
@@ -452,6 +473,39 @@ def test_converging_dbapi_sync_runs_no_spark_job(spark, dbapi_pair,
         ("ok", 6, 2)]
     assert jobs == []
     assert _except_both_ways(mpath, spath) == [[], []]
+
+
+def test_empty_slave_table_diffs_in_the_driver(spark, tmp_path,
+                                               jobs_in_group):
+    rows = [(k, f"v{k}", k * 0.5) for k in range(20)]
+    mpath = _create(str(tmp_path / "m.db"), KEYED_DDL, rows)
+    spath = _create(str(tmp_path / "s.db"), KEYED_DDL, [])
+    master = DBAPICatalog(spark, _factory(mpath))
+    slave = DBAPICatalog(spark, _factory(spath))
+    with jobs_in_group() as jobs:
+        report = sync(master, slave)
+    assert [(r.action, r.status, r.inserted, r.deleted)
+            for r in report.results] == [("diff_sync", "ok", 20, 0)]
+    assert jobs == []
+    assert _except_both_ways(mpath, spath) == [[], []]
+
+
+def test_numeric_past_2_53_converges_then_noops(spark, tmp_path):
+    """A NUMERIC (double) column holding the integer 2^53+1 reads as the
+    double 2^53, which is what the slave stores: the table converges and
+    then re-syncs as noop instead of being rewritten every time."""
+    ddl = "CREATE TABLE t (id INTEGER PRIMARY KEY, n NUMERIC)"
+    mpath = _create(str(tmp_path / "m.db"), ddl, [(1, 2**53 + 1), (2, 2.5)])
+    spath = _create(str(tmp_path / "s.db"), ddl, [(2, 2.5)])
+    master = DBAPICatalog(spark, _factory(mpath))
+    slave = DBAPICatalog(spark, _factory(spath))
+    first = sync(master, slave)
+    assert [(r.status, r.inserted, r.deleted) for r in first.results] == [
+        ("ok", 1, 0)]
+    with sqlite3.connect(spath) as conn:
+        assert conn.execute("SELECT n FROM t WHERE id = 1").fetchall() == [
+            (2**53,)]
+    assert [r.status for r in sync(master, slave).results] == ["noop"]
 
 
 @pytest.mark.parametrize("master_rows, slave_rows, counts", [
