@@ -163,20 +163,26 @@ def _typed_side(fields, rows: list) -> bool:
     return True
 
 
+def driver_rows(h: TableHandle) -> list | None:
+    """``h``'s driver rows if every non-NULL value has its column's one
+    driver type (:data:`_DRIVER_TYPES`) and no double is NaN, else None
+    (no rows, a BOOLEAN 2, a NaN: use ``h.df``). Such rows stand in for
+    the built frame: they are gated, diffed and full-copied as held."""
+    if h.rows is None or not _typed_side(h.schema.fields, h.rows):
+        return None
+    return h.rows
+
+
 def driver_comparable(a: TableHandle, b: TableHandle) -> bool:
     """The type rule under every driver-side compare of two handles'
     rows, shared by the gate (:func:`_driver_verdict`) and the
-    executor's driver row diff: both handles hold rows, their schemas
-    are equal, and on each side every non-NULL value has its column's
-    one driver type (:data:`_DRIVER_TYPES`) and no double is NaN.
-    Python ``==`` on such values is exact and agrees with the built
-    frame. Anything else (an untyped value, an unhashable one, a NaN,
-    which never equals itself) is left to the Spark path, which renders
-    NaN as ``'NaN'``."""
-    if a.rows is None or b.rows is None or a.schema != b.schema:
-        return False
-    fields = a.schema.fields
-    return _typed_side(fields, a.rows) and _typed_side(fields, b.rows)
+    executor's driver row diff: both sides' rows pass
+    :func:`driver_rows` and the schemas are equal. Python ``==`` on such
+    values is exact and agrees with the built frame. Anything else (an
+    unhashable value, a NaN, which never equals itself) is left to the
+    Spark path, which renders NaN as ``'NaN'``."""
+    return (driver_rows(a) is not None and driver_rows(b) is not None
+            and a.schema == b.schema)
 
 
 def _driver_verdict(a: TableHandle, b: TableHandle) -> bool | None:

@@ -47,6 +47,7 @@ from mysql_syncer_spark.digest import (
     differing_partitions,
     digests_equal,
     driver_comparable,
+    driver_rows,
 )
 from mysql_syncer_spark.plans.plan import Action, SyncPlan, SyncUnit, plan_sync
 from mysql_syncer_spark.pooled import run_pooled
@@ -159,7 +160,11 @@ class SyncExecutor:
             create = self.slave.create_table_sql(
                 unit.table, m.schema, m.pk_cols
             )
-            self._stmt_log.log_full_copy(unit.table, create, m.df)
+            rows = driver_rows(m)
+            self._stmt_log.log_full_copy(
+                unit.table, create, m.df if rows is None else rows,
+                m.schema.fieldNames(),
+            )
         if self.cfg.dry_run:
             res.status = "dry_run"
             return

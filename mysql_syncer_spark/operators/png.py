@@ -18,9 +18,9 @@ this module's job is to keep the pipeline REAL, not fast, where no
 image library exists.
 
 Self-contained stdlib-only by design and registered for cloudpickle
-by-value serialization (same rationale as sinks/jdbc.py): mapInPandas
-closures can call into it without requiring mysql_syncer_spark to be
-importable in executor Python workers.
+by-value serialization: mapInPandas closures can call into it without
+requiring mysql_syncer_spark to be importable in executor Python
+workers.
 """
 
 from __future__ import annotations

@@ -9,26 +9,24 @@ Synchronizer.php:566-582) is reproduced here:
 * statement builders are pure functions (unit-tested without a DB);
   each sink's statements come from one chunk-at-a-time generator, which
   the sink executes and the statement log writes;
-* the delta sinks (:func:`apply_deletes`, :func:`apply_replace`) run on
-  the DRIVER, one connection per table, and take the delta as a
-  DataFrame, streamed through ``toLocalIterator`` (:func:`stream_rows`),
-  or as a row list the driver already holds (a delta diffed from two
-  DBAPI handles' rows); they commit per chunk — idempotent under retry
-  because DELETE-by-PK and delete-before-insert replace
-  (TableConnection.php:599-627 replaceRows) re-apply cleanly;
-* full copies (:func:`apply_inserts`) stay distributed: one
-  ``foreachPartition`` connection per partition, opened by the executor
-  (a connection can't be pickled to workers);
+* every sink (:func:`apply_deletes`, :func:`apply_inserts`,
+  :func:`apply_replace`) runs on the DRIVER, one connection per call,
+  committing per chunk. It takes a DataFrame, streamed through
+  ``toLocalIterator`` (:func:`stream_rows`), or a row list the driver
+  already holds (a delta diffed from two DBAPI handles, or a DBAPI
+  master's rows). A delta re-applies cleanly under retry (DELETE-by-PK,
+  delete-before-insert replace, TableConnection.php:599-627); a full
+  copy that fails partway leaves a partial table with the master's
+  schema, which the next sync converges;
 * ``chunk_size`` plays the reference's CHUNK_SIZE role
   (settings.php.tmpl:32-34): it bounds statement size and, given a
-  delta's row count, the streamed partition size.
+  frame's row count, the streamed partition size.
 """
 
 from __future__ import annotations
 
 import itertools
 import math
-import sys
 from collections.abc import Callable, Iterable, Iterator, Sequence
 from datetime import date, datetime, timezone
 from decimal import Decimal
@@ -36,18 +34,6 @@ from decimal import Decimal
 from pyspark.sql import DataFrame
 
 DEFAULT_CHUNK_SIZE = 5000  # reference CHUNK_SIZE (settings.php.tmpl:34)
-
-# apply_inserts' foreachPartition closure references this module's statement
-# builders; by default cloudpickle ships module functions BY REFERENCE,
-# which requires mysql_syncer_spark to be importable inside executor
-# Python workers (--py-files). Registering the module for by-value
-# pickling removes that deployment requirement for the sink path.
-try:
-    from pyspark import cloudpickle as _cp
-
-    _cp.register_pickle_by_value(sys.modules[__name__])
-except Exception:  # pragma: no cover - older pyspark layouts
-    pass
 
 
 def sql_literal(v, backslash_escapes: bool = False) -> str:
@@ -187,12 +173,13 @@ def chunked(it: Iterator, size: int) -> Iterator[list]:
 def stream_rows(df: DataFrame | list, rows: int | None = None,
                 chunk_size: int = DEFAULT_CHUNK_SIZE) -> Iterator:
     """Stream ``df`` into the driver one partition at a time; a row list
-    (a delta the driver diffed) is iterated as it is. ``rows`` (the
-    frame's known row count) first coalesces it to
-    ``ceil(rows / chunk_size)`` partitions: ``toLocalIterator`` runs one
-    job per partition, so a one-chunk delta costs one job, and a
+    (a delta the driver diffed, or a DBAPI master's rows) is iterated
+    as it is. ``rows`` (the frame's known row count) first coalesces it
+    to ``ceil(rows / chunk_size)`` partitions: ``toLocalIterator`` runs
+    one job per partition, so a one-chunk delta costs one job, and a
     partition stays about one chunk at any delta size. ``coalesce``
-    never raises the partition count."""
+    never raises the partition count. Without ``rows`` (a full copy's
+    frame is not counted) each of the frame's partitions is one job."""
     if isinstance(df, list):
         return iter(df)
     if rows is not None:
@@ -236,12 +223,10 @@ def insert_statements(rows: Iterator, table: str, cols: Sequence[str],
 
 
 def _execute(connection_factory: Callable[[], object],
-             chunks: Iterable[Sequence[str]], per_chunk: bool = True) -> None:
-    """Run every chunk's statements on ONE connection, opened with the
-    first chunk (an empty stream opens none). Commits after each chunk,
-    or with ``per_chunk=False`` once at the end: a retried
-    ``foreachPartition`` task must not re-insert rows an earlier attempt
-    committed."""
+             chunks: Iterable[Sequence[str]]) -> None:
+    """Run every chunk's statements on ONE driver connection, opened
+    with the first chunk (an empty stream opens none), committing after
+    each chunk."""
     conn = None
     try:
         for statements in chunks:
@@ -250,9 +235,6 @@ def _execute(connection_factory: Callable[[], object],
                 cur = conn.cursor()
             for stmt in statements:
                 cur.execute(stmt)
-            if per_chunk:
-                conn.commit()
-        if conn is not None:
             conn.commit()
     finally:
         if conn is not None:
@@ -278,23 +260,23 @@ def apply_deletes(
 
 
 def apply_inserts(
-    rows: DataFrame,
+    df: DataFrame | list,
     table: str,
     connection_factory: Callable[[], object],
     chunk_size: int = DEFAULT_CHUNK_SIZE,
     quote: str = "`",
     backslash_escapes: bool = False,
+    rows: int | None = None,
+    cols: Sequence[str] | None = None,
 ) -> None:
-    """Execute chunked multi-row inserts, one connection per partition
-    (a table-sized full copy: the one distributed sink)."""
-    cols = rows.columns
-
-    def run(partition: Iterator) -> None:
-        _execute(connection_factory, insert_statements(
-            partition, table, cols, chunk_size, quote, backslash_escapes
-        ), per_chunk=False)
-
-    rows.foreachPartition(run)
+    """Chunked multi-row inserts of ``df`` (a frame or a row list named
+    ``cols``) from the driver, on one connection: a full copy's rows.
+    ``rows``: see :func:`stream_rows`."""
+    cols = df.columns if cols is None else cols
+    _execute(connection_factory, insert_statements(
+        stream_rows(df, rows, chunk_size), table, cols, chunk_size, quote,
+        backslash_escapes,
+    ))
 
 
 def apply_replace(

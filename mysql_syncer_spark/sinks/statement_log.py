@@ -12,11 +12,14 @@ same file without touching the slave — a replayable PREVIEW.
 
 Statements come from the sinks' own generators
 (:func:`~mysql_syncer_spark.sinks.jdbc.delete_statements` /
-:func:`~mysql_syncer_spark.sinks.jdbc.replace_statements`), fed the
-same delta — DataFrames streamed with the same row counts, or the row
-lists of a delta the driver diffed — so the log is byte-for-byte the
-statement stream :func:`~mysql_syncer_spark.sinks.jdbc.apply_deletes`
-and :func:`~mysql_syncer_spark.sinks.jdbc.apply_replace` execute.
+:func:`~mysql_syncer_spark.sinks.jdbc.replace_statements` /
+:func:`~mysql_syncer_spark.sinks.jdbc.insert_statements`), fed the same
+rows — DataFrames streamed with the same row counts, or the row lists
+of a delta the driver diffed or of a DBAPI master's full copy — so the
+log is byte-for-byte the statement stream
+:func:`~mysql_syncer_spark.sinks.jdbc.apply_deletes`,
+:func:`~mysql_syncer_spark.sinks.jdbc.apply_replace` and
+:func:`~mysql_syncer_spark.sinks.jdbc.apply_inserts` execute.
 
 Scale note: a single SQL file is an inherently serial artifact. The
 emitter streams delta frames through ``toLocalIterator`` (driver memory
@@ -84,15 +87,18 @@ class StatementLog:
         self._append([f"-- drop {table}\n", f"DROP TABLE IF EXISTS {q};\n"])
 
     def log_full_copy(
-        self, table: str, create_sql: str, rows: DataFrame
+        self, table: str, create_sql: str, rows: DataFrame | list,
+        cols: Sequence[str] | None = None,
     ) -> None:
         """DROP + CREATE + chunked INSERTs (copyTable,
-        Synchronizer.php:330-354)."""
+        Synchronizer.php:330-354) of a frame or a row list named
+        ``cols``, as :func:`~mysql_syncer_spark.sinks.jdbc.apply_inserts`."""
         q = quote_ident(table, self.quote)
+        cols = rows.columns if cols is None else cols
         header = [f"-- full copy {table}\n", f"DROP TABLE IF EXISTS {q};\n",
                   create_sql.rstrip().rstrip(";") + ";\n"]
         self._append(header, insert_statements(
-            stream_rows(rows), table, rows.columns, self.chunk_size,
+            stream_rows(rows), table, cols, self.chunk_size,
             self.quote, self.backslash_escapes,
         ))
 

@@ -25,9 +25,9 @@ That read shape is deliberate and documented: driver-side fetch is
 correct at integration/smoke scale (and is what lets this sandbox run a
 REAL perturb→sync→converged scenario against an on-disk SQL database —
 see tests/test_dbapi_sync.py); it is NOT the 100 TB read path. Writes
-match it: a delta's chunked statements run on one driver-side
-connection per table, and only a full copy's inserts go through
-executor-side connections (sinks/jdbc.py).
+match it: a delta's and a full copy's chunked statements run on one
+driver-side connection per table (sinks/jdbc.py), and a DBAPI master's
+full copy writes the rows it already holds, building no DataFrame.
 
 Introspection speaks the sqlite dialect by default (``sqlite_master`` +
 ``PRAGMA table_info``, the stand-ins for SHOW TABLES / SHOW INDEX,
@@ -46,6 +46,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from mysql_syncer_spark.config import TableHandle
+from mysql_syncer_spark.digest import driver_rows
 from mysql_syncer_spark.sinks import jdbc
 from mysql_syncer_spark.sources.catalog import Catalog
 
@@ -168,34 +169,28 @@ def _spark_type(decltype: str) -> T.DataType:
     )
 
 
-class _InitFactory:
-    """Picklable connection-factory wrapper that runs session-init
-    statements on every NEW connection — the driver's DDL and delta-sink
-    connections and the full copy's executor-side ones alike. The Spark
-    mirror of the reference's startup queries, run once per mysqli
-    connection (DatabaseConnection.php:31-39,
-    SynchronizerFactory.php:16-19)."""
+def _with_session_init(factory: Callable[[], object],
+                       statements: Sequence[str]) -> Callable[[], object]:
+    """``factory`` running ``statements`` on every NEW connection the
+    engine opens: reads, DDL and every sink's. The mirror of the
+    reference's startup queries, run once per mysqli connection
+    (DatabaseConnection.php:31-39, SynchronizerFactory.php:16-19)."""
 
-    def __init__(self, factory: Callable[[], object],
-                 statements: Sequence[str]):
-        self.factory = factory
-        self.statements = tuple(statements)
-
-    def __call__(self):
-        conn = self.factory()
-        if self.statements:
-            cur = conn.cursor()
-            for stmt in self.statements:
-                cur.execute(stmt)
+    def connect():
+        conn = factory()
+        cur = conn.cursor()
+        for stmt in statements:
+            cur.execute(stmt)
         return conn
+
+    return connect
 
 
 class DBAPICatalog(Catalog):
     """A live SQL database as a catalog, via a DBAPI connection factory.
 
-    ``connect_factory`` must be picklable if a full copy writes the
-    catalog's tables (its insert sink is distributed: a module-level
-    function or ``functools.partial`` over one — executors re-connect).
+    Every connection is opened in the driver, so ``connect_factory``
+    may be any callable (a closure included).
 
     ``session_init`` statements run at the top of every connection the
     engine opens (SET FOREIGN_KEY_CHECKS=0 etc. — the reference's
@@ -214,7 +209,7 @@ class DBAPICatalog(Catalog):
     ):
         self.spark = spark
         self.connect_factory = (
-            _InitFactory(connect_factory, session_init)
+            _with_session_init(connect_factory, tuple(session_init))
             if session_init
             else connect_factory
         )
@@ -487,18 +482,22 @@ class DBAPICatalog(Catalog):
 
     def copy_table(self, name: str, master: TableHandle,
                    chunk_size: int) -> None:
-        """Drop + CREATE TABLE from the master's Spark schema + one
-        distributed insert pass — the reference's copyTable
-        (Synchronizer.php:330-354) without the chunked LIMIT/OFFSET
-        walk."""
+        """Drop + CREATE TABLE from the master's Spark schema, then
+        chunked inserts of its ``digest.driver_rows`` (else its frame,
+        resolved before the DROP) on one driver connection: the
+        reference's copyTable (Synchronizer.php:330-354) without the
+        LIMIT/OFFSET walk."""
         q = self.quote
+        rows = driver_rows(master)
+        source = master.df if rows is None else rows
         self._execute_ddl(
             f"DROP TABLE IF EXISTS {q}{name}{q}",
             self.create_table_sql(name, master.schema, master.pk_cols),
         )
         jdbc.apply_inserts(
-            master.df, name, self.connect_factory, chunk_size=chunk_size,
+            source, name, self.connect_factory, chunk_size=chunk_size,
             quote=q, backslash_escapes=self.backslash_escapes,
+            cols=master.schema.fieldNames(),
         )
 
     def apply_changes(self, name, pk_cols, inserts, deletes, current,

@@ -92,14 +92,11 @@ class _Recorder:
     def __init__(self, path: str):
         self.path = path
 
-    def factory(self, connect=None, session_init=()):
+    def factory(self, connect=None):
         """A connection factory whose connections record every executed
-        statement, then run it on ``connect()``'s real connection (or
-        nowhere, without ``connect``). ``session_init`` statements run
-        first on every connection, through ``_InitFactory``. A closure,
-        so cloudpickle ships it by value to executor workers."""
-        from mysql_syncer_spark.sources.dbapi import _InitFactory
-
+        statement, with the pid of the process that ran it, then run it
+        on ``connect()``'s real connection (or nowhere, without
+        ``connect``)."""
         path = self.path
 
         def factory():
@@ -132,8 +129,6 @@ class _Recorder:
 
             return Conn()
 
-        if session_init:
-            return _InitFactory(factory, session_init)
         return factory
 
     def recorded(self) -> list[tuple[int, str]]:
@@ -149,7 +144,7 @@ class _Recorder:
 
 @pytest.fixture()
 def recording_factory(tmp_path):
-    """``rec.factory(connect=None, session_init=())`` makes connection
+    """``rec.factory(connect=None)`` makes connection
     factories that log each executed statement with the pid of the
     process that ran it; ``rec.recorded()`` reads the log back."""
     return _Recorder(str(tmp_path / f"recorded-{uuid.uuid4().hex}.log"))

@@ -7,7 +7,7 @@ reached through the same DBAPI connection-factory contract the sinks
 use. Every plan action is exercised:
 
 * excess slave table            -> DROP (live DDL)
-* missing slave table           -> FULL_COPY (CREATE + distributed INSERT)
+* missing slave table           -> FULL_COPY (CREATE + chunked INSERT)
 * perturbed shared PK table     -> DIFF_SYNC (chunked DELETE/replace)
 * no-PK shared table            -> COPY_IF_CHANGED (digest-gated)
 
@@ -170,10 +170,9 @@ def test_sync_fetches_each_table_once_per_side(spark, shared_dbs,
                                                recording_factory):
     """The planner's driver-side fetch is the one the executor's unit
     uses: one sync runs each table's data SELECT once per side,
-    converging or noop. A DataFrame is built from those rows only for a
-    table the sync copies: ``tags`` on the master (its full copy reads
-    the master) when converging, nothing in the noop re-sync. ``orders``
-    is diffed from the driver-held rows and never becomes a frame."""
+    converging or noop. No DataFrame is built from those rows: the
+    full copy of ``tags`` writes the master's driver rows, and
+    ``orders`` is diffed from the driver-held rows."""
     import re
 
     mpath, spath = shared_dbs
@@ -206,7 +205,7 @@ def test_sync_fetches_each_table_once_per_side(spark, shared_dbs,
     (m_sel, m_seen), (s_sel, s_seen) = (
         selects(recording_factory, 0), selects(slave_rec, 0))
     assert (m_sel, s_sel) == (once, once)
-    assert builds == Counter({("master", "label"): 1})
+    assert builds == Counter()
 
     builds.clear()
     report2 = sync(master, slave)
@@ -352,3 +351,130 @@ def test_multi_chunk_delta_converges_in_one_sync(spark, shared_dbs,
               if any(f"({10_000 + k})" in s for k in range(5))]
     assert excess and max(excess) < first_insert
     assert all(r.status == "noop" for r in sync(master, slave).results)
+
+
+def _master_only_dbs(tmp_path, n=100):
+    """A master holding ``items`` (``n`` keyed rows) and ``other``, and
+    a slave holding only an empty ``other``: ``items`` is a FULL_COPY."""
+    mpath, spath = str(tmp_path / "m.db"), str(tmp_path / "s.db")
+    with sqlite3.connect(mpath) as m:
+        m.execute("CREATE TABLE items (id INTEGER PRIMARY KEY, v TEXT, "
+                  "w REAL)")
+        m.executemany("INSERT INTO items VALUES (?, ?, ?)",
+                      [(k, f"it's {k}", k / 4) for k in range(n)])
+    for path in (mpath, spath):
+        with sqlite3.connect(path) as conn:
+            conn.execute("CREATE TABLE other (id INTEGER PRIMARY KEY)")
+    return mpath, spath
+
+
+def test_dbapi_full_copy_runs_no_spark_job(spark, tmp_path, jobs_in_group):
+    """A DBAPI master's full copy into a DBAPI slave writes the rows the
+    driver already holds: the whole sync runs no Spark job."""
+    mpath, spath = _master_only_dbs(tmp_path)
+    master = DBAPICatalog(spark, _factory(mpath))
+    slave = DBAPICatalog(spark, _factory(spath))
+    with jobs_in_group() as jobs:
+        report = sync(master, slave, SyncConfig(chunk_size=16))
+    assert report.ok, [r.error for r in report.results]
+    assert {r.table: r.action for r in report.results}["items"] == "full_copy"
+    assert jobs == []
+    assert _dump(mpath, "items", "id") == _dump(spath, "items", "id")
+
+
+def test_parquet_to_dbapi_full_copy_streams_each_partition(
+        spark, tmp_path, jobs_in_group):
+    """A master without driver rows (parquet) streams its frame into
+    the slave one partition at a time: one job per partition, no count
+    job, and the slave converges."""
+    from mysql_syncer_spark.sources.catalog import ParquetCatalog
+
+    rows = _orders_rows()
+    mdir = tmp_path / "master"
+    spark.createDataFrame(
+        rows, "o_orderkey long, o_custkey long, o_status string, "
+              "o_totalprice double, o_comment string",
+    ).repartition(3).write.parquet(str(mdir / "orders.parquet"))
+    spath = str(tmp_path / "s.db")
+    sqlite3.connect(spath).close()
+    master = ParquetCatalog(spark, str(mdir), pk_map={"orders": ["o_orderkey"]})
+    parts = master.table("orders").df.rdd.getNumPartitions()
+    assert parts > 1
+    master.invalidate()
+    slave = DBAPICatalog(spark, _factory(spath))
+    with jobs_in_group() as jobs:
+        report = sync(master, slave, SyncConfig(chunk_size=64))
+    assert report.ok, [r.error for r in report.results]
+    assert len(jobs) == parts
+    assert _dump(spath, "orders", "o_orderkey") == sorted(rows)
+    assert all(r.status == "noop" for r in sync(master, slave).results)
+
+
+def test_full_copy_of_an_untyped_boolean_is_a_unit_error(spark, tmp_path):
+    """A master BOOLEAN cell holding 2 fails its table's full copy from
+    the frame build, naming the column, before the slave table is
+    touched; the other units still finish."""
+    mpath, spath = _flags_dbs(tmp_path, [(1, 2), (2, 0)], [])
+    with sqlite3.connect(spath) as s:
+        s.execute("DROP TABLE flags")
+    report = sync(DBAPICatalog(spark, _factory(mpath)),
+                  DBAPICatalog(spark, _factory(spath)))
+    by_table = {r.table: r for r in report.results}
+    assert by_table["flags"].action == "full_copy"
+    assert by_table["flags"].status == "error"
+    assert "column 'ok': 2 is not a boolean" in by_table["flags"].error
+    assert (by_table["other"].status, by_table["other"].inserted) == ("ok", 1)
+    with sqlite3.connect(spath) as s:
+        assert s.execute("SELECT name FROM sqlite_master "
+                         "WHERE name = 'flags'").fetchall() == []
+
+
+def _failing_factory(path, table, fail_at):
+    """``_factory(path)`` whose connections raise on the ``fail_at``-th
+    INSERT into ``table`` (counted over all connections), once."""
+    seen = [0]
+
+    class Cur:
+        def __init__(self, cur):
+            self.cur = cur
+
+        def execute(self, sql, *args):
+            if sql.startswith(f'INSERT INTO "{table}" '):
+                seen[0] += 1
+                if seen[0] == fail_at:
+                    raise sqlite3.OperationalError("simulated write failure")
+            return self.cur.execute(sql, *args)
+
+        def __getattr__(self, name):
+            return getattr(self.cur, name)
+
+    class Conn:
+        def __init__(self, conn):
+            self.conn = conn
+
+        def cursor(self):
+            return Cur(self.conn.cursor())
+
+        def __getattr__(self, name):
+            return getattr(self.conn, name)
+
+    return lambda: Conn(_factory(path)())
+
+
+def test_full_copy_failing_midway_converges_on_the_next_sync(spark, tmp_path):
+    """A copy whose connection fails on its second INSERT chunk is a
+    unit error that leaves the first chunk committed under the master's
+    schema; the next sync diffs that partial table and converges."""
+    mpath, spath = _master_only_dbs(tmp_path)
+    master = DBAPICatalog(spark, _factory(mpath))
+    slave = DBAPICatalog(spark, _failing_factory(spath, "items", 2))
+    cfg = SyncConfig(chunk_size=16)
+    items = {r.table: r for r in sync(master, slave, cfg).results}["items"]
+    assert items.status == "error"
+    assert "simulated write failure" in items.error
+    assert len(_dump(spath, "items", "id")) == 16
+    report = sync(master, slave, cfg)
+    assert report.ok, [r.error for r in report.results]
+    items = {r.table: r for r in report.results}["items"]
+    assert (items.action, items.inserted, items.deleted) == ("diff_sync", 84, 0)
+    assert _dump(mpath, "items", "id") == _dump(spath, "items", "id")

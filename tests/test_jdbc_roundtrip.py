@@ -8,10 +8,9 @@ for the connection-factory path — the same factory contract the
 executors use (sinks/jdbc.py:118-213); only the dialect knobs differ
 (double-quote idents, no backslash escapes).
 
-The statements really run against the on-disk DB: the delta sinks
-(apply_deletes, apply_replace) from the driver over one connection, the
-full-copy sink (apply_inserts) from executor-side Python workers via
-foreachPartition.
+The statements really run against the on-disk DB, every sink
+(apply_deletes, apply_replace, apply_inserts) from the driver over one
+connection.
 """
 
 import sqlite3
@@ -91,7 +90,8 @@ def test_delete_insert_roundtrip_converges(spark, dbs):
         d["delete"], "orders", ["o_orderkey"], factory,
         chunk_size=64, quote='"',
     )
-    apply_inserts(d["insert"], "orders", factory, chunk_size=64, quote='"')
+    apply_inserts(d["insert"], "orders", factory, chunk_size=64, quote='"',
+                  rows=d["insert"].count())
     after = _read_table(spark, spath, "orders")
     assert after.subtract(master).count() == 0
     assert master.subtract(after).count() == 0
@@ -118,18 +118,24 @@ def test_replace_upsert_roundtrip(spark, dbs):
     assert on_master.subtract(on_after).count() == 0
 
 
-def test_chunking_splits_statements(spark, dbs):
+def test_chunking_splits_statements(spark, dbs, recording_factory):
     """chunk_size really bounds statement size: 500 inserts at
-    chunk_size=7 must arrive complete (ceil(n/7) statements, all rows)."""
+    chunk_size=7 must arrive complete (ceil(n/7) statements, every one
+    but the last a full chunk, all rows), whatever the frame's
+    partitioning."""
     mpath, spath = dbs
     master = _read_table(spark, mpath, "orders")
     with sqlite3.connect(spath) as s:
         s.execute("DELETE FROM orders")
         s.commit()
     apply_inserts(
-        master.repartition(4), "orders", _connect_factory(spath),
+        master.repartition(4), "orders",
+        recording_factory.factory(_connect_factory(spath)),
         chunk_size=7, quote='"',
     )
+    inserts = [sql for _, sql in recording_factory.recorded()
+               if sql.startswith('INSERT INTO "orders"')]
+    assert [s.count("),(") + 1 for s in inserts] == [7] * 71 + [3]
     after = _read_table(spark, spath, "orders")
     assert after.count() == master.count()
     assert after.subtract(master).count() == 0

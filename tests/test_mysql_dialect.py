@@ -8,8 +8,8 @@ delete-before-insert REPLACE ordering (:599-627), session-init startup
 statements on every connection (SynchronizerFactory.php:16-19,
 DatabaseConnection.php:31-39), and CREATE TABLE emission for a
 non-MySQL master. The recorded-connection tests run the REAL sink
-paths: a delta streamed through the driver's one connection, and a full
-copy through ``foreachPartition`` on executor workers.
+paths: a delta and ``MySQLCatalog.copy_table``, each on the driver's
+connections.
 """
 
 import datetime
@@ -18,8 +18,8 @@ import os
 import pytest
 from pyspark.sql import types as T
 
+from mysql_syncer_spark.config import TableHandle
 from mysql_syncer_spark.sinks.jdbc import (
-    apply_inserts,
     apply_replace,
     delete_sql,
     insert_sql,
@@ -152,26 +152,36 @@ def test_replace_orders_delete_before_insert(spark, recording_factory):
 
 def test_session_init_runs_on_every_connection(spark, recording_factory):
     """The reference's startup queries run at the top of EVERY
-    connection — the driver's delta connection and the full copy's
-    executor-side ones alike."""
-    factory = recording_factory.factory(session_init=MYSQL_SESSION_INIT)
+    connection: a delta's, and ``MySQLCatalog.copy_table``'s DDL and
+    insert connections. Every statement runs in the driver, and the
+    full copy writes the master's driver rows without building its
+    DataFrame."""
+    cat = MySQLCatalog(spark, recording_factory.factory())
     rows = spark.createDataFrame(
-        [(1, "a")], "id INT, v STRING"
+        [(1, "a")], "id LONG, v STRING"
     ).coalesce(1)
-    apply_replace(rows, "t", ["id"], factory,
+    apply_replace(rows, "t", ["id"], cat.connect_factory,
                   quote="`", backslash_escapes=True)
-    apply_inserts(rows, "u", factory, quote="`", backslash_escapes=True)
+
+    def build():
+        raise AssertionError("the full copy built the master's DataFrame")
+
+    master = TableHandle("u", pk_cols=("id",), schema=rows.schema,
+                         rows=[(1, "a")], build=build)
+    cat.copy_table("u", master, chunk_size=5000)
     recorded = recording_factory.recorded()
-    stmts = [sql for _, sql in recorded]
-    assert stmts[0] == "SET group_concat_max_len = 18446744073709547520"
-    assert stmts[1] == "SET FOREIGN_KEY_CHECKS=0"
-    assert stmts[2].startswith("DELETE FROM `t` ")
-    assert stmts[3].startswith("INSERT INTO `t` ")
-    assert stmts[4:] == [*MYSQL_SESSION_INIT,
-                         "INSERT INTO `u` (`id`, `v`) VALUES (1, 'a')"]
-    # the delta ran in the driver, the full copy in a worker
-    assert {pid for pid, _ in recorded[:4]} == {os.getpid()}
-    assert os.getpid() not in {pid for pid, _ in recorded[4:]}
+    assert [sql for _, sql in recorded] == [
+        "SET group_concat_max_len = 18446744073709547520",
+        "SET FOREIGN_KEY_CHECKS=0",
+        "DELETE FROM `t` WHERE (`id`) IN ((1))",
+        "INSERT INTO `t` (`id`, `v`) VALUES (1, 'a')",
+        *MYSQL_SESSION_INIT,
+        "DROP TABLE IF EXISTS `u`",
+        cat.create_table_sql("u", rows.schema, ("id",)),
+        *MYSQL_SESSION_INIT,
+        "INSERT INTO `u` (`id`, `v`) VALUES (1, 'a')",
+    ]
+    assert {pid for pid, _ in recorded} == {os.getpid()}
 
 
 # ---------------------------------------------------------------------

@@ -51,18 +51,16 @@ def sqlite_db(tmp_path):
 
 
 def test_apply_delete_insert_replace_sqlite(spark, sqlite_db):
-    """Full mutation cycle against a real SQL target. coalesce(1): one
-    writer — sqlite can't take concurrent writers (a real MySQL target
-    takes one connection per delta partition)."""
+    """Full mutation cycle against a real SQL target, each sink on one
+    driver connection; the inserts come as a row list named ``cols``,
+    as a DBAPI master's full copy passes them."""
     factory = lambda: sqlite3.connect(sqlite_db)
 
     doomed = spark.createDataFrame([(1, 1), (2, 2)], "a int, b int").coalesce(1)
     apply_deletes(doomed, "t", ["a", "b"], factory, chunk_size=1)
 
-    new_rows = spark.createDataFrame(
-        [(100, 0, "n1"), (101, 1, None)], "a int, b int, v string"
-    ).coalesce(1)
-    apply_inserts(new_rows, "t", factory, chunk_size=1)
+    apply_inserts([(100, 0, "n1"), (101, 1, None)], "t", factory,
+                  chunk_size=1, cols=["a", "b", "v"])
 
     upserts = spark.createDataFrame(
         [(3, 0, "UPDATED"), (102, 0, "added")], "a int, b int, v string"

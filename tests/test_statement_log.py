@@ -293,6 +293,51 @@ def test_log_is_exactly_the_executed_delta(spark, dbs, tmp_path,
         assert rest == "" or rest.startswith("-- "), table
 
 
+def test_log_is_exactly_the_executed_full_copy(spark, dbs, tmp_path,
+                                               recording_factory,
+                                               monkeypatch):
+    """A real sync with a statement log: for every full copy, the DDL
+    and INSERTs the driver executed on the slave are, byte for byte,
+    the log's full-copy block. All of it ran in the driver process, and
+    a DBAPI master's copy built no DataFrame."""
+    import os
+    import re
+
+    mpath, spath = dbs
+    with sqlite3.connect(mpath) as m:
+        m.execute("CREATE TABLE items (id INTEGER PRIMARY KEY, v TEXT)")
+        m.executemany("INSERT INTO items VALUES (?, ?)",
+                      [(k, f"it's {k}") for k in range(100)])
+
+    def no_frame(*_):
+        raise AssertionError("a DataFrame was built from DBAPI rows")
+
+    monkeypatch.setattr(DBAPICatalog, "_rows_to_df", no_frame)
+    log = str(tmp_path / "queries.sql")
+    slave = DBAPICatalog(spark, recording_factory.factory(_factory(spath)))
+    rep = sync(
+        DBAPICatalog(spark, _factory(mpath)), slave,
+        SyncConfig(log_statements=log, chunk_size=16, max_parallel_tables=2),
+    )
+    assert rep.ok, [r.error for r in rep.results if r.error]
+    assert _dump_all(spath) == _dump_all(mpath)
+    text = open(log).read()
+    tables = re.findall(r"^-- full copy (\w+)$", text, re.M)
+    assert sorted(tables) == ["items", "region", "tags"]
+    recorded = recording_factory.recorded()
+    assert {pid for pid, _ in recorded} == {os.getpid()}
+    for table in tables:
+        ran = [sql for _, sql in recorded
+               if sql.startswith((f'DROP TABLE IF EXISTS "{table}"',
+                                  f'CREATE TABLE "{table}" ',
+                                  f'INSERT INTO "{table}" '))]
+        if table == "items":
+            assert len(ran) == 2 + 7  # DROP, CREATE, ceil(100 / 16) chunks
+        block = f"-- full copy {table}\n" + "".join(s + ";\n" for s in ran)
+        rest = text[text.index(block) + len(block):]
+        assert rest == "" or rest.startswith("-- "), table
+
+
 def test_driver_delta_logs_the_literals_of_a_built_frame(spark, tmp_path,
                                                          monkeypatch):
     """A delta diffed from two DBAPI handles' rows is typed as a built
