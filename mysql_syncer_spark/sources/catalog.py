@@ -42,6 +42,7 @@ from pyspark.sql import types as T
 from mysql_syncer_spark.config import TableHandle
 from mysql_syncer_spark.diff import apply_delta
 from mysql_syncer_spark.memo import SessionMemo
+from mysql_syncer_spark.sources import layout
 
 #: PKs of the driver fixture tables (FIXTURES.md §1) — parquet carries no
 #: PK metadata, so parquet-mode catalogs take a pk map with these defaults.
@@ -296,25 +297,12 @@ class FileCatalog(Catalog):
         by :meth:`write_table`."""
         self.write_table(apply_delta(current, inserts, deletes, pk_cols), name)
 
-    def _recover(self, name: str) -> None:
-        """Heal the one crash window of the write_table swap: a kill
-        between the two renames leaves the previous data at
-        ``<path>.__old__`` and nothing at ``<path>`` — restore OLD
-        (the new data still sits complete in ``.__staging__`` and the
-        next sync re-derives it; old-or-new visibility, never
-        neither). Same recovery rule as the streaming maintainers'
-        ``_recover_read``."""
-        path = self.table_path(name)
-        old = path + ".__old__"
-        if not os.path.exists(path) and os.path.exists(old):
-            os.replace(old, path)
-
     def table(self, name: str) -> TableHandle:
-        self._recover(name)
         return self._memo(name, lambda: self._resolve(name))
 
     def _resolve(self, name: str) -> TableHandle:
         path = self.table_path(name)
+        layout.recover(self.spark, path)
         reader = self.spark.read.format(self.fmt).options(**self.read_options)
         schema = self._footer_schema(path)
         if schema is not None:
@@ -394,39 +382,15 @@ class FileCatalog(Catalog):
     _crash_hook = None
 
     def write_table(self, df: DataFrame, name: str) -> None:
-        """Crash-safe table replace: stage to ``<path>.__staging__``,
-        rename the live data aside to ``<path>.__old__``, rename the
-        staging dir in, drop ``__old__`` — the same two-rename protocol
-        as the streaming maintainers' ``_swap_write``, so EVERY kill
-        point leaves old-or-new readable (never neither; the former
-        rmtree-then-rename left a window with nothing at the path).
-        :meth:`_recover` (run by every read and write) restores
-        ``__old__`` when a kill between the renames left it the only
-        copy. Writing over the target directly would also delete the
-        input a lazy plan is still reading (executor discipline)."""
-        self._recover(name)
-        path = self.table_path(name)
-        tmp = path + ".__staging__"
-        old = path + ".__old__"
-        (
-            df.write.format(self.fmt)
-            .options(**self.write_options)
-            .mode("overwrite")
-            .save(tmp)
-        )
-        if self._crash_hook is not None:
-            self._crash_hook("staged")
-        if os.path.exists(old):  # leftover from a kill after the swap
-            shutil.rmtree(old) if os.path.isdir(old) else os.remove(old)
-        if os.path.exists(path):
-            os.replace(path, old)
-        if self._crash_hook is not None:
-            self._crash_hook("old_moved")
-        os.replace(tmp, path)
-        if self._crash_hook is not None:
-            self._crash_hook("swapped")
-        if os.path.exists(old):
-            shutil.rmtree(old) if os.path.isdir(old) else os.remove(old)
+        """Crash-safe table replace through :func:`layout.swap_write`
+        (stage to ``.__staging__``, two renames, drop ``__old__``), so
+        every kill point leaves the old table or the new one readable.
+        A kill between the renames is healed when the table is next
+        resolved or written (:func:`layout.recover`)."""
+        writer = (df.write.format(self.fmt).options(**self.write_options)
+                  .mode("overwrite"))
+        layout.swap_write(self.spark, self.table_path(name), writer.save,
+                          self._crash_hook)
 
 
 class ParquetCatalog(FileCatalog):

@@ -531,8 +531,10 @@ class DBAPICatalog(Catalog):
             return "BOOLEAN"
         if isinstance(t, T.DecimalType):
             return f"NUMERIC({t.precision},{t.scale})"
-        if isinstance(t, (T.TimestampType, T.DateType)):
-            return "TIMESTAMP" if isinstance(t, T.TimestampType) else "DATE"
+        if isinstance(t, (T.TimestampType, T.TimestampNTZType)):
+            return "TIMESTAMP"
+        if isinstance(t, T.DateType):
+            return "DATE"
         if isinstance(t, T.BinaryType):
             return "BLOB"
         if isinstance(t, T.StringType):
@@ -716,7 +718,7 @@ class MySQLCatalog(DBAPICatalog):
             return "TINYINT(1)"
         if isinstance(t, T.DecimalType):
             return f"DECIMAL({t.precision},{t.scale})"
-        if isinstance(t, T.TimestampType):
+        if isinstance(t, (T.TimestampType, T.TimestampNTZType)):
             return "DATETIME"
         if isinstance(t, T.DateType):
             return "DATE"

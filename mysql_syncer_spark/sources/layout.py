@@ -18,15 +18,128 @@ Two layout levers the engine applies when materializing tables:
 Partition columns must be low-cardinality (dates, regions, status
 codes): one directory per value. High-cardinality pruning belongs to
 bucketing (sources/bucketed.py) or min/max row-group stats instead.
+
+It also owns the one crash-safe replace of a table or state path,
+:func:`swap_write` with its :func:`recover`, which the file slave
+(``FileCatalog.write_table``), :func:`compact_files` and every
+streaming maintainer (``streaming/{ivm,ingest,cdc}.py``) go through.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
+import os
+import re
+import shutil
+from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
 from mysql_syncer_spark.sources.bucketed import physical_plan
+
+_STAGING = ".__staging__"
+_OLD = ".__old__"
+
+
+class _OsFS:
+    """A plain local path, on ``os``: an existence check costs about
+    3 µs here against 2.5 ms through py4j and the Hadoop ``FileSystem``
+    (4 idle cores, min of 5 x 1000 calls)."""
+
+    exists = staticmethod(os.path.exists)
+    rename = staticmethod(os.replace)
+
+    @staticmethod
+    def delete(path: str) -> None:
+        shutil.rmtree(path) if os.path.isdir(path) else os.remove(path)
+
+
+class _HadoopFS:
+    """A URI (``file:``, ``hdfs:``, ``s3a:`` ...), on the Hadoop
+    ``FileSystem`` its scheme names."""
+
+    def __init__(self, spark: SparkSession, path: str):
+        self._path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+        self._fs = self._path(path).getFileSystem(
+            spark.sparkContext._jsc.hadoopConfiguration()
+        )
+
+    def exists(self, path: str) -> bool:
+        return self._fs.exists(self._path(path))
+
+    def rename(self, src: str, dst: str) -> None:
+        # Hadoop reports a failed rename by returning False
+        if not self._fs.rename(self._path(src), self._path(dst)):
+            raise OSError(f"rename {src!r} -> {dst!r} failed")
+
+    def delete(self, path: str) -> None:
+        self._fs.delete(self._path(path), True)
+
+
+def _fs(spark: SparkSession, path: str):
+    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", path):
+        return _HadoopFS(spark, path)
+    return _OsFS
+
+
+def recover(spark: SparkSession, path: str) -> bool:
+    """Heal the one crash window of :func:`swap_write`: a kill between
+    its two renames leaves the previous data at ``<path>.__old__`` and
+    nothing at ``path``, so ``__old__`` is renamed back (the new data
+    still sits complete in ``.__staging__``, and the caller re-derives
+    it). Returns whether ``path`` exists now. A path with no URI scheme
+    is taken as local and checked on ``os``; give a URI for HDFS, S3 or
+    any other Hadoop filesystem."""
+    path = path.rstrip("/")
+    return _recover(_fs(spark, path), path)
+
+
+def _recover(fs, path: str) -> bool:
+    if fs.exists(path):
+        return True
+    if fs.exists(path + _OLD):
+        fs.rename(path + _OLD, path)
+        return True
+    return False
+
+
+def swap_write(
+    spark: SparkSession,
+    path: str,
+    write: Callable[[str], None],
+    hook: Callable[[str], None] | None = None,
+) -> None:
+    """Replace the file or directory at ``path`` with what
+    ``write(staging_path)`` writes, so that a kill at any point leaves
+    the old data or the new readable, never neither and never a mix.
+
+    :func:`recover` runs first. ``write`` (the caller's own writer:
+    format, options, ``partitionBy``) fills ``<path>.__staging__``; a
+    Spark writer should use ``mode("overwrite")``, which also replaces
+    the staging a killed attempt left. Then the live data is renamed
+    aside to ``<path>.__old__``, the staging is renamed in, and
+    ``__old__`` is dropped. Writing over ``path`` directly would delete
+    the input a lazy plan is still reading. ``hook(stage)`` is called
+    at ``"staged"``, ``"old_moved"`` and ``"swapped"``; a raising hook
+    simulates a kill there. A failed rename raises, on ``os`` and on
+    Hadoop alike."""
+    path = path.rstrip("/")
+    fs = _fs(spark, path)
+    staging, old = path + _STAGING, path + _OLD
+    live = _recover(fs, path)
+    write(staging)
+    if hook is not None:
+        hook("staged")
+    if live:
+        if fs.exists(old):  # left by a kill after the last swap
+            fs.delete(old)
+        fs.rename(path, old)
+    if hook is not None:
+        hook("old_moved")
+    fs.rename(staging, path)
+    if hook is not None:
+        hook("swapped")
+    if live:
+        fs.delete(old)
 
 
 def write_partitioned(
@@ -62,8 +175,6 @@ def assert_partition_pruned(df: DataFrame, col: str) -> None:
     ``assert_no_shuffle``: this one proves the READ side never touches
     the other directories."""
     plan = physical_plan(df)
-    import re
-
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     if not m or col not in m.group(1):
         raise AssertionError(
@@ -112,14 +223,10 @@ def compact_files(
       back through ``partitionBy`` (directory structure preserved, so
       PartitionFilters pruning still works).
 
-    The rewrite stages to ``<path>.__compacting__`` then swaps with
-    Hadoop FS renames only — old dir aside to ``<path>.__old__``,
-    staging into place, old dir deleted last — never overwriting the
-    input it is lazily reading. Readers therefore see the old layout or
-    the new one; the path is absent only for the instant between the
-    two renames, and a crash anywhere leaves a recoverable state (the
-    data is always intact under exactly one of path/__old__/
-    __compacting__; stale leftovers are cleaned on the next run).
+    The rewrite goes through :func:`swap_write`: staged to
+    ``<path>.__staging__`` and renamed in, never overwriting the input
+    it is lazily reading, so readers see the old layout or the new one,
+    and a pass killed mid-swap is healed by the next (:func:`recover`).
 
     At 100 TB this runs per-partition (pass the partition root as
     ``path``) or as a scheduled whole-table pass; either way the data
@@ -127,43 +234,22 @@ def compact_files(
     """
     if target_mb < 1:
         raise ValueError(f"target_mb must be >= 1, got {target_mb}")
-    staging = path.rstrip("/") + ".__compacting__"
-    old = path.rstrip("/") + ".__old__"
-    jstaging = spark._jvm.org.apache.hadoop.fs.Path(staging)
-    jold = spark._jvm.org.apache.hadoop.fs.Path(old)
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jstaging):  # crashed previous attempt mid-write
-        fs.delete(jstaging, True)
-    if fs.exists(jold):  # crashed previous attempt mid-swap
-        if not fs.exists(jpath):
-            fs.rename(jold, jpath)  # recover: old data back in place
-        else:
-            fs.delete(jold, True)
-
+    recover(spark, path)
     n_before, total_bytes = _list_files(spark, path)
     n_target = max(1, -(-total_bytes // (target_mb * 1024 * 1024)))
     df = spark.read.format(fmt).load(path)
 
-    if partition_cols:
-        cols = (
-            [partition_cols]
-            if isinstance(partition_cols, str)
-            else list(partition_cols)
-        )
-        out = df.repartition(int(n_target), *cols)
-        out.write.format(fmt).mode("overwrite").partitionBy(*cols).save(
-            staging
-        )
-    else:
-        out = df.repartition(int(n_target))
-        out.write.format(fmt).mode("overwrite").save(staging)
-
-    # swap via renames (no delete-then-rename window where the path
-    # holds the ONLY copy in staging): aside -> in place -> drop old
-    fs.rename(jpath, jold)
-    fs.rename(jstaging, jpath)
-    fs.delete(jold, True)
+    cols = (
+        [partition_cols]
+        if isinstance(partition_cols, str)
+        else list(partition_cols or ())
+    )
+    writer = df.repartition(int(n_target), *cols).write.format(fmt).mode(
+        "overwrite"
+    )
+    if cols:
+        writer = writer.partitionBy(*cols)
+    swap_write(spark, path, writer.save)
     n_after, _ = _list_files(spark, path)
     return {
         "files_before": n_before,

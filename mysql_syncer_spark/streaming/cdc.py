@@ -27,11 +27,12 @@ logical plan executed as a transactional file swap.
 
 from __future__ import annotations
 
-import os
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from mysql_syncer_spark.sources.layout import recover, swap_write
 
 
 def latest_change_per_key(
@@ -88,7 +89,9 @@ def read_state(
     op_col: str | None = None,
     delete_op: str = "delete",
 ) -> DataFrame:
-    """Live rows of a CDC state table (tombstones filtered)."""
+    """Live rows of a CDC state table (tombstones filtered), after
+    :func:`recover` heals a kill in the middle of the state's swap."""
+    recover(spark, path)
     df = spark.read.parquet(path)
     if op_col is not None:
         df = df.where(F.col(op_col) != delete_op)
@@ -119,7 +122,10 @@ def cdc_merge_stream(
     idempotent under such replay because winners are decided by the CDC
     ordering columns, not by arrival (a replayed change ties with the
     already-applied copy of itself and leaves state unchanged) — proven
-    by tests/test_streaming_ingest.py's kill-and-restart test.
+    by tests/test_streaming_ingest.py's kill-and-restart test. Each
+    batch replaces the target through ``sources/layout.swap_write``, so
+    a kill inside the swap leaves the old or the new state, and the
+    replayed batch merges into whichever :func:`recover` finds.
 
     ``on_batch_committed(batch_id)`` runs after each batch's target
     swap and before control returns to Spark (metrics / fault-injection
@@ -128,21 +134,15 @@ def cdc_merge_stream(
     spark = stream.sparkSession
 
     def merge(batch: DataFrame, batch_id: int) -> None:
-        if not os.path.exists(target_path):
-            merged = latest_change_per_key(batch, pk_cols, order_cols)
-        else:
+        # recover() first: a kill between the swap's renames leaves the
+        # state only at __old__, and taking that for a first batch
+        # would rebuild it from this batch alone
+        if recover(spark, target_path):
             target = spark.read.parquet(target_path)
             merged = cdc_upsert_batch(target, batch, pk_cols, order_cols)
-        # stage-then-swap (same safety as FileCatalog.write_table:
-        # mode=overwrite onto a path we are lazily reading would destroy
-        # the input mid-plan)
-        tmp = target_path + ".__staging__"
-        merged.write.mode("overwrite").parquet(tmp)
-        import shutil
-
-        if os.path.exists(target_path):
-            shutil.rmtree(target_path)
-        os.replace(tmp, target_path)
+        else:
+            merged = latest_change_per_key(batch, pk_cols, order_cols)
+        swap_write(spark, target_path, merged.write.mode("overwrite").parquet)
         if on_batch_committed is not None:
             on_batch_committed(batch_id)
 

@@ -48,6 +48,7 @@ from mysql_syncer_spark.operators.dedup import (
     minhash_lsh_pairs,
 )
 from mysql_syncer_spark.operators.text import normalized_text
+from mysql_syncer_spark.sources.layout import recover, swap_write
 
 
 def dedup_batch_within(
@@ -243,9 +244,11 @@ def cms_maintain_stream(
     fixed cost, queryable at any time with `cms_estimate` on the
     written sketch.
 
-    Write discipline: merge into a ``.__staging__`` sibling, then an
-    atomic-enough rename swap (the layout/compaction discipline) — a
-    reader sees the old or the new sketch, never a partial. Replayed
+    Write discipline: the merged sketch replaces the old one through
+    ``sources/layout.swap_write`` (staged, then two renames), so a
+    reader sees the old or the new sketch, never a partial, and the
+    next fold's ``layout.recover`` heals a kill between the renames.
+    Replayed
     batches double-count their items (counts drift HIGH, the safe
     direction for an over-estimating sketch — proven by the
     kill-and-restart test in tests/test_streaming_ingest.py); rebuild
@@ -264,34 +267,15 @@ def cms_maintain_stream(
         batch_sketch = cms_build(
             batch, item_col, depth=depth, width=width, salt=salt
         )
-        jvm = spark.sparkContext._jvm
-        jsc = spark.sparkContext._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(sketch_path)
-        fs = path.getFileSystem(jsc)
-        old = jvm.org.apache.hadoop.fs.Path(sketch_path + ".__old__")
-        # crash recovery (mirrors sources/layout.compact_files): a death
-        # between rename(path, old) and rename(staging, path) leaves
-        # __old__ as the ONLY copy of the accumulated sketch — restore
-        # it before merging, or the fold silently rebuilds from one
-        # batch and the pre-swap cleanup below deletes the survivor.
-        if fs.exists(old) and not fs.exists(path):
-            fs.rename(old, path)
-        if fs.exists(path):
+        # a kill between the swap's renames leaves the accumulated
+        # sketch only at __old__: recover() restores it, or the fold
+        # would rebuild from this one batch and drop the survivor
+        if recover(spark, sketch_path):
             prior = spark.read.parquet(sketch_path)
             merged = cms_merge(prior, batch_sketch)
         else:
             merged = batch_sketch
-        staging = jvm.org.apache.hadoop.fs.Path(
-            sketch_path + ".__staging__"
-        )
-        merged.write.mode("overwrite").parquet(str(staging))
-        if fs.exists(old):
-            fs.delete(old, True)
-        if fs.exists(path):
-            fs.rename(path, old)
-        fs.rename(staging, path)
-        if fs.exists(old):
-            fs.delete(old, True)
+        swap_write(spark, sketch_path, merged.write.mode("overwrite").parquet)
         if on_batch_committed is not None:
             on_batch_committed(batch_id)
 
@@ -328,9 +312,8 @@ def quantile_maintain_stream(
     streaming epoch ids are monotonic per checkpoint). A batch
     replayed after a crash between the swap and the checkpoint commit
     is detected and skipped, leaving the summary EQUAL to the
-    uninterrupted run — proven by the kill-and-restart test. Same
-    staging + rename swap and ``__old__`` recovery branch as
-    ``cms_maintain_stream``.
+    uninterrupted run — proven by the kill-and-restart test. The
+    summary is written and recovered as in ``cms_maintain_stream``.
 
     ``on_batch_committed(batch_id)`` runs after the swap, before
     control returns to Spark (fault-injection hook)."""
@@ -345,16 +328,8 @@ def quantile_maintain_stream(
         if batch.isEmpty():
             return
         spark = batch.sparkSession
-        jvm = spark.sparkContext._jvm
-        jsc = spark.sparkContext._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(summary_path)
-        fs = path.getFileSystem(jsc)
-        old = jvm.org.apache.hadoop.fs.Path(summary_path + ".__old__")
-        # crash recovery: restore __old__ when it's the only copy
-        if fs.exists(old) and not fs.exists(path):
-            fs.rename(old, path)
         prior = None
-        if fs.exists(path):
+        if recover(spark, summary_path):
             prior = spark.read.parquet(summary_path)
             hwm = prior.agg(F.max("last_batch")).first()[0]
             if hwm is not None and batch_id < hwm:
@@ -398,17 +373,9 @@ def quantile_maintain_stream(
             "last_batch", F.lit(batch_id).cast("long")
         )
         merged = merged.transform(pin, required=True)
-        staging = jvm.org.apache.hadoop.fs.Path(
-            summary_path + ".__staging__"
+        swap_write(
+            spark, summary_path, merged.write.mode("overwrite").parquet
         )
-        merged.write.mode("overwrite").parquet(str(staging))
-        if fs.exists(old):
-            fs.delete(old, True)
-        if fs.exists(path):
-            fs.rename(path, old)
-        fs.rename(staging, path)
-        if fs.exists(old):
-            fs.delete(old, True)
         if on_batch_committed is not None:
             on_batch_committed(batch_id)
 
@@ -439,8 +406,8 @@ def bitmap_maintain_stream(
     the three maintainers: OR over bit sets is IDEMPOTENT, so a batch
     replayed after any crash (even after the swap committed) merges to
     the identical state — no drift direction to reason about (CMS) and
-    no high-water mark needed (quantiles). Same staging + rename swap
-    and ``__old__`` recovery branch as ``cms_maintain_stream``.
+    no high-water mark needed (quantiles). The state is written and
+    recovered as in ``cms_maintain_stream``.
 
     ``on_batch_committed(batch_id)`` runs after the swap, before the
     checkpoint commit (fault-injection hook)."""
@@ -454,30 +421,13 @@ def bitmap_maintain_stream(
             return
         spark = batch.sparkSession
         batch_state = bitmap_rollup(batch, grain_cols, key_col)
-        jvm = spark.sparkContext._jvm
-        jsc = spark.sparkContext._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(state_path)
-        fs = path.getFileSystem(jsc)
-        old = jvm.org.apache.hadoop.fs.Path(state_path + ".__old__")
-        if fs.exists(old) and not fs.exists(path):
-            fs.rename(old, path)
-        if fs.exists(path):
+        if recover(spark, state_path):
             prior = spark.read.parquet(state_path)
             merged = bitmap_rollup_merge(prior, batch_state, grain_cols)
         else:
             merged = batch_state
         merged = merged.transform(pin, required=True)
-        staging = jvm.org.apache.hadoop.fs.Path(
-            state_path + ".__staging__"
-        )
-        merged.write.mode("overwrite").parquet(str(staging))
-        if fs.exists(old):
-            fs.delete(old, True)
-        if fs.exists(path):
-            fs.rename(path, old)
-        fs.rename(staging, path)
-        if fs.exists(old):
-            fs.delete(old, True)
+        swap_write(spark, state_path, merged.write.mode("overwrite").parquet)
         if on_batch_committed is not None:
             on_batch_committed(batch_id)
 
@@ -600,8 +550,8 @@ def corpus_card_maintain_stream(
     State layout under ``state_path``:
 
     * ``aggs`` — |slices| rows of monoid sums + a ``last_batch``
-      high-water mark, replaced per batch via the staging + rename
-      swap (``__old__`` recovery branch) the other maintainers use;
+      high-water mark, replaced per batch through ``layout.swap_write``
+      and read after ``layout.recover``, as in the other maintainers;
     * ``hashes/batch_id=<n>`` — the batch's NEW distinct text md5s.
       Append-only at the directory level: committed batches are never
       rewritten, and the corpus-sized read underneath the next fold's
@@ -630,16 +580,8 @@ def corpus_card_maintain_stream(
         if batch.isEmpty():
             return
         spark = batch.sparkSession
-        jvm = spark.sparkContext._jvm
-        jsc = spark.sparkContext._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(aggs_path)
-        fs = path.getFileSystem(jsc)
-        old = jvm.org.apache.hadoop.fs.Path(aggs_path + ".__old__")
-        # crash recovery: restore __old__ when it's the only copy
-        if fs.exists(old) and not fs.exists(path):
-            fs.rename(old, path)
         prior = None
-        if fs.exists(path):
+        if recover(spark, aggs_path):
             prior = spark.read.parquet(aggs_path)
             hwm = prior.agg(F.max("last_batch")).first()[0]
             if hwm is not None and batch_id < hwm:
@@ -666,12 +608,12 @@ def corpus_card_maintain_stream(
         # discard a partial hash write from a crashed attempt of THIS
         # batch (committed batches never reach here — hwm skip above),
         # then read every OTHER batch's hashes as the prior state
-        hb = jvm.org.apache.hadoop.fs.Path(
-            f"{hashes_root}/batch_id={batch_id}"
-        )
+        Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+        root = Path(hashes_root)
+        fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+        hb = Path(f"{hashes_root}/batch_id={batch_id}")
         if fs.exists(hb):
             fs.delete(hb, True)
-        root = jvm.org.apache.hadoop.fs.Path(hashes_root)
         if fs.exists(root) and fs.listStatus(root):
             prior_hashes = (
                 spark.read.option("basePath", hashes_root)
@@ -734,15 +676,7 @@ def corpus_card_maintain_stream(
         # ORDER MATTERS: hashes land first (so an hwm skip on replay
         # is always complete), then the aggs swap commits the batch
         new_hashes.write.parquet(str(hb))
-        staging = jvm.org.apache.hadoop.fs.Path(aggs_path + ".__staging__")
-        merged.write.mode("overwrite").parquet(str(staging))
-        if fs.exists(old):
-            fs.delete(old, True)
-        if fs.exists(path):
-            fs.rename(path, old)
-        fs.rename(staging, path)
-        if fs.exists(old):
-            fs.delete(old, True)
+        swap_write(spark, aggs_path, merged.write.mode("overwrite").parquet)
         if on_batch_committed is not None:
             on_batch_committed(batch_id)
 
@@ -764,14 +698,7 @@ def corpus_card_stream_card(
     from mysql_syncer_spark.operators.text import corpus_card_from_state
 
     aggs_path = f"{state_path}/aggs"
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(aggs_path)
-    fs = path.getFileSystem(jsc)
-    old = jvm.org.apache.hadoop.fs.Path(aggs_path + ".__old__")
-    if fs.exists(old) and not fs.exists(path):
-        fs.rename(old, path)
-    if not fs.exists(path):
+    if not recover(spark, aggs_path):
         return None
     aggs = spark.read.parquet(aggs_path).drop("last_batch")
     return corpus_card_from_state(aggs, group_cols)

@@ -8,10 +8,10 @@ Fold discipline (foreachBatch, the cms_maintain_stream lineage):
 * each batch runs ``apply_join_delta_a_only`` — one broadcast
   anti-join of the batch's keys against the view + one delta-broadcast
   repair join against the (semi-pruned) dimension;
-* the new view writes to a ``.__staging__`` sibling, then the
-  rename swap (old → ``.__old__`` → delete), with the compact_files
-  crash-recovery branch: ``__old__`` present without the live dir is
-  restored before reading;
+* the new view replaces the old through ``sources/layout.swap_write``
+  (staged, then two renames), and every state path is passed through
+  ``layout.recover`` before it is read, which restores a view that a
+  kill between the renames left only at ``.__old__``;
 * REPLAY CONVERGES EXACTLY: keyed delta application is idempotent
   (re-applying a batch removes precisely the rows it added, then
   re-adds them), so a micro-batch replayed after a crash — even one
@@ -46,41 +46,7 @@ from pyspark.sql import functions as F
 from mysql_syncer_spark.pin import pin
 
 from mysql_syncer_spark.operators.ivm import apply_join_delta_a_only
-
-
-def _hadoop(spark, path_str: str):
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(path_str)
-    return jvm, path.getFileSystem(conf), path
-
-
-def _swap_write(df: DataFrame, path_str: str) -> None:
-    """Write ``df`` over the parquet dir at ``path_str`` with the
-    staging + rename swap (readers see old or new, never partial) and
-    the __old__ recovery contract."""
-    spark = df.sparkSession
-    jvm, fs, path = _hadoop(spark, path_str)
-    old = jvm.org.apache.hadoop.fs.Path(path_str + ".__old__")
-    staging = jvm.org.apache.hadoop.fs.Path(path_str + ".__staging__")
-    df.write.mode("overwrite").parquet(str(staging))
-    if fs.exists(old):
-        fs.delete(old, True)
-    if fs.exists(path):
-        fs.rename(path, old)
-    fs.rename(staging, path)
-    if fs.exists(old):
-        fs.delete(old, True)
-
-
-def _recover_read(spark, path_str: str) -> DataFrame:
-    """Read the parquet dir at ``path_str``, restoring ``__old__``
-    first if a crash left it as the only copy."""
-    jvm, fs, path = _hadoop(spark, path_str)
-    old = jvm.org.apache.hadoop.fs.Path(path_str + ".__old__")
-    if fs.exists(old) and not fs.exists(path):
-        fs.rename(old, path)
-    return spark.read.parquet(path_str)
+from mysql_syncer_spark.sources.layout import recover, swap_write
 
 
 def ivm_bootstrap(
@@ -89,7 +55,9 @@ def ivm_bootstrap(
     """Materialize the initial view M = A ⋈ B at ``mat_path``."""
     from mysql_syncer_spark.operators.ivm import join_snapshot
 
-    _swap_write(join_snapshot(a, b, on), mat_path)
+    snap = join_snapshot(a, b, on)
+    swap_write(snap.sparkSession, mat_path,
+               snap.write.mode("overwrite").parquet)
 
 
 def ivm_join_stream(
@@ -115,8 +83,9 @@ def ivm_join_stream(
         if batch.isEmpty():
             return
         spark = batch.sparkSession
-        mat = _recover_read(spark, mat_path)
-        b = _recover_read(spark, b_path)
+        recover(spark, mat_path)
+        recover(spark, b_path)
+        mat, b = spark.read.parquet(mat_path), spark.read.parquet(b_path)
         new_mat = apply_join_delta_a_only(
             mat, batch, b, on, a_pk, op_col=op_col
         )
@@ -125,7 +94,7 @@ def ivm_join_stream(
         # discipline, kept off-path here because the view is one
         # delta-repaired table, not a multi-table sync)
         new_mat = new_mat.transform(pin, required=True)
-        _swap_write(new_mat, mat_path)
+        swap_write(spark, mat_path, new_mat.write.mode("overwrite").parquet)
         if on_batch_committed is not None:
             on_batch_committed(batch_id)
 
@@ -165,15 +134,18 @@ def extrema_bootstrap(
     keys = [keys] if isinstance(keys, str) else list(keys)
     sup = value_support_snapshot(base, keys, value_col)
     stamped = sup.withColumn("last_batch", F.lit(-1).cast("long"))
-    _swap_write(
-        stamped.unionByName(_hwm_sentinel(stamped, -1)), support_path
-    )
-    _swap_write(extremum_snapshot(sup, keys, value_col), extrema_path)
+    spark = base.sparkSession
+    views = [
+        (stamped.unionByName(_hwm_sentinel(stamped, -1)), support_path),
+        (extremum_snapshot(sup, keys, value_col), extrema_path),
+    ]
     if frequent_path is not None:
-        _swap_write(
+        views.append((
             frequent_values_from_support(sup, keys, value_col, frequent_k),
             frequent_path,
-        )
+        ))
+    for view, path in views:
+        swap_write(spark, path, view.write.mode("overwrite").parquet)
 
 
 def _hwm_sentinel(stamped: DataFrame, batch_id: int) -> DataFrame:
@@ -227,8 +199,8 @@ def extrema_maintain_stream(
     swaps — replay skips the fold and re-derives the extremum view
     from the already-advanced support (the stale-view window heals);
     after both swaps before the checkpoint commit — replay is a no-op
-    re-derive. Same staging + rename swap and ``__old__`` recovery as
-    the join maintainer.
+    re-derive. Every view is written and recovered as in the join
+    maintainer.
 
     Passing ``frequent_path`` additionally maintains the exact
     top-``frequent_k``-frequent view (E156) from the SAME support
@@ -236,7 +208,7 @@ def extrema_maintain_stream(
     the whole two-level family (extrema + frequent) rides a single
     support fold and inherits the identical replay contract.
     Bootstrap it with
-    ``_swap_write(frequent_values_from_support(...), frequent_path)``
+    ``layout.swap_write`` of ``frequent_values_from_support(...)``
     or let the first batch create it from an
     :func:`mysql_syncer_spark.operators.incremental_agg.frequent_values_from_support`
     snapshot you write beforehand.
@@ -256,7 +228,8 @@ def extrema_maintain_stream(
         if batch.isEmpty():
             return
         spark = batch.sparkSession
-        sup = _recover_read(spark, support_path)
+        recover(spark, support_path)
+        sup = spark.read.parquet(support_path)
         hwm = sup.agg(F.max("last_batch")).first()[0]
         if hwm is not None and batch_id < hwm:
             # foreachBatch replays AT MOST the last batch, so a
@@ -280,15 +253,16 @@ def extrema_maintain_stream(
                 data, batch, keys, value_col, sign_col
             ).withColumn("last_batch", F.lit(batch_id).cast("long"))
             sup_new = sup_new.transform(pin, required=True)
-            _swap_write(
-                sup_new.unionByName(_hwm_sentinel(sup_new, batch_id)),
-                support_path,
+            swap_write(
+                spark, support_path,
+                sup_new.unionByName(_hwm_sentinel(sup_new, batch_id))
+                .write.mode("overwrite").parquet,
             )
             sup_cur = sup_new.drop("last_batch")
         else:
             # replay: the on-disk table IS the advanced state
             sup_cur = (
-                _recover_read(spark, support_path)
+                spark.read.parquet(support_path)
                 .where(F.col("__support") > 0)
                 .drop("last_batch")
             )
@@ -297,17 +271,21 @@ def extrema_maintain_stream(
         # unguarded on purpose: pure function of the (already-advanced)
         # support table for the touched groups — idempotent, and the
         # healer for a crash between the two swaps
-        ext = _recover_read(spark, extrema_path)
+        recover(spark, extrema_path)
+        ext = spark.read.parquet(extrema_path)
         ext_new = apply_extremum_delta(
             ext, sup_cur, batch, keys, value_col
         ).transform(pin, required=True)
-        _swap_write(ext_new, extrema_path)
+        swap_write(spark, extrema_path,
+                   ext_new.write.mode("overwrite").parquet)
         if frequent_path is not None:
-            top = _recover_read(spark, frequent_path)
+            recover(spark, frequent_path)
+            top = spark.read.parquet(frequent_path)
             top_new = apply_frequent_delta(
                 top, sup_cur, batch, keys, value_col, frequent_k
             ).transform(pin, required=True)
-            _swap_write(top_new, frequent_path)
+            swap_write(spark, frequent_path,
+                       top_new.write.mode("overwrite").parquet)
         if on_batch_committed is not None:
             on_batch_committed(batch_id)
 

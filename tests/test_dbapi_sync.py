@@ -410,6 +410,42 @@ def test_parquet_to_dbapi_full_copy_streams_each_partition(
     assert all(r.status == "noop" for r in sync(master, slave).results)
 
 
+def test_full_copy_of_a_timestamp_ntz_column(spark, sf_dir, tmp_path):
+    """A parquet ``timestamp[us]`` column reads as TIMESTAMP_NTZ; its
+    full copy into a DBAPI slave declares it TIMESTAMP and writes the
+    master's rows."""
+    import shutil
+
+    from pyspark.sql import types as T
+
+    from mysql_syncer_spark.sources.catalog import ParquetCatalog
+
+    mdir = tmp_path / "master"
+    mdir.mkdir()
+    shutil.copy(f"{sf_dir}/orders.parquet", mdir / "orders.parquet")
+    spath = str(tmp_path / "s.db")
+    sqlite3.connect(spath).close()
+    master = ParquetCatalog(spark, str(mdir))
+    df = master.table("orders").df
+    assert isinstance(df.schema["o_orderdate"].dataType, T.TimestampNTZType)
+    slave = DBAPICatalog(spark, _factory(spath))
+    report = sync(master, slave)
+    assert [(r.action, r.status) for r in report.results] == [
+        ("full_copy", "ok")], [r.error for r in report.results]
+    want = sorted(
+        tuple(str(v) if c == "o_orderdate" else v for c, v in r.asDict().items())
+        for r in df.collect()
+    )
+    assert _dump(spath, "orders", "o_orderkey") == want
+    # The slave reads its TIMESTAMP column back as a string, so the next
+    # plan sees schema drift and copies the table again on every sync.
+    master.invalidate()
+    slave.invalidate()
+    plan = plan_sync(master, slave)
+    assert [(u.action, u.reason) for u in plan.units] == [
+        (Action.FULL_COPY, "schema drift")]
+
+
 def test_full_copy_of_an_untyped_boolean_is_a_unit_error(spark, tmp_path):
     """A master BOOLEAN cell holding 2 fails its table's full copy from
     the frame build, naming the column, before the slave table is

@@ -79,7 +79,7 @@ def test_compact_flat_layout(spark, sf_dir, tmp_path):
     assert before == after
     # no staging residue
     import os
-    assert not os.path.exists(path + ".__compacting__")
+    assert not os.path.exists(path + ".__staging__")
 
 
 def test_compact_partitioned_layout_preserves_pruning(
@@ -192,5 +192,5 @@ def test_compact_crash_recovery(spark, sf_dir, tmp_path):
     assert stats["files_after"] <= stats["files_before"]
     assert spark.read.parquet(path).count() == expected
     assert not os.path.exists(path + ".__old__")
-    assert not os.path.exists(path + ".__compacting__")
+    assert not os.path.exists(path + ".__staging__")
 

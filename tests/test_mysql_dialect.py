@@ -88,13 +88,14 @@ def test_create_table_golden(spark):
         T.StructField("amt", T.DecimalType(10, 2)),
         T.StructField("ok", T.BooleanType()),
         T.StructField("ts", T.TimestampType()),
+        T.StructField("ts_ntz", T.TimestampNTZType()),
         T.StructField("body", T.StringType()),
     ])
     got = cat.create_table_sql("t", schema, ["id", "name"])
     assert got == (
         "CREATE TABLE `t` (`id` BIGINT, `name` VARCHAR(255), "
         "`amt` DECIMAL(10,2), `ok` TINYINT(1), `ts` DATETIME, "
-        "`body` TEXT, PRIMARY KEY (`id`, `name`)) "
+        "`ts_ntz` DATETIME, `body` TEXT, PRIMARY KEY (`id`, `name`)) "
         "ENGINE=InnoDB DEFAULT CHARSET=utf8mb4"
     )
 

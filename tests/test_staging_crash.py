@@ -6,9 +6,9 @@ Law: a kill at ANY point of the swap leaves the table readable as
 either the OLD contents or the NEW contents — never neither, never a
 mix — for Parquet, CSV and JSON catalogs alike; and the next sync (or
 even just the next read) heals the layout and converges. The swap is
-the two-rename ``__old__`` protocol; the one window where the path is
-momentarily absent (between the renames) is healed by ``_recover``,
-which every read and write runs first.
+``layout.swap_write``'s two-rename ``__old__`` protocol; the one window
+where the path is momentarily absent (between the renames) is healed by
+``layout.recover``, which runs whenever the table is resolved or written.
 """
 
 import os
@@ -70,7 +70,7 @@ def test_kill_in_every_swap_window_is_old_or_new(
     cat._crash_hook = None
     got = _norm(_read(cat))
     # old-or-new, per window: before the swap -> OLD; between the
-    # renames -> OLD (restored by _recover); after -> NEW
+    # renames -> OLD (restored by layout.recover); after -> NEW
     want = _norm(NEW) if window == "swapped" else _norm(OLD)
     assert got == want, window
     # the layout healed: a clean write then reads NEW with no residue

@@ -499,6 +499,50 @@ class TestCmsMaintainStream:
         assert not os.path.exists(sketch_path + ".__old__")
 
 
+def test_cdc_mid_swap_crash_keeps_untouched_keys(spark, tmp_path):
+    """A kill between the CDC target swap's two renames leaves the
+    state only at ``__old__``. The next batch must merge into it, not
+    rebuild the state from that batch alone and lose every key the
+    batch does not touch."""
+    import json as _json
+    import os
+
+    from mysql_syncer_spark.streaming.cdc import cdc_merge_stream, read_state
+
+    schema = T.StructType([
+        T.StructField("user_id", T.LongType()),
+        T.StructField("seq", T.LongType()),
+        T.StructField("op", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+    ])
+    prior = spark.createDataFrame(
+        [(1, 1, "upsert", 1.0), (2, 1, "upsert", 2.0)], schema
+    )
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "b0.json").write_text("\n".join(_json.dumps(r) for r in [
+        {"user_id": 1, "seq": 2, "op": "upsert", "value": 11.0},
+        {"user_id": 3, "seq": 2, "op": "upsert", "value": 3.0},
+    ]))
+
+    def run(target, crashed):
+        prior.write.parquet(target)
+        if crashed:  # the kill: state renamed aside, nothing renamed in
+            os.replace(target, target + ".__old__")
+        cdc_merge_stream(
+            spark.readStream.schema(schema).json(str(src)), target,
+            ["user_id"], ["seq"], target + ".ckpt",
+        ).awaitTermination(120)
+        return {r["user_id"]: r["value"]
+                for r in read_state(spark, target, op_col="op").collect()}
+
+    golden = run(str(tmp_path / "gold"), crashed=False)
+    assert golden == {1: 11.0, 2: 2.0, 3: 3.0}
+    target = str(tmp_path / "state")
+    assert run(target, crashed=True) == golden
+    assert not os.path.exists(target + ".__old__")
+
+
 def test_indexed_gate_checkpoint_recovery(spark, sf_dir, tmp_path):
     """Kill the indexed ingest gate in the replay window (after the
     parquet write + index append, BEFORE the checkpoint commit),
