@@ -336,7 +336,13 @@ def run_skew_torture() -> None:
     Done-bar: lane A and lane B each within ~2x of their uniform
     twin, and lane B's plan shows the split.
     """
-    from mysql_syncer_spark.diff import diff_tables, merge_tables
+    from mysql_syncer_spark.canon import with_row_hash
+    from mysql_syncer_spark.diff import (
+        excess_rows,
+        merge_tables,
+        missing_rows,
+        rows_to_copy,
+    )
 
     spark = (
         configure_session(
@@ -421,7 +427,10 @@ def run_skew_torture() -> None:
         m = base_flood(dup)
         s = perturb(m)
         t0 = time.time()
-        d = diff_tables(m, s, ["id"], mode="hash")
+        mh, sh = with_row_hash(m, ["id"]), with_row_hash(s, ["id"])
+        d = {"insert": rows_to_copy(
+                 m, missing_rows(mh, sh, ["id"], "hash"), ["id"]),
+             "delete": excess_rows(mh, sh, ["id"], "hash")}
         ins = d["insert"].count()
         # execute the delete df's OWN QueryExecution so the captured
         # plan is the final adaptive one (a .count() builds a new QE)

@@ -5,7 +5,7 @@ A from-scratch re-expression of the semantics of iRAP-software/MySQL-Syncer
 
 * catalog diff / schema diff        -> driver-side set ops + StructType compare
 * whole-table digest short-circuit  -> order-independent commutative digests
-* hash-based row diff               -> md5 row hash + left_anti joins
+* hash-based row diff               -> xxhash64 row hash + left_anti joins
 * chunked merge                     -> partitioned writes / JDBC batches
 * partition-wise sync               -> partition pruning + groupBy digests
 * process-pool parallelism          -> FAIR scheduler + pooled threads

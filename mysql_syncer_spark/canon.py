@@ -23,6 +23,13 @@ differently from Spark under a plain CAST):
 
 All of this is built-in Spark column expressions — JVM-side, codegen'd,
 no Python UDFs in the hot path.
+
+This md5 serves the operators and digests checked against the DuckDB
+mirror below (``merge_tables``, ``scd.py``, ``table_digest``,
+``partition_digests``, the registry's hash-map queries). It is not the
+sync's "same row" rule: ``'#'`` joins ``('a#b', 'c')`` and ``('a', 'b#c')``
+alike, a NULL renders as the string ``'NULL'`` and doubles round to
+about 1e-6, so the sync gates and diffs on ``digest.fast_hash_sql``.
 """
 
 from __future__ import annotations

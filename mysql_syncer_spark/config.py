@@ -113,6 +113,10 @@ class SyncConfig:
     #: Requires a master catalog with hash_frame (DBAPI/JDBC/MySQL).
     #: Worth it when the source DB has spare CPU and the WAN is the
     #: bottleneck; the default pulls raw rows and hashes in executors.
+    #: The server's ``MD5(CONCAT_WS('#', COALESCE(col, 'NULL')))`` keeps
+    #: the reference's ambiguity: ``('a#b', 'c')`` hashes as
+    #: ``('a', 'b#c')`` and a NULL as the string ``'NULL'``, so such a
+    #: change is missed in this mode and in no other.
     #:
     #: Crossover guidance (SMALL-DELTA mode): with a DBAPI master, the
     #: missing rows are point-fetched through the driver in

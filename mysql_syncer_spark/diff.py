@@ -9,16 +9,19 @@ hash join otherwise, with AQE skew handling for free. Rows already held
 in the driver (two DBAPI catalogs) are diffed there instead, by
 :func:`diff_rows`.
 
-Two join modes (SURVEY.md §2.3 J7):
+"Same row" is the digest gate's rule (``digest.fast_hash_sql``): the
+sync diff joins on ``(pk..., xxhash64 of every value)``, exact, with NULL
+positions flagged. :func:`diff_rows` applies the same rule with ``==``,
+so gate and diff agree wherever they look; a changed row is missed only
+on a 64-bit collision within its own key. The join compares sets: a row
+held twice under its key matches once, so a duplicate is the gate's to
+see (the executor copies a table whose gate differs and whose delta is
+empty).
 
-* ``mode="hash"`` (reference-faithful): set semantics on the row hash —
-  exactly the reference's ``hash NOT IN (...)`` behavior. Rows that
-  duplicate content under different PKs share a hash only when
-  ``hash_cols`` leaves the PK out.
-* ``mode="pk_hash"`` (strict): a row is "same" only if PK *and* hash
-  match. The default, and the mode the sync executor uses: its hash
-  covers every column, PK included, so the two modes return the same
-  keys there (barring an md5 collision).
+``missing_rows`` / ``excess_rows`` also take canon's md5 hash maps in two
+join modes (SURVEY.md §2.3 J7), as the oracle-checked registry queries
+do: ``mode="hash"`` (reference-faithful set semantics on the hash alone)
+and ``mode="pk_hash"`` (PK *and* hash must match).
 """
 
 from __future__ import annotations
@@ -30,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mysql_syncer_spark.canon import HASH_COL, with_row_hash
+from mysql_syncer_spark.digest import fast_hash_sql
 
 JoinMode = Literal["hash", "pk_hash"]
 
@@ -99,42 +103,37 @@ def rows_to_copy(
 
 
 def diff_tables(
-    master: DataFrame,
-    slave: DataFrame,
-    pk_cols: Sequence[str],
-    hash_cols: Sequence[str] | None = None,
-    mode: JoinMode = "pk_hash",
+    master: DataFrame, slave: DataFrame, pk_cols: Sequence[str]
 ) -> dict[str, DataFrame]:
     """One-call table diff: the full §3.2 hot path as lazy plans.
 
     Returns {"insert": rows (full master rows to append),
              "delete": keys (slave PKs to remove),
              "missing": keys (master PKs the slave lacks; "insert" is
-                        their rows),
-             "master_hashes"/"slave_hashes": the hash projections}.
+                        their rows)}.
 
-    In pk_hash mode a changed row lands in both insert and delete (the
+    Both sides project ``(pk..., hash)`` with the gate's own
+    ``fast_hash_sql`` over the master's column order, and join on PK
+    *and* hash. A changed row lands in both insert and delete (the
     reference's delete-before-insert ordering, Synchronizer.php:496-517,
     is preserved by the executor applying deletes first).
     """
-    mh = with_row_hash(master, pk_cols, hash_cols)
-    sh = with_row_hash(slave, pk_cols, hash_cols)
-    miss = missing_rows(mh, sh, pk_cols, mode)
-    exc = excess_rows(mh, sh, pk_cols, mode)
+    h = f"{fast_hash_sql(master, master.columns)} AS {HASH_COL}"
+    pk = [f"`{c}`" for c in pk_cols]
+    mh, sh = master.selectExpr(*pk, h), slave.selectExpr(*pk, h)
+    miss = missing_rows(mh, sh, pk_cols, "pk_hash")
     return {
         "insert": rows_to_copy(master, miss, pk_cols),
-        "delete": exc,
+        "delete": excess_rows(mh, sh, pk_cols, "pk_hash"),
         "missing": miss,
-        "master_hashes": mh,
-        "slave_hashes": sh,
     }
 
 
 def diff_rows(
     master: Sequence[tuple], slave: Sequence[tuple], key_idx: Sequence[int]
 ) -> tuple[list, list]:
-    """:func:`diff_tables`' pk_hash diff of two driver-held row lists,
-    as the sync executor applies it: ``(inserts, deletes)``.
+    """:func:`diff_tables`' diff of two driver-held row lists, as the
+    sync executor applies it: ``(inserts, deletes)``.
 
     ``deletes`` holds the key (the values at ``key_idx``) of every slave
     row whose full tuple is not a master row, once per such row;
@@ -144,13 +143,10 @@ def diff_rows(
     holding a NULL never matches, as in a Spark join: its slave rows
     are deletes and its master rows are never inserted.
 
-    Rows compare by exact value, where the Spark row hash renders
-    doubles to about 1e-6 (canon.py): two doubles closer than that are
-    rewritten here and not there. So these keys are a superset of the
-    Spark diff's, and equal to them whenever exact and canonical
-    equality agree. Values must be hashable and equal to themselves: the
-    caller checks ``digest.driver_comparable`` first, which leaves a
-    float NaN to the Spark path."""
+    Rows compare by exact value, as the Spark diff's hash does, so the
+    keys equal :func:`diff_tables`' keys. Values must be hashable and
+    equal to themselves: the caller checks ``digest.driver_comparable``
+    first, which leaves a float NaN to the Spark path."""
     get = itemgetter(*key_idx)
     key = get if len(key_idx) > 1 else (lambda r: (get(r),))
     in_master, in_slave = set(master), set(slave)

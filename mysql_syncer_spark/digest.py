@@ -92,10 +92,14 @@ def table_digest_scalable(
 
 
 def fast_hash_sql(df: DataFrame, cols: Sequence[str] | None = None) -> str:
-    """SQL text of the xxhash64 row hash for INTERNAL digest comparison
-    only — no md5, no decimal canonicalization, pure JVM codegen
-    (~several× cheaper per row than the oracle-matchable md5+canon path;
-    measured 3.7× short-circuit vs the ≥10× budget before this existed).
+    """SQL text of the xxhash64 row hash: the sync engine's one "same
+    row" rule, under the digest gate (:func:`digests_equal`), the
+    partition gate (:func:`differing_partitions`) and the Spark row diff
+    (``diff.diff_tables``). Exact values, no md5, no canonicalization,
+    pure JVM codegen (~several× cheaper per row than the oracle-matchable
+    md5+canon path; measured 3.7× short-circuit vs the ≥10× budget
+    before this existed). Same-engine only: it is not reproducible
+    outside Spark.
 
     Returned as an expression STRING (fed to ``selectExpr``) rather than
     a Column tree: building N-column Column objects costs ~2N py4j round
@@ -288,7 +292,6 @@ def differing_partitions(
     master: DataFrame,
     slave: DataFrame,
     partition_col: str,
-    cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """Partition-level plan in one pass: full-outer-join the two digest
     frames and classify each partition value.
@@ -298,26 +301,34 @@ def differing_partitions(
      'excess'   — on slave only   → delete partition from slave,
      'differs'  — both, digest mismatch → row-diff this partition).
     Partitions whose digests match are dropped (the short-circuit).
+    Both sides digest as the gate does (:func:`fast_hash_sql`,
+    :data:`_DIGEST_AGG`), over the master's column order.
 
     Replaces Synchronizer.php:126-175's DISTINCT + fastDiff/fastIntersect
     + per-partition digest loop with two scans and one join total.
     """
-    md = partition_digests(master, partition_col, cols).alias("m")
-    sd = partition_digests(slave, partition_col, cols).alias("s")
-    joined = md.join(sd, on="partition_value", how="full_outer")
+    def digests(df: DataFrame, side: str) -> DataFrame:
+        return (df.selectExpr(f"`{partition_col}` AS v",
+                              fast_hash_sql(df, master.columns) + " AS h")
+                .groupBy("v").agg(*map(F.expr, _DIGEST_AGG)).alias(side))
+
+    # null-safe: a NULL partition value is one partition on both sides
+    joined = digests(master, "m").join(
+        digests(slave, "s"), F.col("m.v").eqNullSafe(F.col("s.v")),
+        "full_outer")
     status = (
         F.when(F.col("s.row_count").isNull(), F.lit("missing"))
         .when(F.col("m.row_count").isNull(), F.lit("excess"))
         .when(
-            (F.col("m.hash_sum") == F.col("s.hash_sum"))
-            & (F.col("m.hash_xor") == F.col("s.hash_xor"))
-            & (F.col("m.row_count") == F.col("s.row_count")),
-            F.lit(None),
+            (F.col("m.hash_sum") != F.col("s.hash_sum"))
+            | (F.col("m.hash_xor") != F.col("s.hash_xor"))
+            | (F.col("m.row_count") != F.col("s.row_count")),
+            F.lit("differs"),
         )
-        .otherwise(F.lit("differs"))
     )
     return (
-        joined.select("partition_value", status.alias("status"))
+        joined.select(F.coalesce("m.v", "s.v").alias("partition_value"),
+                      status.alias("status"))
         .where(F.col("status").isNotNull())
     )
 

@@ -16,6 +16,9 @@ Control flow per table mirrors the reference hot path
 
   schema compare → digest short-circuit → hash maps → anti-joins → apply
 
+Gate and diff share one exact row hash (``digest.fast_hash_sql``); a
+delta still empty after the gate said "different" escalates to a copy.
+
 Between two DBAPI catalogs every row of both sides is already in the
 driver, so a keyed table is gated and diffed there (``diff.diff_rows``)
 and its delta reaches the statement sinks as row lists: no DataFrame is
@@ -147,7 +150,7 @@ class SyncExecutor:
         self.slave.drop_table(unit.table)
         self.slave.invalidate()
 
-    def _full_copy(self, unit: SyncUnit, res: UnitResult) -> None:
+    def _full_copy(self, table: str, res: UnitResult) -> None:
         """The reference's copyTable (drop + create + chunked scan/insert,
         Synchronizer.php:330-354, self-described 'extremely slow!') is one
         ``copy_table`` pass here. A dry run without a statement log never
@@ -155,20 +158,18 @@ class SyncExecutor:
         if self.cfg.dry_run and self._stmt_log is None:
             res.status = "dry_run"
             return
-        m = self.master.table(unit.table)
+        m = self.master.table(table)
         if self._stmt_log is not None:
-            create = self.slave.create_table_sql(
-                unit.table, m.schema, m.pk_cols
-            )
+            create = self.slave.create_table_sql(table, m.schema, m.pk_cols)
             rows = driver_rows(m)
             self._stmt_log.log_full_copy(
-                unit.table, create, m.df if rows is None else rows,
+                table, create, m.df if rows is None else rows,
                 m.schema.fieldNames(),
             )
         if self.cfg.dry_run:
             res.status = "dry_run"
             return
-        self.slave.copy_table(unit.table, m, self.cfg.chunk_size)
+        self.slave.copy_table(table, m, self.cfg.chunk_size)
         self.slave.invalidate()
 
     def _copy_if_changed(self, unit: SyncUnit, res: UnitResult) -> None:
@@ -181,7 +182,7 @@ class SyncExecutor:
         if digests_equal(m, s):
             res.status = "noop"
             return
-        self._full_copy(unit, res)
+        self._full_copy(unit.table, res)
 
     def _diff_sync(self, unit: SyncUnit, res: UnitResult) -> None:
         if self.cfg.hash_pushdown:
@@ -433,8 +434,10 @@ class SyncExecutor:
         # partition pruning cuts the rescan; semantics identical to the
         # reference's per-value loop (Synchronizer.php:151-175) incl. the
         # delete-before-insert partition-move guard (apply_delta).
-        mdf = m.df.where(F.col(pcol).isin(values))
-        sdf = s.df.where(F.col(pcol).isin(values))
+        picked = F.col(pcol).isin([v for v in values if v is not None])
+        if None in values:  # a NULL partition value never equals itself
+            picked |= F.col(pcol).isNull()
+        mdf, sdf = m.df.where(picked), s.df.where(picked)
         self._apply_diff(unit.table, mdf, sdf, m.pk_cols, res,
                          full_slave=s.df)
 
@@ -463,10 +466,15 @@ class SyncExecutor:
     def _write_delta(self, table: str, pk_cols, inserts, deletes, current,
                      res: UnitResult, schema=None) -> None:
         """Log and apply one counted delta (``res`` holds its counts),
-        unless it is empty or the run is dry. With ``schema`` the delta
-        is insert rows and delete keys, not frames."""
+        unless the run is dry. With ``schema`` the delta is insert rows
+        and delete keys, not frames. Every caller runs after a gate said
+        "different", so an empty delta (rows duplicated under one key,
+        or a master row whose key holds a NULL) escalates to a full copy
+        of the table, as the reference's does (Synchronizer.php:196-230),
+        and ``res.action`` reads ``full_copy``."""
         if res.inserted == 0 and res.deleted == 0:
-            res.status = "noop"
+            res.action = Action.FULL_COPY.value
+            self._full_copy(table, res)
             return
         counts = (res.inserted, res.deleted)
         self._log_delta(table, pk_cols, inserts, deletes, counts, schema)
@@ -497,7 +505,7 @@ class SyncExecutor:
             if unit.action == Action.DROP:
                 self._drop(unit, res)
             elif unit.action == Action.FULL_COPY:
-                self._full_copy(unit, res)
+                self._full_copy(unit.table, res)
             elif unit.action == Action.COPY_IF_CHANGED:
                 self._copy_if_changed(unit, res)
             elif unit.action in (Action.DIFF_SYNC, Action.DIFF_SYNC_PARTITIONED):

@@ -20,19 +20,6 @@ from pyspark.sql import Window
 
 from mysql_syncer_spark.pin import pin
 
-from mysql_syncer_spark.canon import (
-    HASH_COL,
-    duckdb_row_hash_expr,
-    row_hash_col,
-    with_row_hash,
-)
-from mysql_syncer_spark.diff import (
-    changed_rows,
-    excess_rows,
-    merge_tables,
-    missing_rows,
-    rows_to_copy,
-)
 from mysql_syncer_spark.operators import (
     dedup,
     packing,

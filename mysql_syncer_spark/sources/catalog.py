@@ -256,11 +256,7 @@ class FileCatalog(Catalog):
 
     def table_names(self) -> list[str]:
         if self._names is None:
-            self._names = sorted(
-                f[: -len(self.ext)]
-                for f in os.listdir(self.path)
-                if f.endswith(self.ext)
-            )
+            self._names = layout.table_names(self.path, self.ext)
         return list(self._names)
 
     def invalidate(self) -> None:
@@ -386,7 +382,7 @@ class FileCatalog(Catalog):
         (stage to ``.__staging__``, two renames, drop ``__old__``), so
         every kill point leaves the old table or the new one readable.
         A kill between the renames is healed when the table is next
-        resolved or written (:func:`layout.recover`)."""
+        listed, resolved or written (:func:`layout.recover`)."""
         writer = (df.write.format(self.fmt).options(**self.write_options)
                   .mode("overwrite"))
         layout.swap_write(self.spark, self.table_path(name), writer.save,

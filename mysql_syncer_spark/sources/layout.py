@@ -102,6 +102,20 @@ def _recover(fs, path: str) -> bool:
     return False
 
 
+def table_names(path: str, ext: str) -> list[str]:
+    """Sorted ``<name>`` of every ``<name><ext>`` entry in the local
+    directory ``path``, recovering first each one that a kill between
+    :func:`swap_write`'s renames left only at ``<name><ext>.__old__``."""
+    names = set()
+    for f in os.listdir(path):
+        if f.endswith(ext + _OLD):
+            f = f[: -len(_OLD)]
+            _recover(_OsFS, os.path.join(path, f))
+        if f.endswith(ext):
+            names.add(f[: -len(ext)])
+    return sorted(names)
+
+
 def swap_write(
     spark: SparkSession,
     path: str,

@@ -8,8 +8,12 @@ in the planner (reference: COPY_TABLES_WITH_NO_PRIMARY,
 Synchronizer.php:213-222).
 """
 
+import ast
+import os
+
 from pyspark.sql import functions as F
 
+import mysql_syncer_spark
 from mysql_syncer_spark.canon import with_row_hash
 from mysql_syncer_spark.diff import (
     apply_delta,
@@ -108,14 +112,14 @@ def test_duplicate_content_set_semantics(spark):
 
 def test_apply_delta_converges(spark, orders):
     slave = _perturbed(orders)
-    d = diff_tables(orders, slave, PK, mode="pk_hash")
+    d = diff_tables(orders, slave, PK)
     merged = apply_delta(slave, d["insert"], d["delete"], PK)
     assert merged.count() == orders.count()
     # full equality via subtract both ways
     assert merged.subtract(orders).count() == 0
     assert orders.subtract(merged).count() == 0
     # idempotence: rediff finds nothing
-    d2 = diff_tables(orders, merged, PK, mode="pk_hash")
+    d2 = diff_tables(orders, merged, PK)
     assert d2["insert"].count() == 0
     assert d2["delete"].count() == 0
 
@@ -152,3 +156,76 @@ def test_merge_tables_single_pass(spark, orders):
     assert orders.subtract(merged).count() == 0
     plan = merged._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") <= 6
+
+
+def test_diff_tables_tells_apart_what_md5_conflates(spark):
+    """The sync diff uses the gate's exact row hash: a '#' moved across
+    a column boundary, a NULL against the string 'NULL' and a double
+    nudged by 2^-30 are all changes (canon's md5 hashes each pair
+    alike)."""
+    m = spark.createDataFrame(
+        [(1, "a#b", "c", 1.0), (2, None, "x", 2.0), (3, "y", "z", 0.5)],
+        "id long, a string, b string, c double")
+    s = spark.createDataFrame(
+        [(1, "a", "b#c", 1.0), (2, "NULL", "x", 2.0),
+         (3, "y", "z", 0.5 + 2.0**-30)],
+        "id long, a string, b string, c double")
+    d = diff_tables(m, s, ["id"])
+    assert sorted(r.id for r in d["delete"].collect()) == [1, 2, 3]
+    assert sorted(r.id for r in d["insert"].collect()) == [1, 2, 3]
+    assert not digests_equal(m, s)
+    pcol = m.withColumn("p", F.lit("p"))
+    assert [tuple(r) for r in differing_partitions(
+        pcol, s.withColumn("p", F.lit("p")), "p").collect()] == [
+        ("p", "differs")]
+
+
+_PACKAGE = os.path.dirname(mysql_syncer_spark.__file__)
+_MD5_ROW_RULE = {"with_row_hash", "row_hash_col", "partition_digests"}
+
+
+def _names(node) -> set:
+    """Every identifier ``node`` references: names, attributes and
+    imported names."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+    return out
+
+
+def test_sync_path_has_one_row_rule():
+    """The executor, ``diff.diff_tables`` and
+    ``digest.differing_partitions`` never reach canon's md5 row hash, so
+    no second "same row" rule can come back onto the sync path."""
+    def tree(module):
+        with open(os.path.join(_PACKAGE, module)) as fh:
+            return ast.parse(fh.read())
+
+    def function(module, name):
+        (fn,) = [n for n in tree(module).body
+                 if isinstance(n, ast.FunctionDef) and n.name == name]
+        return fn
+
+    for where, node in (
+            ("executor.py", tree("executor.py")),
+            ("diff.diff_tables", function("diff.py", "diff_tables")),
+            ("digest.differing_partitions",
+             function("digest.py", "differing_partitions"))):
+        assert not _names(node) & _MD5_ROW_RULE, where
+
+
+def test_null_partition_is_one_partition(spark):
+    """A NULL partition value is one partition on both sides: equal, it
+    is dropped like any other; changed, it differs."""
+    schema = "id long, p string, v string"
+    m = spark.createDataFrame([(1, None, "a"), (2, "x", "b")], schema)
+    for slave, want in (([(1, None, "a"), (2, "x", "c")], [("x", "differs")]),
+                        ([(1, None, "z"), (2, "x", "b")], [(None, "differs")])):
+        s = spark.createDataFrame(slave, schema)
+        assert [tuple(r) for r in differing_partitions(m, s, "p").collect()
+                ] == want

@@ -429,8 +429,8 @@ def _except_both_ways(mpath, spath):
                [(1, None, None, None, None, None, None)], False))
 def test_driver_diff_keys_match_the_spark_diff(spark, pair):
     """The driver diff's delete and insert keys equal ``diff_tables``'
-    wherever exact and canonical double equality agree, and contain
-    them otherwise; the sync converges exactly and re-syncs as noop."""
+    (both compare exact values, a nudged double included); the sync
+    converges exactly and re-syncs as noop."""
     master_rows, slave_rows, near = pair
     with tempfile.TemporaryDirectory() as d:
         mpath = _create(os.path.join(d, "m.db"), KEYED_TYPED_DDL, master_rows)
@@ -448,15 +448,10 @@ def test_driver_diff_keys_match_the_spark_diff(spark, pair):
             spark_inserts = {r.k for r in rows_to_copy(
                 m.df, d_["missing"].unionByName(d_["delete"]), ["k"]
             ).collect()}
-            want = (spark_inserts, spark_deletes)
-            if near:
-                assert got[0] >= want[0] and got[1] >= want[1], (got, want)
-            else:
-                assert got == want
+            assert got == (spark_inserts, spark_deletes)
         assert sync(master, slave).ok
-        if driver or not near:
-            assert _except_both_ways(mpath, spath) == [[], []]
-            assert all(r.status == "noop" for r in sync(master, slave).results)
+        assert _except_both_ways(mpath, spath) == [[], []]
+        assert all(r.status == "noop" for r in sync(master, slave).results)
 
 
 def test_converging_dbapi_sync_runs_no_spark_job(spark, dbapi_pair,
@@ -534,6 +529,30 @@ def test_duplicate_slave_pk_converges_in_one_driver_sync(
     with sqlite3.connect(spath) as conn:
         assert conn.execute("SELECT * FROM t ORDER BY id").fetchall() == (
             master_rows)
+    assert [r.status for r in sync(master, slave).results] == ["noop"]
+
+
+@pytest.mark.parametrize("master_rows, slave_rows", [
+    # a slave without a PK constraint holds a row twice
+    ([("1", "a"), ("2", "b")], [("1", "a"), ("1", "a"), ("2", "b")]),
+    # a master row whose key is NULL, which the diff never inserts
+    ([(None, "a"), ("2", "b")], [("2", "b")]),
+])
+def test_empty_driver_delta_after_a_gate_mismatch_copies(
+        spark, tmp_path, master_rows, slave_rows):
+    """The driver gate sees the tables differ, the driver diff finds no
+    delta: the unit is copied whole, and then re-syncs as noop."""
+    ddl = "CREATE TABLE t (id TEXT, v TEXT)"
+    mpath = _create(str(tmp_path / "m.db"), ddl, master_rows)
+    spath = _create(str(tmp_path / "s.db"), ddl, slave_rows)
+    pk = {"t": ("id",)}
+    master = DBAPICatalog(spark, _factory(mpath), pk_map=pk)
+    slave = DBAPICatalog(spark, _factory(spath), pk_map=pk)
+    assert [(r.action, r.status) for r in sync(master, slave).results] == [
+        ("full_copy", "ok")]
+    with sqlite3.connect(spath) as conn:
+        assert sorted(conn.execute("SELECT * FROM t").fetchall(),
+                      key=repr) == sorted(master_rows, key=repr)
     assert [r.status for r in sync(master, slave).results] == ["noop"]
 
 

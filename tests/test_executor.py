@@ -125,6 +125,29 @@ def test_duplicate_slave_pk_converges_in_one_sync(spark, pair):
     assert [x.status for x in rep2.results] == ["noop"]
 
 
+@pytest.mark.parametrize("master_rows, slave_rows", [
+    # a slave row held twice under its key, nothing else changed
+    ([(1, "a"), (2, "b")], [(1, "a"), (1, "a"), (2, "b")]),
+    # a master row whose key is NULL, which no join matches
+    ([(None, "a"), (2, "b")], [(2, "b")]),
+])
+def test_empty_delta_after_a_gate_mismatch_copies(spark, pair, master_rows,
+                                                  slave_rows):
+    """The gate sees the tables differ, the diff finds no delta: the
+    unit escalates to a full copy, says so, and then re-syncs as noop."""
+    mdir, sdir, write = pair
+    schema = "id long, v string"
+    write("t", spark.createDataFrame(master_rows, schema),
+          spark.createDataFrame(slave_rows, schema))
+    master = ParquetCatalog(spark, mdir, pk_map={"t": ("id",)})
+    slave = ParquetCatalog(spark, sdir, pk_map={"t": ("id",)})
+    r = sync(master, slave).results[0]
+    assert (r.action, r.status) == ("full_copy", "ok")
+    got = spark.read.parquet(f"{sdir}/t.parquet").collect()
+    assert sorted(map(tuple, got), key=repr) == sorted(master_rows, key=repr)
+    assert [x.status for x in sync(master, slave).results] == ["noop"]
+
+
 def test_partitioned_sync_with_partition_moves(spark, sf_dir, pair):
     """Partition-wise diff incl. rows MOVING between partition values —
     the delete-before-insert guard (Synchronizer.php:496-517)."""

@@ -3,15 +3,24 @@ random tables + random perturbations ⇒ sync converges and re-diff is
 empty. Examples are kept small and few — each example spins real Spark
 jobs."""
 
+import os
+import tempfile
+from collections import Counter
+
 import hypothesis.strategies as st
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mysql_syncer_spark.canon import with_row_hash
+from mysql_syncer_spark.config import SyncConfig
 from mysql_syncer_spark.diff import diff_tables, merge_tables
 from mysql_syncer_spark.digest import digests_equal
+from mysql_syncer_spark.executor import sync
+from mysql_syncer_spark.sources.catalog import ParquetCatalog
 
 SCHEMA = T.StructType(
     [
@@ -65,7 +74,7 @@ def test_merge_converges_on_random_tables(spark, rows, perturb):
     assert master.exceptAll(merged).count() == 0
     # idempotence: digests agree and a re-diff plans nothing
     assert digests_equal(master, merged)
-    d = diff_tables(master, merged, ["id"], mode="pk_hash")
+    d = diff_tables(master, merged, ["id"])
     assert d["insert"].count() == 0 and d["delete"].count() == 0
 
 
@@ -118,6 +127,104 @@ def test_null_layouts_never_collide(spark, layout):
         for j, tj in enumerate(layout):
             if i < j:
                 assert (by_id[i] == by_id[j]) == (ti == tj), (ti, tj)
+
+
+# ---------------------------------------------------------------------------
+# the Spark sync path: one sync converges on the values canon's md5
+# conflates, and the re-sync is all noop
+# ---------------------------------------------------------------------------
+
+_PARQUET_SCHEMA = pa.schema([("id", pa.int64()), ("a", pa.string()),
+                             ("b", pa.string()), ("c", pa.float64()),
+                             ("p", pa.string())])
+_TEXT = st.one_of(st.none(), st.sampled_from(["NULL", "#", "a#", "#b"]),
+                  st.text("ab#", max_size=3))
+_DOUBLE = st.one_of(st.none(), st.sampled_from([0.0, -0.0, 1.0, 0.5]),
+                    st.floats(-4, 4, allow_nan=False))
+_NUDGE = 2.0**-30
+
+
+@st.composite
+def _parquet_pair(draw):
+    """(master, slave) rows ``(id, a, b, c)``: the slave moves a '#'
+    across the a/b boundary, swaps a NULL for the string 'NULL', nudges
+    a double by 2^-30, flips the sign of a zero, drops or edits rows,
+    and holds keys of its own."""
+    keys = draw(st.lists(st.integers(0, 12), unique=True, max_size=6))
+    master = [(k, draw(_TEXT), draw(_TEXT), draw(_DOUBLE)) for k in keys]
+    slave = []
+    for k, a, b, c in master:
+        op = draw(st.sampled_from(["keep", "drop", "edit", "shift", "null",
+                                   "nudge", "sign"]))
+        if op == "drop":
+            continue
+        if op == "edit":
+            a, b, c = draw(_TEXT), draw(_TEXT), draw(_DOUBLE)
+        elif op == "shift" and a is not None and b is not None:
+            joined = f"{a}#{b}"
+            cut = draw(st.sampled_from(
+                [i for i, ch in enumerate(joined) if ch == "#"]))
+            a, b = joined[:cut], joined[cut + 1:]
+        elif op == "null":
+            a = "NULL" if a is None else None if a == "NULL" else a
+        elif op == "nudge" and c is not None:
+            c += _NUDGE
+        elif op == "sign" and c == 0:
+            c = -c
+        slave.append((k, a, b, c))
+    extra = draw(st.lists(st.integers(13, 20), unique=True, max_size=2))
+    slave += [(k, draw(_TEXT), draw(_TEXT), draw(_DOUBLE)) for k in extra]
+    return master, slave
+
+
+def _partition(k):
+    return None if k % 3 == 0 else f"p{k % 2}"
+
+
+def _write(path, rows):
+    cols = list(zip(*rows)) if rows else [()] * 4
+    pq.write_table(pa.table([*map(list, cols),
+                             [_partition(r[0]) for r in rows]],
+                            schema=_PARQUET_SCHEMA), path)
+
+
+def _rows(path):
+    return Counter(tuple(r.values())
+                   for r in pq.read_table(path).to_pylist())
+
+
+@settings(max_examples=6, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture,
+                                 HealthCheck.too_slow])
+@given(pair=_parquet_pair())
+@example(pair=([(1, "a#b", "c", None), (2, None, "x", None)],
+               [(1, "a", "b#c", None), (2, "NULL", "x", None)]))
+@example(pair=([(1, "a", "c", None), (2, "b", "x", None)],
+               [(1, "a", "c", None), (1, "a", "c", None),
+                (2, "b", "x", None)]))
+@example(pair=([(1, "a", "b", 0.5), (2, "a", "b", 0.0)],
+               [(1, "a", "b", 0.5 + _NUDGE), (2, "a", "b", -0.0)]))
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_parquet_sync_converges_exactly(spark, partitioned, pair):
+    """One sync leaves the slave equal to the master row for row (read
+    back with pyarrow, compared as multisets; -0.0 equals 0.0 there as
+    in the engine), and a second sync is all noop."""
+    master_rows, slave_rows = pair
+    cfg = SyncConfig(partitioned_tables={"t": "p"} if partitioned else {})
+    with tempfile.TemporaryDirectory() as d:
+        for side, rows in (("master", master_rows), ("slave", slave_rows)):
+            os.mkdir(os.path.join(d, side))
+            _write(os.path.join(d, side, "t.parquet"), rows)
+        master, slave = (ParquetCatalog(spark, os.path.join(d, side),
+                                        pk_map={"t": ("id",)})
+                         for side in ("master", "slave"))
+        unit = "diff_sync_partitioned" if partitioned else "diff_sync"
+        first = sync(master, slave, cfg)
+        assert first.ok and first.results[0].action in (unit, "full_copy")
+        assert _rows(os.path.join(d, "slave", "t.parquet")) == _rows(
+            os.path.join(d, "master", "t.parquet"))
+        assert [r.status for r in sync(master, slave, cfg).results] == [
+            "noop"]
 
 
 # ---------------------------------------------------------------------------

@@ -162,3 +162,50 @@ def test_one_swap_implementation():
                     found.append(f"{os.path.relpath(path, _PACKAGE)}:"
                                  f"{node.lineno}")
     assert not found, found
+
+
+def _database(root, tables):
+    """A directory of pyarrow-written ``<name>`` entries (file names as
+    given, so ``t.parquet.__old__`` is a table a kill left aside)."""
+    os.makedirs(root, exist_ok=True)
+    for name, rows in tables.items():
+        pq.write_table(pa.table({"k": [k for k, _ in rows],
+                                 "v": [v for _, v in rows]}),
+                       os.path.join(root, name))
+    return str(root)
+
+
+def _killed_slave(tmp_path):
+    return _database(tmp_path / "slave", {"t.parquet.__old__": OLD,
+                                          "u.parquet": OLD})
+
+
+def test_listing_recovers_a_table_left_at_old(spark, tmp_path):
+    from mysql_syncer_spark.sources.catalog import ParquetCatalog
+
+    slave = _killed_slave(tmp_path)
+    assert ParquetCatalog(spark, slave).table_names() == ["t", "u"]
+    assert sorted(os.listdir(slave)) == ["t.parquet", "u.parquet"]
+
+
+@pytest.mark.parametrize("master_tables", [["t", "u"], ["u"]])
+def test_sync_sees_a_table_left_at_old(spark, tmp_path, master_tables):
+    """A table a kill left only at ``.__old__`` is diffed, not copied,
+    and dropped when the master has dropped it."""
+    from mysql_syncer_spark.executor import sync
+    from mysql_syncer_spark.sources.catalog import ParquetCatalog
+
+    pk = {"t": ("k",), "u": ("k",)}
+    master = ParquetCatalog(spark, _database(
+        tmp_path / "master", {f"{n}.parquet": NEW for n in master_tables}),
+        pk_map=pk)
+    slave = ParquetCatalog(spark, _killed_slave(tmp_path), pk_map=pk)
+    report = sync(master, slave)
+    assert report.ok
+    got = {r.table: (r.action, r.status) for r in report.results}
+    assert got["t"] == (("diff_sync", "ok") if "t" in master_tables
+                        else ("drop", "ok"))
+    assert slave.table_names() == master_tables
+    for n in master_tables:
+        assert _rows(spark, os.path.join(slave.path, f"{n}.parquet")) == NEW
+    assert not _residue(os.path.join(slave.path, "t.parquet"))
